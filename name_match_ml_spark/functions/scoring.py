@@ -11,12 +11,16 @@ Spark decomposition (see ``operators/matching.py`` for assembly):
   initial bonus (``:68-74``), the weighted sum and the ``min(·,100)`` cap
   (``:76-90``) are **native column expressions** — whole-stage codegen,
   no Python.
-* Phonetic codes (soundex/metaphone) are computed **per side before the
-  join** via :func:`phonetic_codes_udf` — O(U+E) Python work instead of
-  O(U×E); equality happens natively post-join.
-* Only the five per-pair ratio components require per-pair Python work:
-  :func:`pair_ratios_udf`, one Arrow-vectorised pandas UDF returning a
-  struct.
+* Everything that needs Python runs in **one** per-pair pass,
+  :func:`pair_ratios_udf` — an Arrow-vectorised pandas UDF returning a
+  struct of the five ratio components plus the phonetic term (Soundex/
+  Metaphone equality on first/last name, ``main.py:63-66,82-85``).  The
+  codes come from a bounded per-text memo in the worker, so each distinct
+  text is still coded once, and the flagship plan keeps a single Python
+  stage.
+* :func:`phonetic_codes_udf` computes the codes per row for callers that
+  want them as columns (``prepare_usernames``/``prepare_employees`` with
+  ``codes=True``); the flagship pipeline does not use it.
 
 The pure-Python :func:`compute_match_score` mirrors the reference
 row-function exactly (including the dead ``number_match_bonus`` at
@@ -34,7 +38,6 @@ from functools import lru_cache
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
-    DoubleType,
     IntegerType,
     StringType,
     StructField,
@@ -165,13 +168,37 @@ PAIR_RATIOS_SCHEMA = StructType(
         StructField("token_set_full", IntegerType()),
         StructField("token_set_first", IntegerType()),
         StructField("token_set_last", IntegerType()),
+        StructField("phonetic", IntegerType()),
     ]
 )
 
 
+@lru_cache(maxsize=1 << 16)
+def _phonetic_codes(s: str) -> tuple[str, str]:
+    """Memoized (Soundex, Metaphone) of one normalized text.  A worker
+    sees each username and each roster name in many candidate pairs;
+    the bounded memo codes every distinct text once."""
+    return soundex(s), metaphone(s)
+
+
+def _phonetic_term(u: str, f: str, l: str) -> int:
+    """Phonetic points of ``main.py:63-66,82-85``: Soundex/Metaphone
+    equality of the username with the last name (6/7) and with the first
+    name (3/3)."""
+    u_sdx, u_mp = _phonetic_codes(u)
+    f_sdx, f_mp = _phonetic_codes(f)
+    l_sdx, l_mp = _phonetic_codes(l)
+    return (
+        6 * (u_sdx == l_sdx)
+        + 7 * (u_mp == l_mp)
+        + 3 * (u_sdx == f_sdx)
+        + 3 * (u_mp == f_mp)
+    )
+
+
 @lru_cache(maxsize=1 << 20)
-def _pair_components(u: str, e: str, f: str, l: str) -> tuple[int, int, int, int, int]:
-    """Memoized per-pair ratio bundle — real rosters repeat names (many
+def _pair_components(u: str, e: str, f: str, l: str) -> tuple[int, int, int, int, int, int]:
+    """Memoized per-pair Python bundle — real rosters repeat names (many
     employees share a first or last name), and blocked candidate
     generation re-presents the same (username, name) text pair across
     blocks, so the hit rate in the hot path is substantial."""
@@ -181,6 +208,7 @@ def _pair_components(u: str, e: str, f: str, l: str) -> tuple[int, int, int, int
         token_set_ratio(u, e),
         token_set_ratio(u, f),
         token_set_ratio(u, l),
+        _phonetic_term(u, f, l),
     )
 
 
@@ -191,9 +219,10 @@ def pair_ratios_udf(
     first_name: pd.Series,
     last_name: pd.Series,
 ) -> pd.DataFrame:
-    """Per-pair ratio components (``main.py:56-61``), one Arrow batch at a
-    time.  Inputs are pre-lowercased/trimmed columns; this is the only
-    per-pair Python stage in the flagship plan."""
+    """Per-pair ratio components (``main.py:56-61``) and phonetic term
+    (``main.py:63-66``), one Arrow batch at a time.  Inputs are
+    pre-lowercased/trimmed columns; this is the only Python stage in the
+    flagship plan."""
     rows = [
         _pair_components(u, e, f, l)
         for u, e, f, l in zip(
@@ -203,10 +232,7 @@ def pair_ratios_udf(
             last_name.fillna(""),
         )
     ]
-    return pd.DataFrame(
-        rows,
-        columns=["lev_full", "partial_full", "token_set_full", "token_set_first", "token_set_last"],
-    )
+    return pd.DataFrame(rows, columns=PAIR_RATIOS_SCHEMA.fieldNames())
 
 
 PHONETIC_SCHEMA = StructType(
@@ -219,37 +245,9 @@ PHONETIC_SCHEMA = StructType(
 
 @pandas_udf(PHONETIC_SCHEMA)
 def phonetic_codes_udf(s: pd.Series) -> pd.DataFrame:
-    """Soundex + Metaphone codes for one column — applied per *side* before
-    the similarity join (O(U+E), not O(U×E)); post-join the phonetic
-    equalities of ``main.py:63-66`` become native string comparisons."""
-    vals = s.fillna("")
+    """Soundex + Metaphone codes of one column, one row at a time — for
+    callers that want the codes as columns; scoring computes them inside
+    :func:`pair_ratios_udf`."""
     return pd.DataFrame(
-        {
-            "sdx": [soundex(v) for v in vals],
-            "mp": [metaphone(v) for v in vals],
-        }
-    )
-
-
-@pandas_udf(DoubleType())
-def match_score_udf(
-    username: pd.Series,
-    employee_name: pd.Series,
-    first_name: pd.Series,
-    last_name: pd.Series,
-    emp_id: pd.Series,
-) -> pd.Series:
-    """Monolithic scorer UDF — kept only for differential testing of the
-    decomposed native plan; the production pipeline does NOT use it."""
-    return pd.Series(
-        [
-            compute_match_score(u, e, f, l, i)
-            for u, e, f, l, i in zip(
-                username.fillna(""),
-                employee_name.fillna(""),
-                first_name.fillna(""),
-                last_name.fillna(""),
-                emp_id.fillna(""),
-            )
-        ]
+        [_phonetic_codes(v) for v in s.fillna("")], columns=["sdx", "mp"]
     )

@@ -9,16 +9,18 @@ and emit a ``USER NOT FOUND`` sentinel when nothing clears the threshold
 
 Spark-first plan (vs the reference's O(U×E) row-at-a-time Python loop):
 
-1. **Per-side preparation** — normalization, username splitting, and
-   phonetic codes are computed *before* the join: O(U+E) Python (one Arrow
-   batch pass per side) instead of O(U×E).
+1. **Per-side preparation** — normalization and username splitting are
+   native expressions computed *before* the join, and each side is reduced
+   to its distinct texts.
 2. **Candidate generation** — ``crossJoin(broadcast(employees))`` (a
    BroadcastNestedLoopJoin: every executor streams its username partition
    against the broadcast roster — no shuffle) or, for rosters too large to
    broadcast, a *blocked* union of equi-joins (``plans/blocking.py``).
-3. **Scoring** — pattern short-circuit, split/initial bonuses, phonetic
-   equalities, the weighted composite and the 100-cap are native Catalyst
-   expressions; only the five per-pair ratios run in one Arrow pandas UDF.
+3. **Scoring** — pattern short-circuit, split/initial bonuses, the
+   weighted composite and the 100-cap are native Catalyst expressions; the
+   five per-pair ratios and the phonetic term (Soundex/Metaphone codes
+   memoized per text in the worker) run in one Arrow pandas UDF, the
+   plan's only Python stage.
 4. **Top-k** — one window (`row_number <= k`) per username partition; in
    Spark ≥3.5 the rank filter is pushed into the shuffle via
    WindowGroupLimit, so each partition keeps ≤ k rows per key.
@@ -55,32 +57,6 @@ __all__ = [
 ]
 
 _SPLIT_PATTERN = r"[\._\-\s]"  # main.py:32
-
-# Re-spread blocked candidates before the Arrow scoring stage (see
-# match_usernames); module-level so benchmarks can A/B it.
-_REPARTITION_PAIRS = True
-
-# Checkpoint the per-row prepared sides (u/e).  Kept ON: same-session
-# A/B (optimization round 11, 4 reps alternating) measured unstaging
-# them a clear LOSS (flagship min 8.6 s vs 6.5 s) — each side feeds two
-# consumers (the distinct-text derivation and the final fan-out /
-# employee re-attach joins), and without the cut the scan + normalize +
-# dropDuplicates lineage re-executes per consumer.  Module-level so
-# benchmarks can A/B it.
-_STAGE_SIDES = True
-
-# Checkpoint the DISTINCT-text frames (u_texts/e_texts) in addition to
-# the per-row prepared sides; module-level so benchmarks can A/B it.
-# The distinct frames are consumed 2-3× (blocking key aggregates + the
-# candidate join + the dummy branch), but they are vocabulary-sized
-# (hundreds to low thousands of rows), so re-deriving them per consumer
-# is cheap while each stage() adds a repartition exchange plus a
-# scheduled checkpoint materialization — a net LOSS at bench scale
-# (VERDICT r10 #1: flagship slid 5.8 → 6.8-7.6 s when these two landed;
-# round-11 same-session A/B: OFF 6.49 s vs ON 6.77 s min-of-4, rows
-# identical).  At corpus scale the frames stay vocabulary-bounded while
-# the checkpoint costs scale with cluster round-trips, so OFF holds.
-_STAGE_DISTINCT_TEXTS = False
 
 # blocking=None auto-select: exact cross-scoring is allowed only when the
 # estimated (usernames × roster) pair count stays under this budget AND the
@@ -160,10 +136,25 @@ def _norm(c: Column) -> Column:
     return F.trim(F.lower(F.coalesce(c.cast("string"), F.lit(""))))
 
 
-def _attach_employee_codes(df: DataFrame) -> DataFrame:
-    """Attach ``f_sdx/f_mp/l_sdx/l_mp`` (soundex/metaphone of
-    ``e_first``/``e_last``, ``main.py:63-66``) to any frame carrying the
-    normalized name columns."""
+def prepare_employees(employees: DataFrame, *, codes: bool = True) -> DataFrame:
+    """Normalize the roster for scoring.
+
+    Adds: ``e_name/e_first/e_last`` (lowercased+trimmed scorer inputs,
+    ``main.py:27-29``), and with ``codes=True`` also ``f_sdx/f_mp/l_sdx/
+    l_mp`` (soundex/metaphone of first/last, ``main.py:63-66``) from a
+    Python UDF.  The codes are informational: :func:`score_candidates`
+    computes the phonetic term inside its own pair UDF, so
+    ``match_usernames`` prepares with ``codes=False`` and runs no
+    per-side Python stage.
+    """
+    df = employees.select(
+        "*",
+        _norm(F.col("employee_name")).alias("e_name"),
+        _norm(F.col("first_name")).alias("e_first"),
+        _norm(F.col("last_name")).alias("e_last"),
+    )
+    if not codes:
+        return df
     f_codes = phonetic_codes_udf(F.col("e_first"))
     l_codes = phonetic_codes_udf(F.col("e_last"))
     return df.select(
@@ -173,39 +164,6 @@ def _attach_employee_codes(df: DataFrame) -> DataFrame:
         l_codes.getField("sdx").alias("l_sdx"),
         l_codes.getField("mp").alias("l_mp"),
     )
-
-
-def _attach_username_codes(df: DataFrame) -> DataFrame:
-    """Attach ``u_sdx/u_mp`` (``main.py:63-66``) to any frame carrying
-    ``u_norm``."""
-    codes = phonetic_codes_udf(F.col("u_norm"))
-    return df.select(
-        "*",
-        codes.getField("sdx").alias("u_sdx"),
-        codes.getField("mp").alias("u_mp"),
-    )
-
-
-def prepare_employees(employees: DataFrame, *, codes: bool = True) -> DataFrame:
-    """Normalize the roster for scoring and attach per-side phonetic codes.
-
-    Adds: ``e_name/e_first/e_last`` (lowercased+trimmed scorer inputs,
-    ``main.py:27-29``), and with ``codes=True`` also ``f_sdx/f_mp/l_sdx/
-    l_mp`` (soundex/metaphone of first/last, ``main.py:63-66``).
-    ``codes=False`` skips the Python phonetic UDF so a caller that
-    dedups to distinct texts first (``match_usernames``) can attach the
-    codes per DISTINCT text instead of per row — the codes are pure
-    functions of the normalized names, so the values are identical
-    (optimization round 10, guide §4: the roster repeats names heavily —
-    37× fewer UDF rows on the sf0.1 corpus).
-    """
-    df = employees.select(
-        "*",
-        _norm(F.col("employee_name")).alias("e_name"),
-        _norm(F.col("first_name")).alias("e_first"),
-        _norm(F.col("last_name")).alias("e_last"),
-    )
-    return _attach_employee_codes(df) if codes else df
 
 
 def prepare_usernames(usernames: DataFrame, *, codes: bool = True) -> DataFrame:
@@ -223,7 +181,14 @@ def prepare_usernames(usernames: DataFrame, *, codes: bool = True) -> DataFrame:
         F.coalesce(F.get(parts, 0), F.lit("")).alias("u_part1"),
         F.coalesce(F.get(parts, 1), F.lit("")).alias("u_part2"),
     )
-    return _attach_username_codes(df) if codes else df
+    if not codes:
+        return df
+    u_codes = phonetic_codes_udf(F.col("u_norm"))
+    return df.select(
+        "*",
+        u_codes.getField("sdx").alias("u_sdx"),
+        u_codes.getField("mp").alias("u_mp"),
+    )
 
 
 def _pattern_hit() -> Column:
@@ -256,8 +221,9 @@ def _initial_bonus() -> Column:
 def score_candidates(pairs: DataFrame) -> DataFrame:
     """Attach the composite ``score`` column to prepared (username ×
     employee) candidate pairs — ``compute_match_score`` (``main.py:25-90``)
-    re-expressed as one Arrow UDF (ratios) + native expressions
-    (everything else)."""
+    re-expressed as one Arrow UDF (ratios and phonetic term) + native
+    expressions (everything else).  Needs only the ``u_norm/u_part1/
+    u_part2`` and ``e_name/e_first/e_last`` columns."""
     ratios = pair_ratios_udf(
         F.col("u_norm"), F.col("e_name"), F.col("e_first"), F.col("e_last")
     )
@@ -273,20 +239,13 @@ def score_candidates(pairs: DataFrame) -> DataFrame:
     # score parity; documented in SURVEY.md §2.6 F9.
     number_match_bonus = F.lit(0)
 
-    phonetic = (
-        F.when(F.col("u_sdx") == F.col("l_sdx"), 6).otherwise(0)
-        + F.when(F.col("u_mp") == F.col("l_mp"), 7).otherwise(0)
-        + F.when(F.col("u_sdx") == F.col("f_sdx"), 3).otherwise(0)
-        + F.when(F.col("u_mp") == F.col("f_mp"), 3).otherwise(0)
-    )  # main.py:63-66,82-85
-
     composite = (
         F.col("_r.lev_full") * 0.2
         + F.col("_r.partial_full") * 0.2
         + F.col("_r.token_set_full") * 0.2
         + F.col("_r.token_set_last") * 0.3
         + F.col("_r.token_set_first") * 0.2
-        + phonetic
+        + F.col("_r.phonetic")  # main.py:63-66,82-85
         + split_bonus
         + _initial_bonus()
         + number_match_bonus
@@ -298,9 +257,7 @@ def score_candidates(pairs: DataFrame) -> DataFrame:
     return df.withColumn("score", score.cast("double")).drop("_r")
 
 
-_U_TEXT = ["u_norm", "u_part1", "u_part2", "u_sdx", "u_mp"]
 _E_TEXT = ["e_name", "e_first", "e_last"]
-_E_TEXT_FULL = _E_TEXT + ["f_sdx", "f_mp", "l_sdx", "l_mp"]
 
 
 def match_usernames(
@@ -344,11 +301,6 @@ def match_usernames(
     4. The per-``u_norm`` result fans back out to the original username
        rows with one narrow join.
     """
-    # The prepared sides each feed 2 consumers (distinct-text derivation
-    # and the final fan-out / employee re-attach join); staging runs the
-    # scan + normalization + split once per side instead of once per
-    # consumer (see plans/staging.py and the _STAGE_* notes above — the
-    # phonetic UDFs attach after the distinct pass and are NOT staged).
     if blocking is None:
         # Auto-select from plan statistics (no job): exact cross-scoring
         # only when the pair product is affordable AND the roster side is
@@ -366,49 +318,23 @@ def match_usernames(
         e_broadcastable = e_rows * _EST_BYTES_PER_ROW <= max(bcast_threshold, 0)
         blocking = not (e_broadcastable and u_rows * e_rows <= _CROSS_PAIR_BUDGET)
 
-    # Phonetic codes attach AFTER the distinct pass (optimization round
-    # 10, guide §4 — same rationale as scoring once per distinct pair):
-    # the per-row staged sides carry only native normalizations, and the
-    # Arrow phonetic UDF runs once per DISTINCT text (sf0.1: 400 rows
-    # instead of 30k UDF calls on the roster side, 1.7k instead of 15k
-    # on the username side).  The codes are pure functions of the
-    # normalized names, so every scored value is identical.
-    u = stage(
-        prepare_usernames(usernames, codes=False),
-        "u_norm",
-        enabled=materialize and _STAGE_SIDES,
-    )
-    e = stage(
-        prepare_employees(employees, codes=False),
-        "e_name",
-        enabled=materialize and _STAGE_SIDES,
-    )
-
-    u_texts = stage(
-        _attach_username_codes(
-            u.select("u_norm", "u_part1", "u_part2").dropDuplicates(["u_norm"])
-        ),
-        "u_norm",
-        enabled=materialize and _STAGE_DISTINCT_TEXTS,
-    )
-    e_texts = stage(
-        _attach_employee_codes(e.select(*_E_TEXT).dropDuplicates(_E_TEXT)),
-        "e_name",
-        enabled=materialize and _STAGE_DISTINCT_TEXTS,
-    )
+    # The per-row prepared sides are checkpointed: each feeds two
+    # consumers (the distinct-text derivation and the final fan-out /
+    # employee re-attach join), and without the cut the scan + normalize
+    # lineage re-executes per consumer (same-session A/B: unstaged 8.6 s
+    # vs staged 6.5 s).  The distinct-text frames are NOT staged: they are
+    # vocabulary-sized, so re-deriving them per consumer costs less than a
+    # checkpoint's exchange and scheduled job (A/B: 6.77 s staged vs
+    # 6.49 s not).
+    u = stage(prepare_usernames(usernames, codes=False), "u_norm", enabled=materialize)
+    e = stage(prepare_employees(employees, codes=False), "e_name", enabled=materialize)
+    u_texts = u.select("u_norm", "u_part1", "u_part2").dropDuplicates(["u_norm"])
+    e_texts = e.select(*_E_TEXT).dropDuplicates(_E_TEXT)
 
     if blocking:
         from ..plans.blocking import blocked_candidates
 
         pairs = blocked_candidates(u_texts, e_texts, broadcast_employees=broadcast_employees)
-        if _REPARTITION_PAIRS:
-            # The scoring stage's cost is per-ROW Python (Arrow UDF), not
-            # per-byte, but AQE coalesces the candidate dedup's output by
-            # bytes — a few MB of candidate pairs collapse to ~1 partition
-            # and the UDF serializes.  Re-spread explicitly; the narrow
-            # text pairs make this exchange trivial next to the scoring
-            # it parallelizes.
-            pairs = pairs.repartition(usernames.sparkSession.sparkContext.defaultParallelism)
     else:
         pairs = u_texts.crossJoin(F.broadcast(e_texts) if broadcast_employees else e_texts)
 

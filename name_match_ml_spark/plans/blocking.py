@@ -23,10 +23,19 @@ one row per distinct normalized username, one per distinct employee name
 text), so the join and the pair dedup shuffle only narrow text columns.
 The join shuffles both sides by key (or broadcasts the employee texts),
 AQE skew-join splits hot buckets (common surnames), and candidates are
-deduped on the text pair before scoring. Recall loss is bounded to pairs
+deduped on the text pair before scoring. The dedup's exchange hashes on
+the whole text pair with an explicit partition count (the session's
+default parallelism), so AQE cannot coalesce it by bytes: a few MB of text
+pairs would otherwise collapse to one partition, and the per-row Python
+scorer downstream would run on one core. One exchange serves both the
+dedup and the scorer's spread. It hashes the pair, not ``u_norm`` alone:
+the username side arrives hash-partitioned on ``u_norm`` already, and when
+the default parallelism equals the shuffle partition count the planner
+drops a repartition that repeats its child's partitioning, which leaves
+the scorer on AQE's coalesced partitions. Recall loss is bounded to pairs
 sharing no token edge-gram and no phonetic code — pairs the composite would
-score near the threshold anyway (verified ≥65-score recall on the reference
-fixtures in ``tests/test_matching.py``).
+score near the threshold anyway (verified ≥65-score recall on the committed
+and the reference fixtures in ``tests/test_matching.py``).
 """
 
 from __future__ import annotations
@@ -82,7 +91,7 @@ def blocked_candidates(
     fixture recall test (``tests/test_matching.py``) pins that nothing
     real is lost at the default cap.  The hot-key set itself is tiny
     (≤ N/cap keys), so the subtraction is a broadcast anti-join, and the
-    df aggregates shuffle only (key, count) longs."""
+    one df aggregate over both sides shuffles only (key, counts) rows."""
     u_tokens = F.split(F.col("u_norm"), r"[^a-z]+")
     u_stripped = F.regexp_replace(F.col("u_norm"), r"[^a-z]", "")
     u_keys = u_texts.withColumn(
@@ -114,27 +123,34 @@ def blocked_candidates(
     )
 
     if hot_key_cap is not None:
-        # Keys over the cap on either side, deduped — a small set by
-        # construction, so Catalyst broadcasts it into both anti-joins.
-        # The df aggregates re-derive the exploded keys from the (staged
-        # upstream) text sides: one narrow recompute, no driver action.
-        def _hot(keys: DataFrame) -> DataFrame:
-            return (
-                keys.groupBy("_bkey")
-                .agg(F.count(F.lit(1)).alias("_df"))
-                .filter(F.col("_df") > hot_key_cap)
-                .select("_bkey")
+        # One aggregate over both sides' keys, tagged by side: a key is
+        # hot when its df exceeds the cap on either side.  The hot set is
+        # small by construction, so Catalyst broadcasts it into both
+        # anti-joins.  The aggregate re-derives the exploded keys from
+        # the text sides: one narrow recompute, no driver action.
+        tagged = u_keys.select("_bkey", F.lit(True).alias("_u")).unionByName(
+            e_keys.select("_bkey", F.lit(False).alias("_u"))
+        )
+        hot = F.broadcast(
+            tagged.groupBy("_bkey")
+            .agg(
+                F.count_if(F.col("_u")).alias("_u_df"),
+                F.count_if(~F.col("_u")).alias("_e_df"),
             )
-
-        hot = F.broadcast(_hot(u_keys).union(_hot(e_keys)).distinct())
+            .filter((F.col("_u_df") > hot_key_cap) | (F.col("_e_df") > hot_key_cap))
+            .select("_bkey")
+        )
         u_keys = u_keys.join(hot, "_bkey", "left_anti")
         e_keys = e_keys.join(hot, "_bkey", "left_anti")
 
     if broadcast_employees:
         e_keys = F.broadcast(e_keys)
 
+    pair_key = ["u_norm", "e_name", "e_first", "e_last"]
+    n = u_texts.sparkSession.sparkContext.defaultParallelism
     return (
         u_keys.join(e_keys, "_bkey")
         .drop("_bkey")
-        .dropDuplicates(["u_norm", "e_name", "e_first", "e_last"])
+        .repartition(n, *pair_key)
+        .dropDuplicates(pair_key)
     )

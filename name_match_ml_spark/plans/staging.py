@@ -5,8 +5,8 @@ shingle table feeds the df-statistics pass, the candidate join, and the
 verification join in :mod:`..operators.dedup`; the prepared username /
 roster texts feed candidate generation, the dummy branch, and the final
 fan-out join in :mod:`..operators.matching`.  Left lazy, Catalyst gives
-each consumer its own copy of the lineage: the derivation (higher-order
-shingling, Arrow phonetic UDFs) re-executes once per consumer, and
+each consumer its own copy of the lineage: the derivation (scans,
+normalization, higher-order shingling) re-executes once per consumer, and
 exchange reuse never applies because each consumer projects differently.
 Worse, ``explode``/``Generate`` over a derived array column re-evaluates
 the collapsed producing expression (measured ~10× on the sf0.1 shingle

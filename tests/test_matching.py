@@ -1,13 +1,17 @@
 """End-to-end flagship pipeline tests: Spark plan vs pure-Python oracle.
 
 The oracle is ``compute_match_score`` + an exact reimplementation of the
-reference's top-k/threshold/label loop (``main.py:163-209``), run over the
-reference's own fixtures (read-only at /root/reference).
+reference's top-k/threshold/label loop (``main.py:163-209``).  The exactness
+pins run on the committed reference-shaped fixture in ``tests/data``
+(FIXTURES.md §A/§B patterns plus the ``""``/``"."``/``"john."`` edges) and,
+when the reference's own CSVs are present, on those too.
 """
 
 from __future__ import annotations
 
 import csv
+import os
+import re
 
 import pytest
 
@@ -28,13 +32,30 @@ from name_match_ml_spark.sources.csv import employees_from_df, load_employees, l
 REF_EMPLOYEES = "/root/reference/employee.csv"
 REF_USERNAMES = "/root/reference/usernames.csv"
 
+_DATA = os.path.join(os.path.dirname(__file__), "data")
+FIXTURE_EMPLOYEES = os.path.join(_DATA, "employee.csv")
+FIXTURE_USERNAMES = os.path.join(_DATA, "usernames.csv")
 
-def _ref_rows():
-    with open(REF_EMPLOYEES) as f:
+_SOURCES = {
+    "fixture": (FIXTURE_EMPLOYEES, FIXTURE_USERNAMES),
+    "reference": (REF_EMPLOYEES, REF_USERNAMES),
+}
+
+
+def _paths(source: str) -> tuple[str, str]:
+    paths = _SOURCES[source]
+    if not all(os.path.exists(p) for p in paths):
+        pytest.skip(f"{source} CSVs not present")
+    return paths
+
+
+def _ref_rows(source: str):
+    emp_path, user_path = _paths(source)
+    with open(emp_path) as f:
         emps = [
             (r["EMP_ID"], r["First_Name"], r["Last_Name"]) for r in csv.DictReader(f)
         ]
-    with open(REF_USERNAMES) as f:
+    with open(user_path) as f:
         unames = [r["username"] for r in csv.DictReader(f)]
     return emps, unames
 
@@ -58,21 +79,27 @@ def _oracle_matches(emps, unames):
         for emp_id, ename, s in top:
             if prev is not None and s < prev:
                 rank += 1
-            rows.append((emp_id, ename, round(s, 6), labels.get(rank, "")))
+            # The engine trims the derived display name ("Kiran " for an
+            # empty last name is emitted as "Kiran").
+            rows.append((emp_id, ename.strip(), round(s, 6), labels.get(rank, "")))
             prev = s
         out[uname] = rows
     return out
 
 
+@pytest.fixture(scope="module", params=sorted(_SOURCES))
+def source(request):
+    return request.param
+
+
 @pytest.fixture(scope="module")
-def ref_dfs(spark):
-    employees = load_employees(spark, REF_EMPLOYEES)
-    usernames = load_usernames(spark, REF_USERNAMES)
-    return employees, usernames
+def ref_dfs(spark, source):
+    emp_path, user_path = _paths(source)
+    return load_employees(spark, emp_path), load_usernames(spark, user_path)
 
 
-def test_employee_ingestion_canonicalizes(ref_dfs):
-    employees, _ = ref_dfs
+def test_employee_ingestion_canonicalizes(spark):
+    employees = load_employees(spark, _paths("reference")[0])
     assert employees.columns == ["emp_id", "first_name", "last_name", "employee_name"]
     rows = employees.collect()
     assert len(rows) == 154  # 155 lines incl. header, no trailing newline
@@ -117,9 +144,9 @@ def test_ingest_error_modes(spark):
         employees_from_df(bad, on_error="bogus")
 
 
-def test_flagship_matches_oracle(spark, ref_dfs):
+def test_flagship_matches_oracle(spark, source, ref_dfs):
     employees, usernames = ref_dfs
-    emps, unames = _ref_rows()
+    emps, unames = _ref_rows(source)
     oracle = _oracle_matches(emps, unames)
 
     result = match_usernames(usernames, employees)
@@ -164,10 +191,10 @@ def test_golden_output_rows(spark, ref_dfs):
         assert r.match_type == label, (uname, emp_id)
 
 
-def test_blocked_candidates_recall_on_matches(spark, ref_dfs):
+def test_blocked_candidates_recall_on_matches(spark, source, ref_dfs):
     """Blocking must retain every pair the cross product scores ≥ threshold
     on the reference fixtures (the blocking keys subsume the scorer's own
-    signals for real name-shaped usernames)."""
+    signals for real name-shaped usernames), including the edge texts."""
     employees, usernames = ref_dfs
     full = match_usernames(usernames, employees, include_not_found=False, blocking=False)
     blocked = match_usernames(
@@ -177,15 +204,19 @@ def test_blocked_candidates_recall_on_matches(spark, ref_dfs):
     blocked_pairs = {(r.username, r.emp_id, r.score) for r in blocked.collect()}
     missing = {p for p in full_pairs if p[2] >= 65.0} - blocked_pairs
     assert not missing, f"blocking lost high-score pairs: {sorted(missing)[:5]}"
-    # bounded loss below 65: blocking keeps the vast majority overall
-    assert len(blocked_pairs) >= 0.9 * len(full_pairs)
+    # bounded loss below 65: blocking keeps most pairs overall.  The
+    # fixture's small roster and its initial-only and edge usernames put
+    # a larger share of its pairs in the 50-65 band, sharing no blocking
+    # key (measured: 119 of 151 kept).
+    floor = {"reference": 0.9, "fixture": 0.75}[source]
+    assert len(blocked_pairs) >= floor * len(full_pairs)
 
 
 def test_score_candidates_matches_python_scorer(spark, ref_dfs):
     """Distributed decomposed scorer ≡ pure-Python compute_match_score on
-    every (username × employee) pair."""
+    every (username × employee) pair, edge texts included."""
     employees, usernames = ref_dfs
-    pairs = prepare_usernames(usernames.limit(25)).crossJoin(
+    pairs = prepare_usernames(usernames).crossJoin(
         prepare_employees(employees)
     )
     scored = score_candidates(pairs).select(
@@ -200,6 +231,36 @@ def test_score_candidates_matches_python_scorer(spark, ref_dfs):
 
 def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_blocked_plan_has_one_python_stage(spark):
+    """The blocked flagship plan runs Python once: the pair UDF scores the
+    phonetic term itself (no per-side ``phonetic_codes_udf`` stages), the
+    hot blocking keys come from one side-tagged aggregate per use (no
+    second aggregate, no distinct), and one explicit hash exchange on the
+    text pair serves the candidate dedup and the scorer's spread (AQE
+    cannot coalesce it; no round-robin re-spread).  The default test
+    session's parallelism equals its shuffle partition count: the case
+    where the planner drops a repartition that repeats its child's
+    partitioning."""
+    employees = load_employees(spark, FIXTURE_EMPLOYEES)
+    usernames = load_usernames(spark, FIXTURE_USERNAMES)
+    # Before execution the adaptive plan prints its initial plan only.
+    plan = _executed_plan(match_usernames(usernames, employees, blocking=True))
+    assert plan.count("ArrowEvalPython") == 1
+    assert "phonetic_codes_udf" not in plan
+    # Each hot-key anti-join reads one aggregate over the tagged union of
+    # both sides' keys (the two copies are one exchange at run time).
+    anti_joins = plan.count("LeftAnti")
+    assert anti_joins == 2
+    assert plan.count("Exchange hashpartitioning(_bkey") == anti_joins
+    assert not re.search(r"HashAggregate\(keys=\[_bkey#\d+\], functions=\[\]", plan)
+    assert re.search(
+        r"Exchange hashpartitioning\(u_norm#\d+, e_name#\d+, e_first#\d+, e_last#\d+, \d+\), "
+        r"REPARTITION_BY_NUM",
+        plan,
+    )
+    assert "RoundRobinPartitioning" not in plan
 
 
 def test_blocking_auto_select(spark, ref_dfs):
@@ -249,12 +310,7 @@ def test_hot_key_cap_bounds_skewed_blocking(spark):
     the hot keys so no key contributes more than cap^2 pairs, while pairs
     that share any non-hot key (the real matches) survive
     (VERDICT r2 next-round #5)."""
-    from name_match_ml_spark.operators.matching import (
-        _E_TEXT_FULL,
-        _U_TEXT,
-        prepare_employees,
-        prepare_usernames,
-    )
+    from name_match_ml_spark.operators.matching import _E_TEXT
     from name_match_ml_spark.plans.blocking import blocked_candidates
 
     # pure-letter names (digits are token separators in the username
@@ -276,12 +332,12 @@ def test_hot_key_cap_bounds_skewed_blocking(spark):
     ).selectExpr("*", "concat(first_name, ' ', last_name) as employee_name")
     usernames = spark.createDataFrame(usr_rows, ["username"])
 
-    u_texts = prepare_usernames(usernames).select(*_U_TEXT).dropDuplicates(["u_norm"])
-    e_texts = (
-        prepare_employees(employees).select(*_E_TEXT_FULL).dropDuplicates(
-            ["e_name", "e_first", "e_last"]
-        )
+    u_texts = (
+        prepare_usernames(usernames, codes=False)
+        .select("u_norm", "u_part1", "u_part2")
+        .dropDuplicates(["u_norm"])
     )
+    e_texts = prepare_employees(employees, codes=False).select(*_E_TEXT).dropDuplicates(_E_TEXT)
 
     uncapped = blocked_candidates(u_texts, e_texts, hot_key_cap=None).count()
     assert uncapped >= hot * hot  # the bomb is real: >=360k pairs via tok:patel

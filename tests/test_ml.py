@@ -3,6 +3,8 @@ vs the reference's ~90% filename baseline, model persistence."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.ml import PipelineModel
 from pyspark.ml.evaluation import MulticlassClassificationEvaluator
@@ -38,6 +40,8 @@ PAIRS_SCHEMA = StructType(
 
 @pytest.fixture(scope="module")
 def train_pairs(spark):
+    if not os.path.exists(TRAIN_4K):
+        pytest.skip("reference training CSV not present")
     return spark.read.option("header", True).schema(PAIRS_SCHEMA).csv(TRAIN_4K)
 
 

@@ -8,12 +8,14 @@ output (``assets/example.png``, rows tabulated in ``FIXTURES.md §E``).
 from __future__ import annotations
 
 import csv
+import os
 
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from name_match_ml_spark.functions.scoring import compute_match_score
+from name_match_ml_spark.functions.scoring import compute_match_score, pair_ratios_udf
 from name_match_ml_spark.functions.similarity import (
     full_process,
     metaphone,
@@ -25,6 +27,13 @@ from name_match_ml_spark.functions.similarity import (
 
 REF_EMPLOYEES = "/root/reference/employee.csv"
 REF_USERNAMES = "/root/reference/usernames.csv"
+
+_DATA = os.path.join(os.path.dirname(__file__), "data")
+FIXTURE_EMPLOYEES = os.path.join(_DATA, "employee.csv")
+FIXTURE_USERNAMES = os.path.join(_DATA, "usernames.csv")
+# The committed fixture carries the golden rows' employees under their
+# reference ids (FIXTURES.md §E).
+_EMPLOYEE_CSVS = {"fixture": FIXTURE_EMPLOYEES, "reference": REF_EMPLOYEES}
 
 
 # -- ratio -----------------------------------------------------------------
@@ -171,8 +180,11 @@ def test_metaphone(s, expected):
 # -- composite score: golden rows from assets/example.png ------------------
 
 
-def _employees():
-    with open(REF_EMPLOYEES) as f:
+def _employees(source: str):
+    path = _EMPLOYEE_CSVS[source]
+    if not os.path.exists(path):
+        pytest.skip(f"{source} employee CSV not present")
+    with open(path) as f:
         return {r["EMP_ID"]: (r["First_Name"], r["Last_Name"]) for r in csv.DictReader(f)}
 
 
@@ -186,17 +198,19 @@ GOLDEN = [
 ]
 
 
+@pytest.mark.parametrize("source", sorted(_EMPLOYEE_CSVS))
 @pytest.mark.parametrize("username,emp_id,expected", GOLDEN)
-def test_golden_scores(username, emp_id, expected):
-    emps = _employees()
+def test_golden_scores(username, emp_id, expected, source):
+    emps = _employees(source)
     first, last = emps[emp_id]
     got = compute_match_score(username, f"{first} {last}", first, last, emp_id)
     assert got == pytest.approx(expected, abs=0.005)
 
 
-def test_score_total_on_reference_crash_edges():
+@pytest.mark.parametrize("source", sorted(_EMPLOYEE_CSVS))
+def test_score_total_on_reference_crash_edges(source):
     """Reference raises IndexError on these (main.py:69,73); we don't."""
-    emps = _employees()
+    emps = _employees(source)
     first, last = emps["7"]
     for u in ["", "john.", ".", "..", "   "]:
         s = compute_match_score(u, f"{first} {last}", first, last, "7")
@@ -218,3 +232,53 @@ def test_exact_pattern_short_circuits_to_100():
         "swatipatel", "patelswati", "swati patel", "patel swati",
     ]:
         assert compute_match_score(u, "Swati Patel", "Swati", "Patel", "7") == 100.0
+
+
+# -- the pair UDF's phonetic term ------------------------------------------
+
+# (username, other name) pairs whose Soundex codes agree while their
+# Metaphone codes differ.
+_SOUNDEX_ONLY = [("guptha", "gupta"), ("sah", "shah"), ("sarma", "sharma"), ("rajes", "rajesh")]
+
+
+def _oracle_phonetic(u: str, first: str, last: str) -> int:
+    """The phonetic part of ``compute_match_score`` (``main.py:63-66,
+    82-85``), on the same lowercased/stripped inputs."""
+    u, first, last = (x.lower().strip() for x in (u, first, last))
+    return (
+        int(soundex(u) == soundex(last)) * 6
+        + int(metaphone(u) == metaphone(last)) * 7
+        + int(soundex(u) == soundex(first)) * 3
+        + int(metaphone(u) == metaphone(first)) * 3
+    )
+
+
+def test_pair_udf_phonetic_term_matches_oracle():
+    """The pair UDF's ``phonetic`` field equals the phonetic part of
+    ``compute_match_score`` on the fixture's usernames × roster (edge
+    texts and digit-leading usernames included) and on pairs where only
+    Soundex agrees, on the last name and on the first name."""
+    with open(FIXTURE_EMPLOYEES) as f:
+        emps = [(r["First_Name"], r["Last_Name"]) for r in csv.DictReader(f)]
+    with open(FIXTURE_USERNAMES) as f:
+        unames = [r["username"] for r in csv.DictReader(f)]
+    assert {"", ".", "john.", "9lives", "007bond", "123"} <= set(unames)
+    for a, b in _SOUNDEX_ONLY:
+        assert soundex(a) == soundex(b) and metaphone(a) != metaphone(b), (a, b)
+    triples = [(u, f, l) for u in unames for f, l in emps]
+    for a, b in _SOUNDEX_ONLY:
+        triples += [(a, "neha", b), (a, b, "kumar")]
+    norm = [tuple(x.lower().strip() for x in t) for t in triples]
+    out = pair_ratios_udf.func(
+        pd.Series([u for u, _, _ in norm]),
+        pd.Series([f"{f} {l}".strip() for _, f, l in norm]),
+        pd.Series([f for _, f, _ in norm]),
+        pd.Series([l for _, _, l in norm]),
+    )
+    got = out["phonetic"].tolist()
+    want = [_oracle_phonetic(*t) for t in triples]
+    assert got == want
+    # Soundex-only pairs score the Soundex points and not the Metaphone ones.
+    soundex_only = got[-2 * len(_SOUNDEX_ONLY):]
+    assert soundex_only == [6, 3] * len(_SOUNDEX_ONLY), soundex_only
+
