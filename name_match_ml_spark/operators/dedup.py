@@ -558,32 +558,6 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash_fingerprint(word_hashes: Column, bits: int = 64) -> Column:
-    """SimHash as a native expression: bit b of the fingerprint is set iff
-    the majority of word hashes have bit b set (equivalently, the sign of
-    Σ_words ±1 over bit b of the 64-bit word hash).
-
-    ``word_hashes`` must be a **materialized** ``array<long>`` column
-    (``xxhash64`` per word, hashed once in its own projection) — higher-
-    order functions re-evaluate inline argument subtrees per element, so
-    passing raw words would re-hash every word ``bits`` times.  One
-    ``filter``+``size`` pass over the long array per bit; no Python."""
-    def _bit_filter(b: int):
-        return lambda h: F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1
-
-    n_words = F.size(word_hashes)
-    fp = F.lit(0).cast("long")
-    for b in range(bits):
-        n_set = F.size(F.filter(word_hashes, _bit_filter(b)))
-        bit_val = (1 << b) if b < bits - 1 else -(1 << (bits - 1))
-        fp = fp.bitwiseOR(
-            F.when(n_set * 2 > n_words, F.lit(bit_val).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return fp
-
-
 def simhash_pairs(
     docs: DataFrame,
     *,
@@ -622,8 +596,7 @@ def simhash_pairs(
     band_bits = total_bits // n_bands
     # Fingerprint via explode + one hash aggregate (one conditional bit
     # sum per fingerprint bit per doc) instead of interpreted HOF array
-    # passes (:func:`simhash_fingerprint`, kept as the per-row expression
-    # form): the sums run inside whole-stage codegen, and map-side partial
+    # passes: the sums run inside whole-stage codegen, and map-side partial
     # aggregation collapses each doc to one row of bit sums before the
     # shuffle, so the exchange carries ~one narrow row per doc.
     wh = docs.select(F.col(id_col).alias("doc_id"), F.explode(_word_set(text_col)).alias("_t")).select(

@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.probe import estimated_rows
+
 __all__ = ["pack_documents", "pack_attention_spans"]
 
 
@@ -53,7 +55,7 @@ def pack_documents(
     target_docs_per_bucket))`` — because one bucket is one
     ``applyInPandas`` group that must fit in a single task: a static
     count makes per-task memory O(corpus / n_buckets), unbounded at
-    100 TB.  The estimator (shared with the matching auto-select) uses
+    100 TB.  The estimator (``plans/probe.estimated_rows``) uses
     exact file-size stats and a 32-bytes/row divisor, which for wide
     text rows OVERestimates the row count — the error direction that
     produces more, smaller buckets, never an oversized task; an
@@ -67,9 +69,7 @@ def pack_documents(
     if n_buckets is None:
         import math
 
-        from .matching import _estimated_rows
-
-        est = _estimated_rows(docs)
+        est = estimated_rows(docs)
         n_buckets = (
             4096 if not math.isfinite(est)
             else max(32, math.ceil(est / target_docs_per_bucket))

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.probe import parallelism_floor
+
 __all__ = ["profile_columns", "winsorize", "equi_width_histogram", "apply_expectations", "chi_square_independence", "dp_noisy_counts", "table_digest"]
 
 
@@ -51,31 +53,11 @@ def profile_columns(
     if not columns:
         raise ValueError("columns must be non-empty")
 
-    # Parallelism floor (optimization round 10, guide §6 minPartitionNum
-    # — the plans/staging.spread rationale without the checkpoint): a
-    # small table read as a couple of 128 MB splits caps the Expand ×
-    # (n_distinct_cols+1) partial aggregate — the whole cost of this
-    # operator — at the scan's split count (measured: 91% of the query
-    # in one 3-task stage on a 32-core session).  Re-spread only when
-    # the scan is under-parallel; every aggregate here is
-    # order-independent (count/min/max/distinct), so results are
-    # unaffected, and any real corpus has enough splits for this to be
-    # a no-op.
-    # Probe the partition count only for shuffle-free plans (ADVICE r10):
-    # under AQE, ``df.rdd`` forces getFinalPhysicalPlan, which EXECUTES
-    # any upstream shuffle stages at plan-build time — and those stages
-    # are not reused by the aggregate below, so for non-scan inputs the
-    # probe could cost more than the floor saves.  With no Exchange in
-    # the initial physical plan the RDD conversion schedules nothing
-    # (file splits are computed driver-side), and a shuffled input's
-    # parallelism is governed by shuffle.partitions/AQE anyway.
-    sc = df.sparkSession.sparkContext
-    try:
-        shuffle_free = "Exchange" not in df._jdf.queryExecution().sparkPlan().toString()
-    except Exception:
-        shuffle_free = False
-    if shuffle_free and df.rdd.getNumPartitions() < sc.defaultParallelism:
-        df = df.repartition(sc.defaultParallelism)
+    # A small table read as a couple of file splits would cap the Expand
+    # × (n_distinct_cols+1) partial aggregate — the whole cost of this
+    # operator — at the split count; every aggregate here is
+    # order-independent, so the re-spread leaves results unchanged.
+    df = parallelism_floor(df)
 
     nd = F.count_distinct if distinct == "exact" else F.approx_count_distinct
     aggs = [F.count(F.lit(1)).alias("_nr")]

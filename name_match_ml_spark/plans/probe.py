@@ -1,46 +1,94 @@
-"""Probe-side join-strategy auto-select for the ANN family.
+"""Plan-time size decisions: the one home for choices made from plan size.
 
-The IVF/PQ scan joins a per-query PROBE table (query codes × probed
-cells, or the ADC distance table) against the corpus-sized inverted
-lists.  With the default in-repo query convention the probe side is
-small and a broadcast-hash join is the right plan — the corpus never
-shuffles.  But the probe side scales with the QUERY SET, not the
-corpus: a caller who passes a corpus-sized query set would turn that
-broadcast into a driver OOM (VERDICT r7 "What's wrong" #2).
+Every operator that picks a strategy before running anything asks this
+module, so each input to such a choice has one definition:
 
-:func:`probe_side` makes the contract mechanical instead of a
-docstring: it estimates the probe row count from plan statistics (the
-``operators/matching.py`` stats-probe device — Catalyst ``rowCount``
-under CBO, else ``sizeInBytes``-derived, else a LIMIT-bounded count)
-and returns the frame hinted
+* :func:`estimated_rows` — rows from Catalyst plan statistics; feeds the
+  flagship's cross vs blocked auto-select (``operators/matching.py``),
+  the pack bucket count (``operators/packing.py``) and :func:`probe_side`;
+* :func:`broadcast_threshold` — the session's broadcast budget in bytes;
+* :func:`probe_side` — broadcast vs shuffle-hash for the ANN family's
+  per-query probe table;
+* :func:`parallelism_floor` — round-robin re-spread of an under-parallel
+  scan (``plans/staging.spread``, ``sources/parquet.table``,
+  ``operators/profiling.profile_columns``).
 
-* ``broadcast`` when the estimate fits the row budget — the corpus
-  streams, nothing shuffles;
-* ``shuffle_hash`` otherwise — both sides shuffle on the probe key
-  (few distinct values; AQE's skew-join split handles the residual
-  skew), which is the honest distributed plan when the query side is
-  itself corpus-sized.  Sort-merge is never right here: the probe key
-  has at most ``k_cells``/``m·k_codes`` distinct values and the
-  corpus side is orders of magnitude larger than memory-per-key.
+Mis-estimation only ever pushes toward the safe path: byte-derived row
+estimates OVERestimate rows for wide rows, an estimator error reports
++inf, and the floor leaves any plan with an exchange alone.
 
-Byte-derived row estimates use a conservative 32 B/row, so wide probe
-rows (code arrays) OVERestimate rows — mis-estimation can only push
-toward the safe (shuffle) path, mirroring the flagship matcher's
-auto-select bias.
+The ANN probe side scales with the QUERY SET, not the corpus: small (the
+in-repo convention) it broadcasts and the corpus never shuffles, but a
+corpus-sized query set would turn that broadcast into a driver OOM, so
+above the row budget both sides shuffle-hash on the probe key (few
+distinct values; AQE's skew-join split handles the residual skew).
+Sort-merge is never right there: the probe key has at most
+``k_cells``/``m·k_codes`` distinct values and the corpus side is orders
+of magnitude larger than memory-per-key.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["probe_side", "PROBE_BROADCAST_ROW_BUDGET"]
+__all__ = [
+    "estimated_rows",
+    "broadcast_threshold",
+    "probe_side",
+    "parallelism_floor",
+    "EST_BYTES_PER_ROW",
+    "PROBE_BROADCAST_ROW_BUDGET",
+]
+
+# Conservative bytes/row for turning Catalyst sizeInBytes stats into row
+# estimates: underestimating row width OVERestimates rows, which can only
+# push a size decision toward the safe path.
+EST_BYTES_PER_ROW = 32
+# Catalyst reports ~Long.MaxValue sizeInBytes for plans with no stats
+# (e.g. ``createDataFrame``-backed LogicalRDD); treat anything this large
+# as "unknown" rather than "huge".
+_UNKNOWN_STATS_BYTES = 1 << 62
+# Row cap for the bounded count on unknown-stats sides.  Above this many
+# rows every caller's decision is already the large-input one, so there
+# is never a reason to count further.
+_PROBE_ROW_CAP = 65_536
 
 # Default probe-row budget for choosing broadcast.  Probe rows carry a
 # d-long code array (~0.5 KB at d=64): 500k rows ≈ 250 MB broadcast —
 # the upper edge of sane for a 100 TB-cluster driver, far above every
 # in-repo query set (|Q|·n_probe ≈ thousands).
 PROBE_BROADCAST_ROW_BUDGET = 500_000
+
+
+def estimated_rows(df: DataFrame) -> float:
+    """Row-count estimate of ``df`` for plan-time size decisions.
+
+    Normally free: uses the optimized logical plan's statistics
+    (``rowCount`` under CBO, else ``sizeInBytes`` — exact file size for
+    parquet/csv leaves).  When stats are unknown (LogicalRDD from
+    ``createDataFrame``), runs one LIMIT-bounded count: LIMIT
+    short-circuits the scan, so the probe touches at most ~``_PROBE_ROW_CAP``
+    rows regardless of source size, and a capped probe reports +inf.
+    """
+    try:
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        row_count = stats.rowCount()
+        if row_count.isDefined():
+            return float(str(row_count.get()))
+        size = float(str(stats.sizeInBytes()))
+        if size < _UNKNOWN_STATS_BYTES:
+            return size / EST_BYTES_PER_ROW
+        n = df.limit(_PROBE_ROW_CAP + 1).count()
+        return float("inf") if n > _PROBE_ROW_CAP else float(n)
+    except Exception:  # py4j / analysis edge: be safe, assume huge
+        return float("inf")
+
+
+def broadcast_threshold(spark: SparkSession) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes, as the planner
+    reads it (size suffixes resolved; ``-1`` disables broadcast)."""
+    return int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
 
 
 def probe_side(
@@ -58,9 +106,31 @@ def probe_side(
     re-deriving stats from the probe plan itself.
     """
     if est_rows is None:
-        from ..operators.matching import _estimated_rows
-
-        est_rows = _estimated_rows(df)
+        est_rows = estimated_rows(df)
     if est_rows <= row_budget:
         return F.broadcast(df)
     return df.hint("shuffle_hash")
+
+
+def parallelism_floor(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` to ``defaultParallelism`` partitions when its
+    executed plan has no exchange and fewer partitions than that.
+
+    A small table read as one file split caps every map-side stage over
+    it at the split count; on a real corpus the scan is already split and
+    this is a no-op.  Counting partitions goes through ``df.rdd``, which
+    under AQE runs every exchange's stages at plan time — and a broadcast
+    exchange starts jobs just as a shuffle does — so any plan with an
+    Exchange node of any kind (shuffle, broadcast, reused) is left alone:
+    its parallelism is the shuffle's anyway.  ``executedPlan`` is read
+    because ``sparkPlan`` predates the exchanges the planner inserts.
+    Callers must consume ``df`` order-independently.
+    """
+    n = df.sparkSession.sparkContext.defaultParallelism
+    try:
+        planned = df._jdf.queryExecution().executedPlan().toString()
+    except Exception:
+        return df
+    if "Exchange" in planned or df.rdd.getNumPartitions() >= n:
+        return df
+    return df.repartition(n)

@@ -17,7 +17,9 @@ sub-plan runs exactly once (on first action), its rows are stored on the
 executors (memory, spilling to disk), and every consumer reads the stored
 rows.  A ``repartition`` by the key first spreads the stored blocks so
 downstream joins start parallel even when the producing scan had few
-input splits.
+input splits.  :func:`spread` is the eager variant for iterative
+consumers; its partition count comes from the one parallelism floor in
+:mod:`.probe`.
 
 Scale notes (100 TB): this is the standard pattern of persisting the
 tokenized/featurized intermediate before a multi-pass similarity join —
@@ -31,6 +33,8 @@ is always the *narrow* derived one (ids + hashes/codes), never raw text.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+from .probe import parallelism_floor
 
 __all__ = ["stage", "spread"]
 
@@ -52,20 +56,11 @@ def stage(df: DataFrame, *keys: str, enabled: bool = True) -> DataFrame:
 
 
 def spread(df: DataFrame) -> DataFrame:
-    """Eager ``localCheckpoint`` with a parallelism floor (optimization
-    round 10, guide §6 ``minPartitionNum``): when the producing scan has
-    FEWER partitions than the session's parallelism — a small table read
-    as one 128 MB split — every downstream job over the checkpointed
-    rows runs that few tasks, which caps every per-round job of an
-    iterative consumer (k-means seeding/Lloyd, PQ training, Gonzalez
-    selection) at the scan's split count.  Re-spread round-robin before
-    materializing; when the source already has enough splits (any real
-    corpus), this is a plain eager checkpoint — no extra shuffle.
-    Results are unaffected: every consumer aggregates with
+    """Eager ``localCheckpoint`` behind the parallelism floor
+    (:func:`.probe.parallelism_floor`): an iterative consumer (k-means
+    seeding/Lloyd, PQ training, Gonzalez selection) runs every per-round
+    job over the stored rows, so a one-split scan would cap each round at
+    one task.  Results are unaffected: every consumer aggregates with
     order-independent exact arithmetic (min/max/sum of ints and
     structs)."""
-    sc = df.sparkSession.sparkContext
-    n = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < n:
-        df = df.repartition(n)
-    return df.localCheckpoint()
+    return parallelism_floor(df).localCheckpoint()

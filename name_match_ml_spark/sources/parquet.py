@@ -3,13 +3,19 @@
 Thin wrapper so every query takes ``(spark, sf_dir)`` and reads
 ``{sf_dir}/{table}.parquet`` — predicate pushdown, column pruning and
 partition sizing are Catalyst/DataSource-v2 built-ins as long as we stay
-declarative from the scan on.
+declarative from the scan on.  The driver corpus ships each table as ONE
+single-row-group parquet file — an unsplittable scan partition — so the
+expression-heavy tables go through the plan-time parallelism floor
+(``plans/probe.parallelism_floor``); on a real cluster the scan is
+already split and the floor is a no-op.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..plans.probe import parallelism_floor
 
 TABLES = (
     "region",
@@ -40,23 +46,6 @@ _EXPRESSION_HEAVY_TABLES = frozenset(
 __all__ = ["TABLES", "table", "register_views"]
 
 
-def _ensure_scan_parallelism(df: DataFrame) -> DataFrame:
-    """Round-robin repartition when the scan has fewer partitions than the
-    session's parallelism.
-
-    The driver corpus ships each table as ONE single-row-group parquet file
-    — an unsplittable scan partition — so without this every map-side
-    expression/UDF stage (shingling, scoring, feature extraction, partial
-    aggregation) runs on one core.  On a real cluster the scan is already
-    split by ``spark.sql.files.maxPartitionBytes`` and this guard is a
-    no-op (the condition is false), so no extra shuffle is introduced at
-    scale."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown corpus table {name!r}; expected one of {TABLES}")
@@ -78,7 +67,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     else:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name in _EXPRESSION_HEAVY_TABLES:
-        df = _ensure_scan_parallelism(df)
+        df = parallelism_floor(df)
     return df
 
 

@@ -8787,7 +8787,6 @@ def flagship_corpus_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         _corpus_usernames(spark, sf_dir),
         _corpus_roster(spark, sf_dir),
         blocking=True,
-        broadcast_employees=True,
     )
 
 # Bloom decontamination: the oracle rebuilds the SAME 65536-bit filter

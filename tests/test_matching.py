@@ -281,6 +281,19 @@ def test_blocking_auto_select(spark, ref_dfs):
     assert "BroadcastNestedLoopJoin" in small_plan
     assert "_bkey" not in small_plan
 
+    # Broadcast disabled: the roster no longer fits the threshold, so the
+    # same small inputs must take the blocked path.
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        no_bcast_plan = _executed_plan(
+            match_usernames(usernames, employees, include_not_found=False)
+        )
+    finally:
+        spark.conf.set(key, old)
+    assert "_bkey" in no_bcast_plan
+
     # 30k × 30k ≈ 9e8 estimated pairs → auto must choose blocking: the
     # candidate join is a broadcast/shuffle HASH join on _bkey and no
     # cross-product node appears anywhere.
@@ -360,19 +373,3 @@ def test_hot_key_cap_bounds_skewed_blocking(spark):
     }
     assert (f"{fn7}.patel", f"{fn7} patel") in survivors
 
-
-def test_parse_byte_size_spark_conf_values():
-    """Spark reports size confs with suffixes even for defaults
-    ('10485760b'); a bare int() would reject every one of them and pin
-    the auto-select to the hard-coded fallback (ADVICE r3)."""
-    from name_match_ml_spark.operators.matching import _parse_byte_size
-
-    assert _parse_byte_size("10485760") == 10485760
-    assert _parse_byte_size("10485760b") == 10485760
-    assert _parse_byte_size("100MB") == 100 << 20
-    assert _parse_byte_size("1g") == 1 << 30
-    assert _parse_byte_size(" 512 kb ") == 512 << 10
-    assert _parse_byte_size("-1") == -1  # broadcast disabled
-    assert _parse_byte_size(None) is None
-    assert _parse_byte_size("not-a-size") is None
-    assert _parse_byte_size("10x") is None
