@@ -24,8 +24,12 @@ Spark-first plan (vs the reference's O(U×E) row-at-a-time Python loop):
 4. **Top-k** — one window (`row_number <= k`) per username partition; in
    Spark ≥3.5 the rank filter is pushed into the shuffle via
    WindowGroupLimit, so each partition keeps ≤ k rows per key.
-5. **Labels + NOT-FOUND** — ``dense_rank`` + a ``when`` chain; usernames
+5. **Labels + NOT-FOUND** — ``dense_rank`` + a ``CASE`` label; usernames
    with no surviving match re-enter via left-anti join + sentinel union.
+
+Every call prepares both sides afresh and keeps nothing across calls: the
+reference reads the roster from each request's upload (``main.py:138-146``),
+so a roster kept from an earlier call would rarely be the one asked for.
 
 Tie handling: the reference's pandas sort is unstable, so top-4 membership
 under ties is unspecified there; this engine defines the deterministic
@@ -35,7 +39,7 @@ tiebreak ``(score DESC, emp_id ASC)`` and documents the divergence
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scoring import (
@@ -44,8 +48,8 @@ from ..functions.scoring import (
     pair_ratios_udf,
     phonetic_codes_udf,
 )
+from ..plans.blocking import blocked_candidates
 from ..plans.probe import EST_BYTES_PER_ROW, broadcast_threshold, estimated_rows
-from ..plans.staging import stage
 
 __all__ = [
     "prepare_employees",
@@ -57,6 +61,51 @@ __all__ = [
 
 _SPLIT_PATTERN = r"[\._\-\s]"  # main.py:32
 
+# The flagship's native expressions are SQL text, parsed in one py4j call
+# each.  Built from Column functions, a blocked match_usernames call made
+# about 4,000 py4j round trips; as text it makes about 800 (0.4 s of a
+# 5 s request on a loaded 4-core VM, `local[2]`).
+
+
+def _norm(name: str) -> str:
+    return f"trim(lower(coalesce(CAST(`{name}` AS STRING), '')))"
+
+
+# The 8 exact username patterns that short-circuit to 100 (main.py:36-47).
+_PATTERN_HIT = " OR ".join(
+    f"u_norm = concat({a}, '{sep}', {b})"
+    for sep in (".", "_", "", " ")
+    for a, b in (("e_first", "e_last"), ("e_last", "e_first"))
+)
+
+# +5 first-initial match, +5 second-dot-segment initial match
+# (main.py:68-74), guarded where the reference raises IndexError on
+# empty/trailing-dot usernames (main.py:69,73).
+_SECOND = "coalesce(get(split(u_norm, '[.]'), 1), '')"
+_INITIAL_BONUS = (
+    "IF(u_norm != '' AND e_first != '' AND substring(u_norm, 1, 1) = substring(e_first, 1, 1),"
+    " 5, 0)"
+    f" + IF(contains(u_norm, '.') AND {_SECOND} != '' AND e_first != ''"
+    f" AND substring({_SECOND}, 1, 1) = substring(e_first, 1, 1), 5, 0)"
+)
+
+# main.py:49-52
+_SPLIT_BONUS = (
+    "IF((u_part1 = e_first AND u_part2 = e_last) OR (u_part2 = e_first AND u_part1 = e_last),"
+    " 10, 0)"
+)
+
+# main.py:76-89; the trailing 0 is main.py:54's number bonus, dead code
+# (always 0) replicated for score parity (SURVEY.md §2.6 F9).
+_COMPOSITE = (
+    "_r.lev_full * 0.2D + _r.partial_full * 0.2D + _r.token_set_full * 0.2D"
+    " + _r.token_set_last * 0.3D + _r.token_set_first * 0.2D"
+    f" + _r.phonetic + {_SPLIT_BONUS} + ({_INITIAL_BONUS}) + 0"
+)
+
+# main.py:46-47, 90
+_SCORE = f"CAST(IF({_PATTERN_HIT}, 100.0D, least({_COMPOSITE}, 100.0D)) AS DOUBLE)"
+
 # blocking=None auto-select: exact cross-scoring is allowed only when the
 # estimated (usernames × roster) pair count stays under this budget AND the
 # roster fits the session's broadcast threshold; anything bigger gets
@@ -64,10 +113,6 @@ _SPLIT_PATTERN = r"[\._\-\s]"  # main.py:32
 # executor core-set; beyond that the cross product is the 100 TB
 # scale-killer VERDICT r2 flagged.
 _CROSS_PAIR_BUDGET = 4_000_000
-
-
-def _norm(c: Column) -> Column:
-    return F.trim(F.lower(F.coalesce(c.cast("string"), F.lit(""))))
 
 
 def prepare_employees(employees: DataFrame, *, codes: bool = True) -> DataFrame:
@@ -81,11 +126,11 @@ def prepare_employees(employees: DataFrame, *, codes: bool = True) -> DataFrame:
     ``match_usernames`` prepares with ``codes=False`` and runs no
     per-side Python stage.
     """
-    df = employees.select(
+    df = employees.selectExpr(
         "*",
-        _norm(F.col("employee_name")).alias("e_name"),
-        _norm(F.col("first_name")).alias("e_first"),
-        _norm(F.col("last_name")).alias("e_last"),
+        f"{_norm('employee_name')} AS e_name",
+        f"{_norm('first_name')} AS e_first",
+        f"{_norm('last_name')} AS e_last",
     )
     if not codes:
         return df
@@ -108,7 +153,7 @@ def prepare_usernames(usernames: DataFrame, *, codes: bool = True) -> DataFrame:
     ``u_sdx/u_mp`` (``main.py:63-66``; see :func:`prepare_employees` for
     the ``codes=False`` contract).
     """
-    df = usernames.withColumn("u_norm", _norm(F.col("username")))
+    df = usernames.selectExpr("*", f"{_norm('username')} AS u_norm")
     parts = F.split(F.col("u_norm"), _SPLIT_PATTERN)
     df = df.select(
         "*",
@@ -125,33 +170,6 @@ def prepare_usernames(usernames: DataFrame, *, codes: bool = True) -> DataFrame:
     )
 
 
-def _pattern_hit() -> Column:
-    """The 8 exact username patterns that short-circuit to 100
-    (``main.py:36-47``)."""
-    f, l = F.col("e_first"), F.col("e_last")
-    u = F.col("u_norm")
-    hit = F.lit(False)
-    for sep in (".", "_", "", " "):
-        hit = hit | (u == F.concat(f, F.lit(sep), l)) | (u == F.concat(l, F.lit(sep), f))
-    return hit
-
-
-def _initial_bonus() -> Column:
-    """+5 first-initial match, +5 second-dot-segment initial match
-    (``main.py:68-74``), guarded where the reference raises IndexError on
-    empty/trailing-dot usernames (``main.py:69,73``)."""
-    u, f = F.col("u_norm"), F.col("e_first")
-    first_char = F.substring(u, 1, 1)
-    f_char = F.substring(f, 1, 1)
-    b1 = F.when((u != "") & (f != "") & (first_char == f_char), F.lit(5)).otherwise(F.lit(0))
-    second = F.coalesce(F.get(F.split(u, r"\."), 1), F.lit(""))
-    b2 = F.when(
-        u.contains(".") & (second != "") & (f != "") & (F.substring(second, 1, 1) == f_char),
-        F.lit(5),
-    ).otherwise(F.lit(0))
-    return b1 + b2
-
-
 def score_candidates(pairs: DataFrame) -> DataFrame:
     """Attach the composite ``score`` column to prepared (username ×
     employee) candidate pairs — ``compute_match_score`` (``main.py:25-90``)
@@ -161,34 +179,7 @@ def score_candidates(pairs: DataFrame) -> DataFrame:
     ratios = pair_ratios_udf(
         F.col("u_norm"), F.col("e_name"), F.col("e_first"), F.col("e_last")
     )
-    df = pairs.withColumn("_r", ratios)
-
-    split_bonus = F.when(
-        ((F.col("u_part1") == F.col("e_first")) & (F.col("u_part2") == F.col("e_last")))
-        | ((F.col("u_part2") == F.col("e_first")) & (F.col("u_part1") == F.col("e_last"))),
-        F.lit(10),
-    ).otherwise(F.lit(0))  # main.py:49-52
-
-    # main.py:54 is dead code (always 0) — replicated as a literal for
-    # score parity; documented in SURVEY.md §2.6 F9.
-    number_match_bonus = F.lit(0)
-
-    composite = (
-        F.col("_r.lev_full") * 0.2
-        + F.col("_r.partial_full") * 0.2
-        + F.col("_r.token_set_full") * 0.2
-        + F.col("_r.token_set_last") * 0.3
-        + F.col("_r.token_set_first") * 0.2
-        + F.col("_r.phonetic")  # main.py:63-66,82-85
-        + split_bonus
-        + _initial_bonus()
-        + number_match_bonus
-    )  # main.py:76-89
-
-    score = F.when(_pattern_hit(), F.lit(100.0)).otherwise(
-        F.least(composite, F.lit(100.0))
-    )  # main.py:46-47, 90
-    return df.withColumn("score", score.cast("double")).drop("_r")
+    return pairs.withColumn("_r", ratios).selectExpr("*", f"{_SCORE} AS score").drop("_r")
 
 
 _E_TEXT = ["e_name", "e_first", "e_last"]
@@ -219,11 +210,12 @@ def match_usernames(
     Scale design — the expensive Python scoring runs once per **distinct
     text pair**, never per (username × employee) row:
 
-    1. Both sides are normalized and checkpointed once per row
-       (``plans/staging.stage``), then reduced to distinct text rows
+    1. Both sides are normalized and reduced to distinct text rows
        (``u_norm`` / ``(e_name, e_first, e_last)``): real corpora repeat
        names heavily, and the score is a pure function of the normalized
-       texts.
+       texts.  The username rows are materialized when this function is
+       called, with an eager ``localCheckpoint``; the roster is read by
+       each of its two consumers.
     2. Candidates come from a cross join against the broadcast distinct
        roster texts or via blocked equi-joins (``plans/blocking.py``),
        trading bounded recall loss for O(U·B̄) work.  ``blocking=None``
@@ -254,22 +246,27 @@ def match_usernames(
         e_broadcastable = e_rows * EST_BYTES_PER_ROW <= bcast_bytes
         blocking = not (e_broadcastable and u_rows * e_rows <= _CROSS_PAIR_BUDGET)
 
-    # The per-row prepared sides are checkpointed: each feeds two
-    # consumers (the distinct-text derivation and the final fan-out /
-    # employee re-attach join), and without the cut the scan + normalize
-    # lineage re-executes per consumer (same-session A/B: unstaged 8.6 s
-    # vs staged 6.5 s).  The distinct-text frames are NOT staged: they are
+    # The per-row username side is checkpointed: it feeds the
+    # distinct-text derivation, the dummy branch and the final fan-out,
+    # and without the cut the scan + normalize lineage re-executes per
+    # consumer (same-session A/B: unstaged 8.6 s vs staged 6.5 s).
+    # Eagerly: with a lazy checkpoint, AQE's concurrent stage jobs each
+    # compute the lineage, the first to finish truncates it, and the
+    # others' tasks report SQL metrics to accumulators already collected
+    # (DAGScheduler's "non-existent accumulator" errors).  Not hash-spread
+    # first: the checkpoint drops its input's partitioning.  The roster is
+    # not checkpointed: its two consumers (the distinct texts, the top-k
+    # employees per text) each read it for less than a checkpoint job
+    # costs.  The distinct texts are NOT staged: they are
     # vocabulary-sized, so re-deriving them per consumer costs less than a
     # checkpoint's exchange and scheduled job (A/B: 6.77 s staged vs
     # 6.49 s not).
-    u = stage(prepare_usernames(usernames, codes=False), "u_norm")
-    e = stage(prepare_employees(employees, codes=False), "e_name")
+    u = prepare_usernames(usernames, codes=False).localCheckpoint()
+    e = prepare_employees(employees, codes=False)
     u_texts = u.select("u_norm", "u_part1", "u_part2").dropDuplicates(["u_norm"])
     e_texts = e.select(*_E_TEXT).dropDuplicates(_E_TEXT)
 
     if blocking:
-        from ..plans.blocking import blocked_candidates
-
         pairs = blocked_candidates(u_texts, e_texts, broadcast_employees=True)
     else:
         pairs = u_texts.crossJoin(F.broadcast(e_texts))
@@ -279,23 +276,28 @@ def match_usernames(
     # Texts that can still reach the final top-k: rank() (not row_number)
     # keeps score ties, so every text whose score could compete under the
     # emp_id tiebreak survives pruning.
-    w_text = Window.partitionBy("u_norm").orderBy(F.col("score").desc())
     top_texts = (
-        scored.withColumn("_tr", F.rank().over(w_text)).filter(F.col("_tr") <= top_k).drop("_tr")
+        scored.selectExpr("*", "rank() OVER (PARTITION BY u_norm ORDER BY score DESC) AS _tr")
+        .filter(f"_tr <= {top_k}")
+        .drop("_tr")
     )
 
     # Within one employee text all employees score equally, so only the k
     # first by the final tiebreak (emp_id asc, string order as the
     # reference casts ids to str at main.py:124) can appear in any top-k.
-    w_emp = Window.partitionBy(*_E_TEXT).orderBy(F.col("emp_id").asc())
     e_short = (
-        e.withColumn("_er", F.row_number().over(w_emp))
-        .filter(F.col("_er") <= top_k)
-        .select(*_E_TEXT, "emp_id", "employee_name")
+        e.selectExpr(
+            *_E_TEXT,
+            "emp_id",
+            "employee_name",
+            "row_number() OVER (PARTITION BY e_name, e_first, e_last ORDER BY emp_id) AS _er",
+        )
+        .filter(f"_er <= {top_k}")
+        .drop("_er")
     )
 
-    slim = top_texts.join(e_short, _E_TEXT).select(
-        "u_norm", "emp_id", F.col("employee_name").alias("emp_name"), "score"
+    slim = top_texts.join(e_short, _E_TEXT).selectExpr(
+        "u_norm", "emp_id", "employee_name AS emp_name", "score"
     )
 
     if include_not_found:
@@ -304,42 +306,34 @@ def match_usernames(
         # at all (possible under blocking), which funnels every username
         # through the single window pass below — no anti-join, no second
         # evaluation of the scored lineage (main.py:172-179 semantics).
-        dummy = u_texts.select(
-            "u_norm",
-            F.lit("").alias("emp_id"),
-            F.lit("").alias("emp_name"),
-            F.lit(-1.0).alias("score"),
+        dummy = u_texts.selectExpr(
+            "u_norm", "'' AS emp_id", "'' AS emp_name", "-1.0D AS score"
         )
         slim = slim.unionByName(dummy)
 
     key = ["input_id", "username"] if "input_id" in u.columns else ["username"]
-    w_top = Window.partitionBy("u_norm").orderBy(F.col("score").desc(), F.col("emp_id").asc())
-    w_rank = Window.partitionBy("u_norm").orderBy(F.col("score").desc())
-    w_all = Window.partitionBy("u_norm")
-
     top = (
-        slim.withColumn("_rn", F.row_number().over(w_top))
-        .filter(F.col("_rn") <= top_k)  # main.py:169 head(k)
-        .withColumn("_dr", F.dense_rank().over(w_rank))
-        .withColumn("_max_score", F.max("score").over(w_all))
+        slim.selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY u_norm ORDER BY score DESC, emp_id) AS _rn",
+        )
+        .filter(f"_rn <= {top_k}")  # main.py:169 head(k)
+        .selectExpr(
+            "*",
+            "dense_rank() OVER (PARTITION BY u_norm ORDER BY score DESC) AS _dr",
+            "max(score) OVER (PARTITION BY u_norm) AS _max_score",
+        )
     )
 
+    # main.py:181-186; ties share a label via dense_rank (main.py:188-198)
     labels = (
-        F.when(F.col("_dr") == 1, "HIGH CONFIDENCE")
-        .when(F.col("_dr") == 2, "2nd HIGH CONFIDENCE")
-        .when(F.col("_dr") == 3, "3rd HIGH CONFIDENCE")
-        .when(F.col("_dr") == 4, "NOT SURE")
-        .otherwise("")
-    )  # main.py:181-186; ties share a label via dense_rank (main.py:188-198)
+        "CASE _dr WHEN 1 THEN 'HIGH CONFIDENCE' WHEN 2 THEN '2nd HIGH CONFIDENCE'"
+        " WHEN 3 THEN '3rd HIGH CONFIDENCE' WHEN 4 THEN 'NOT SURE' ELSE '' END"
+    )
 
     if not include_not_found:
-        per_text = top.filter(F.col("score") >= threshold).select(  # main.py:170
-            "u_norm",
-            "emp_id",
-            "emp_name",
-            "score",
-            F.col("_dr").alias("match_rank"),
-            labels.alias("match_type"),
+        per_text = top.filter(F.col("score") >= threshold).selectExpr(  # main.py:170
+            "u_norm", "emp_id", "emp_name", "score", "_dr AS match_rank", f"{labels} AS match_type"
         )
     else:
         # A username "has matches" iff its best (non-dummy) score clears
@@ -347,22 +341,17 @@ def match_usernames(
         # NOT-FOUND sentinel (main.py:172-179).  Dense ranks are
         # unaffected by dropping the sub-threshold tail, since that tail
         # always ranks below the kept rows.
-        is_not_found = F.col("_max_score") < threshold
-        per_text = top.filter(
-            (F.col("score") >= threshold) | (is_not_found & (F.col("_rn") == 1))
-        ).select(
-            "u_norm",
-            F.when(is_not_found, F.lit("N/A")).otherwise(F.col("emp_id")).alias("emp_id"),
-            F.when(is_not_found, F.lit("USER NOT FOUND"))
-            .otherwise(F.col("emp_name"))
-            .alias("emp_name"),
-            F.when(is_not_found, F.lit(0.0)).otherwise(F.col("score")).alias("score"),
-            F.when(is_not_found, F.lit(None).cast("int"))
-            .otherwise(F.col("_dr"))
-            .alias("match_rank"),
-            F.when(is_not_found, F.lit("USER NOT FOUND"))
-            .otherwise(labels)
-            .alias("match_type"),
+        per_text = (
+            top.withColumn("_nf", F.col("_max_score") < threshold)
+            .filter((F.col("score") >= threshold) | (F.col("_nf") & (F.col("_rn") == 1)))
+            .selectExpr(
+                "u_norm",
+                "IF(_nf, 'N/A', emp_id) AS emp_id",
+                "IF(_nf, 'USER NOT FOUND', emp_name) AS emp_name",
+                "IF(_nf, 0.0D, score) AS score",
+                "IF(_nf, CAST(NULL AS INT), _dr) AS match_rank",
+                f"IF(_nf, 'USER NOT FOUND', {labels}) AS match_type",
+            )
         )
 
     # Fan the per-distinct-text result back out to every original username

@@ -36,32 +36,68 @@ the scorer on AQE's coalesced partitions. Recall loss is bounded to pairs
 sharing no token edge-gram and no phonetic code — pairs the composite would
 score near the threshold anyway (verified ≥65-score recall on the committed
 and the reference fixtures in ``tests/test_matching.py``).
+
+Hot keys are capped per side: each side drops the keys whose document
+frequency *on that side* exceeds the cap, before the inner key join. A key
+missing from either side of an inner join yields no pair, so this gives
+exactly the pairs of the rule "drop a key from both sides when it is hot
+on either", and needs no aggregate over both sides' keys.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["blocked_candidates"]
 
 
-def _token_keys(tokens: Column) -> Column:
-    """tok/g3/sdx keys for every non-empty token in ``tokens``.
+def _token_keys(tokens: str) -> str:
+    """SQL for the tok/g3/sdx keys of every non-empty token in ``tokens``.
 
     The two edge 3-grams share one ``g3:`` namespace so a *suffix* of one
     token can block against a *prefix* of another — catches truncated
     mashups like ``hashkul`` ↔ "Harsh **Kul**karni"."""
-    return F.flatten(
-        F.transform(
-            F.filter(tokens, lambda t: t != ""),
-            lambda t: F.array(
-                F.concat(F.lit("tok:"), t),
-                F.concat(F.lit("g3:"), F.substring(t, 1, 3)),
-                F.concat(F.lit("g3:"), F.substring(t, -3, 3)),
-                F.concat(F.lit("sdx:"), F.soundex(t)),
-            ),
-        )
+    return (
+        f"flatten(transform(filter({tokens}, t -> t != ''), t -> array("
+        "concat('tok:', t), concat('g3:', substring(t, 1, 3)),"
+        " concat('g3:', substring(t, -3, 3)), concat('sdx:', soundex(t)))))"
+    )
+
+
+# The key arrays are SQL text, parsed in one call each (built from Column
+# functions and lambdas they cost a few hundred py4j round trips).
+_U_TOKENS = _token_keys("split(u_norm, '[^a-z]+')")
+_U_STRIPPED = "regexp_replace(u_norm, '[^a-z]', '')"
+_USERNAME_KEYS = (
+    f"array_distinct(concat({_U_TOKENS},"
+    f" IF({_U_STRIPPED} != '', array(concat('sdx:', soundex({_U_STRIPPED})),"
+    f" concat('g3:', substring({_U_STRIPPED}, 1, 3)),"
+    f" concat('g3:', substring({_U_STRIPPED}, -3, 3))), CAST(array() AS array<string>))))"
+)
+_EMPLOYEE_KEYS = f"array_distinct({_token_keys('array(e_first, e_last)')})"
+
+
+def _username_keys(u_texts: DataFrame) -> DataFrame:
+    """One row per (username text, blocking key), the key in ``_bkey``."""
+    return u_texts.selectExpr("*", f"explode({_USERNAME_KEYS}) AS _bkey")
+
+
+def _employee_keys(e_texts: DataFrame) -> DataFrame:
+    """One row per (employee text, blocking key), the key in ``_bkey``."""
+    return e_texts.selectExpr("*", f"explode({_EMPLOYEE_KEYS}) AS _bkey")
+
+
+def _drop_hot(keys: DataFrame, hot_key_cap: int | None) -> DataFrame:
+    """Keep the keys whose document frequency on this side is at most the
+    cap.  Each text carries a key once and the texts are distinct, so the
+    rows per key are its document frequency."""
+    if hot_key_cap is None:
+        return keys
+    return (
+        keys.selectExpr("*", "count(1) OVER (PARTITION BY _bkey) AS _df")
+        .filter(f"_df <= {hot_key_cap}")
+        .drop("_df")
     )
 
 
@@ -84,65 +120,17 @@ def blocked_candidates(
     one surname held by 30% of each side at 100 TB is a quadratic pair
     bomb that no amount of AQE skew-splitting fixes (AQE spreads the
     pairs over tasks; it cannot make there be fewer pairs).  Capping both
-    sides bounds every key's contribution to ≤ cap² pairs.  Recall note:
-    a true match is lost only when *every* key the pair shares is hot —
-    for name-shaped data a pair sharing only an ultra-common surname
-    token scores mostly on the uncommon parts anyway, and the reference-
-    fixture recall test (``tests/test_matching.py``) pins that nothing
-    real is lost at the default cap.  The hot-key set itself is tiny
-    (≤ N/cap keys), so the subtraction is a broadcast anti-join, and the
-    one df aggregate over both sides shuffles only (key, counts) rows."""
-    u_tokens = F.split(F.col("u_norm"), r"[^a-z]+")
-    u_stripped = F.regexp_replace(F.col("u_norm"), r"[^a-z]", "")
-    u_keys = u_texts.withColumn(
-        "_bkey",
-        F.explode(
-            F.array_distinct(
-                F.concat(
-                    _token_keys(u_tokens),
-                    F.when(
-                        u_stripped != "",
-                        F.array(
-                            F.concat(F.lit("sdx:"), F.soundex(u_stripped)),
-                            F.concat(F.lit("g3:"), F.substring(u_stripped, 1, 3)),
-                            F.concat(F.lit("g3:"), F.substring(u_stripped, -3, 3)),
-                        ),
-                    ).otherwise(F.array().cast("array<string>")),
-                )
-            )
-        ),
-    )
-
-    e_keys = e_texts.withColumn(
-        "_bkey",
-        F.explode(
-            F.array_distinct(
-                _token_keys(F.array(F.col("e_first"), F.col("e_last")))
-            )
-        ),
-    )
-
-    if hot_key_cap is not None:
-        # One aggregate over both sides' keys, tagged by side: a key is
-        # hot when its df exceeds the cap on either side.  The hot set is
-        # small by construction, so Catalyst broadcasts it into both
-        # anti-joins.  The aggregate re-derives the exploded keys from
-        # the text sides: one narrow recompute, no driver action.
-        tagged = u_keys.select("_bkey", F.lit(True).alias("_u")).unionByName(
-            e_keys.select("_bkey", F.lit(False).alias("_u"))
-        )
-        hot = F.broadcast(
-            tagged.groupBy("_bkey")
-            .agg(
-                F.count_if(F.col("_u")).alias("_u_df"),
-                F.count_if(~F.col("_u")).alias("_e_df"),
-            )
-            .filter((F.col("_u_df") > hot_key_cap) | (F.col("_e_df") > hot_key_cap))
-            .select("_bkey")
-        )
-        u_keys = u_keys.join(hot, "_bkey", "left_anti")
-        e_keys = e_keys.join(hot, "_bkey", "left_anti")
-
+    sides bounds every key's contribution to ≤ cap² pairs.  Each side
+    drops its own hot keys; a key dropped from either side meets nothing
+    in the inner join, so this yields exactly the pairs of dropping it
+    from both.  Recall note: a true match is lost only when *every* key
+    the pair shares is hot — for name-shaped data a pair sharing only an
+    ultra-common surname token scores mostly on the uncommon parts
+    anyway, and the reference-fixture recall test
+    (``tests/test_matching.py``) pins that nothing real is lost at the
+    default cap."""
+    u_keys = _drop_hot(_username_keys(u_texts), hot_key_cap)
+    e_keys = _drop_hot(_employee_keys(e_texts), hot_key_cap)
     if broadcast_employees:
         e_keys = F.broadcast(e_keys)
 
