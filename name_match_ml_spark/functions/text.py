@@ -736,8 +736,7 @@ def inverted_index(
         docs.select(
             F.col(id_col).alias("doc_id"),
             F.explode(F.array_distinct(_words(F.col(text_col)))).alias("term"),
-        ),
-        "term",
+        )
     )
     dfreq = wd.groupBy("term").agg(F.count(F.lit(1)).alias("df_count"))
     w = Window.partitionBy("term").orderBy(F.col("doc_id").asc())

@@ -956,7 +956,6 @@ def fuzzy_decontaminate(
     bands: int = 8,
     threshold: float = 0.5,
     shingle_n: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """FUZZY benchmark decontamination: flag corpus documents that are
     NEAR-duplicates of any benchmark document (shingle Jaccard ≥
@@ -989,16 +988,8 @@ def fuzzy_decontaminate(
     from ..plans.staging import stage
 
     _thr_frac = Fraction(threshold).limit_denominator(1_000_000)
-    base_c = stage(
-        _staged_shingle_hashes(corpus, text_col, id_col, shingle_n),
-        "doc_id",
-        enabled=materialize,
-    )
-    base_b = stage(
-        _staged_shingle_hashes(bench, text_col, id_col, shingle_n),
-        "doc_id",
-        enabled=materialize,
-    )
+    base_c = stage(_staged_shingle_hashes(corpus, text_col, id_col, shingle_n))
+    base_b = stage(_staged_shingle_hashes(bench, text_col, id_col, shingle_n))
     banded_c = band_signatures(base_c, num_perm=num_perm, bands=bands).select(
         F.col("doc_id"), "band", "band_sig"
     )

@@ -159,9 +159,9 @@ def _grid_kmeans_fit(
     (hash-checked against the same unrolled-CTE oracles)."""
     if k < 1:
         raise ValueError("k >= 1")
-    from ..plans.staging import spread
+    from ..plans.staging import stage
 
-    # spread (not a plain checkpoint): a 1-split scan would cap every
+    # stage (not a plain checkpoint): a 1-split scan would cap every
     # seeding/Lloyd round below at 1 task (guide §6 parallelism floor)
     if codes is not None:
         qz = codes.select(
@@ -171,7 +171,7 @@ def _grid_kmeans_fit(
             F.col("q"),
         )
         if not staged:
-            qz = spread(qz)
+            qz = stage(qz)
     else:
         if embeddings is None:
             raise ValueError("grid_kmeans_model: pass embeddings or codes")
@@ -179,7 +179,7 @@ def _grid_kmeans_fit(
 
         v = F.col(vec_col).cast("array<double>")
         _scale, q = quantize_expr(v)
-        qz = spread(
+        qz = stage(
             embeddings.select(
                 F.col(id_col).cast("long").alias("vec_id"),
                 F.transform(q, lambda x: x.cast("long")).alias("q"),

@@ -74,7 +74,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.7,
     shingle_n: int = 2,
     strategy: str = "auto",
-    materialize: bool = True,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
     """ALL pairs with word-``shingle_n``-gram-shingle Jaccard ≥ ``threshold``
@@ -114,14 +113,15 @@ def ngram_jaccard_pairs(
       sf0.1 corpus).  Web-scale vocabularies take the other paths.
     * ``"auto"`` — one aggregate over the (tiny) shingle df table picks:
       mean df ≥ N/4 with vocab ≤ 16384 ⇒ bitmap; mean df ≥ 16 ⇒
-      countjoin; else prefix.  Runs eagerly at plan-build time; with
-      ``materialize`` the stats pass reuses the staged shingle table, so
-      it costs one scan of stored longs.
+      countjoin; else prefix.  Runs eagerly at plan-build time; the
+      stats pass reads the staged shingle table, so it costs one scan of
+      stored longs.  If the exact vocabulary then overruns bitmap's cap
+      (an HLL undercount), auto reruns the same table as countjoin.
 
-    ``materialize`` stages the shingle table once
-    (:func:`..plans.staging.stage`) — every strategy consumes it 2-3
-    times, and re-deriving it per consumer re-runs the higher-order
-    shingling per pass (measured ~10× on sf0.1; see staging.py).
+    The shingle table is staged once (:func:`..plans.staging.stage`) —
+    every strategy consumes it 2-3 times, and re-deriving it per consumer
+    re-runs the higher-order shingling per pass (measured ~10× on sf0.1;
+    see staging.py).
 
     Shared scale properties (100 TB): shuffles carry only longs —
     ``(doc_id, n, hash)`` streams, id pairs, and (prefix path) shingle
@@ -138,8 +138,7 @@ def ngram_jaccard_pairs(
     (``minhash_lsh_pairs`` is the sketch-based path).
     """
     base = _staged_shingle_hashes(docs, text_col, id_col, shingle_n)
-    base = _cap_shingle_df(base, max_shingle_df)
-    base = stage(base, "doc_id", enabled=materialize)
+    base = stage(_cap_shingle_df(base, max_shingle_df))
     tok = base.select(
         "doc_id",
         F.size("sh").alias("n"),
@@ -150,7 +149,8 @@ def ngram_jaccard_pairs(
         inter.cast("double") / (sz - inter)
     ).alias("jaccard")
 
-    if strategy == "auto":
+    auto = strategy == "auto"
+    if auto:
         # One partial-combining pass (count + HLL distinct) instead of a
         # full groupBy(h) shuffle of the df table: the stats job exists
         # only to pick a strategy, all strategies return IDENTICAL rows
@@ -171,8 +171,9 @@ def ngram_jaccard_pairs(
         dense = m >= 16
         # 0.9 margin on the HLL estimate (≈5σ at rsd 2%): an undercount
         # on a corpus whose true vocabulary sits just above
-        # _BITMAP_MAX_VOCAB must not auto-select bitmap, whose
-        # point-of-use guard exact-counts and raises (ADVICE r10).  The
+        # _BITMAP_MAX_VOCAB should not auto-select bitmap, whose
+        # point-of-use guard exact-counts and raises (ADVICE r10); one
+        # that slips past the margin falls back to countjoin below.  The
         # margin only moves the bitmap/countjoin boundary — all
         # strategies return identical rows (test_ngram_strategies_agree).
         if dense and v <= _BITMAP_MAX_VOCAB * 0.9 and m >= base.count() / 4.0:
@@ -181,7 +182,12 @@ def ngram_jaccard_pairs(
             strategy = "countjoin" if dense else "prefix"
 
     if strategy == "bitmap":
-        return _bitmap_jaccard_pairs(base, threshold)
+        try:
+            return _bitmap_jaccard_pairs(base, threshold)
+        except _BitmapVocabOverflow:
+            if not auto:
+                raise
+            strategy = "countjoin"  # same staged table, shuffle plan
 
     if strategy == "countjoin":
         a = tok.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"), "h")
@@ -261,6 +267,11 @@ _BITMAP_CHUNK_ROWS = 1024  # best of {512, 1024, 2048, 4096} on local[32]
 # O(N²·V) bitmap flops against O(Σdf²) countjoin rows.
 _BITMAP_FLOPS_PER_ROW = 500
 
+
+class _BitmapVocabOverflow(ValueError):
+    """The exact vocabulary exceeds ``_BITMAP_MAX_VOCAB``."""
+
+
 def _bitmap_set_pairs(
     base: DataFrame, threshold: float, measure: str = "jaccard"
 ) -> DataFrame:
@@ -302,11 +313,11 @@ def _bitmap_set_pairs(
     # corpus must get this error, not a driver OOM from an unbounded
     # collect+broadcast.  The extra count re-scans only the distinct
     # aggregate.  The containment auto exact-counts the vocabulary; the
-    # jaccard auto estimates it (HLL, rsd 2%) but gates on a 0.9 margin
-    # under the cap, so neither selector can trip this in practice.
+    # jaccard auto estimates it (HLL, rsd 2%) with a 0.9 margin under the
+    # cap and catches this error as a countjoin fallback.
     v_exact = distinct_h.count()
     if v_exact > _BITMAP_MAX_VOCAB:
-        raise ValueError(
+        raise _BitmapVocabOverflow(
             f"bitmap strategy requires a distinct-shingle vocabulary of at most "
             f"{_BITMAP_MAX_VOCAB} (got {v_exact}): the vocabulary is collected "
             f"to the driver and broadcast. Use strategy='auto' (picks a shuffle "
@@ -498,7 +509,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     threshold: float = 0.5,
     shingle_n: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """MinHash + LSH near-dup pairs, verified with exact shingle Jaccard.
 
@@ -521,11 +531,7 @@ def minhash_lsh_pairs(
     """
     # The shingle table feeds banding + both verification sides — stage
     # it once (see plans/staging.py).
-    base = stage(
-        _staged_shingle_hashes(docs, text_col, id_col, shingle_n),
-        "doc_id",
-        enabled=materialize,
-    )
+    base = stage(_staged_shingle_hashes(docs, text_col, id_col, shingle_n))
 
     banded = band_signatures(base, num_perm=num_perm, bands=bands)
 
@@ -564,7 +570,6 @@ def simhash_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    materialize: bool = True,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """SimHash near-dup pairs with Hamming distance ≤ ``max_hamming``.
@@ -616,10 +621,9 @@ def simhash_pairs(
                 F.lit(0).cast("long")
             )
         )
-    base = agg.select("doc_id", fp.alias("fp"))
     # The fingerprint table feeds both join sides — stage it once (see
     # plans/staging.py).
-    base = stage(base, "doc_id", enabled=materialize)
+    base = stage(agg.select("doc_id", fp.alias("fp")))
     banded = base.select(
         "doc_id",
         "fp",
@@ -961,7 +965,6 @@ def ngram_containment_pairs(
     threshold: float = 0.6,
     shingle_n: int = 3,
     strategy: str = "auto",
-    materialize: bool = True,
     max_shingle_df: int | None = None,
 ) -> DataFrame:
     """ALL pairs whose max directional shingle CONTAINMENT
@@ -1016,8 +1019,7 @@ def ngram_containment_pairs(
     scores, so the rounded boundary filter agrees).
     """
     base = _staged_shingle_hashes(docs, text_col, id_col, shingle_n)
-    base = _cap_shingle_df(base, max_shingle_df)
-    base = stage(base, "doc_id", enabled=materialize)
+    base = stage(_cap_shingle_df(base, max_shingle_df))
     tok = base.select("doc_id", F.size("sh").alias("n"), F.explode("sh").alias("h"))
 
     if strategy == "auto":
@@ -1084,7 +1086,6 @@ def minhash_containment_pairs(
     sketch_k: int = 64,
     hash_fn: str = "xxhash64",
     max_element_df: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Sketch-based directional-containment pairs — the 100 TB path that
     :func:`ngram_containment_pairs`'s docstring names (the exact
@@ -1132,9 +1133,7 @@ def minhash_containment_pairs(
     k = int(sketch_k)
 
     base = stage(
-        _staged_shingle_hashes(docs, text_col, id_col, shingle_n, hash_fn=hash_fn),
-        "doc_id",
-        enabled=materialize,
+        _staged_shingle_hashes(docs, text_col, id_col, shingle_n, hash_fn=hash_fn)
     )
     sized = base.select(
         "doc_id",

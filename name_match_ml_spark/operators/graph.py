@@ -111,11 +111,13 @@ def near_dup_graph(
         threshold=threshold,
         shingle_n=shingle_n,
     ).select("doc_a", "doc_b", "jaccard")
-    pairs = stage(pairs, "doc_a", enabled=materialize)
+    if materialize:
+        pairs = stage(pairs)
     if not with_components:
         return pairs
     comp = connected_components(pairs, max_iter=cc_max_iter)
-    comp = stage(comp, "id", enabled=materialize)
+    if materialize:
+        comp = stage(comp)
     return pairs, comp
 
 

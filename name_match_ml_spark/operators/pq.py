@@ -227,23 +227,23 @@ def _pq_fit(
     ``extra`` columns ride through ``subq`` untouched by training."""
     if m < 1 or k_codes < 1:
         raise ValueError("m >= 1 and k_codes >= 1")
-    from ..plans.staging import spread
+    from ..plans.staging import stage
 
     if codes is not None:
         codes_full = codes.select(
             F.col("vec_id").cast("long").alias("vec_id"), *extra, "q"
         )
         if not staged:
-            codes_full = spread(codes_full)
+            codes_full = stage(codes_full)
     else:
         if embeddings is None:
             raise ValueError("pq_codebooks: pass embeddings or codes")
-        codes_full = spread(
+        codes_full = stage(
             _global_codes(embeddings, id_col=id_col, vec_col=vec_col, scale=scale)
         )
-    # spread (not a plain checkpoint): a 1-split scan would cap every
+    # stage (not a plain checkpoint): a 1-split scan would cap every
     # seeding/Lloyd round below at 1 task (guide §6 parallelism floor)
-    subq = spread(_subvectors(codes_full, m=m, extra=extra))
+    subq = stage(_subvectors(codes_full, m=m, extra=extra))
 
     # Gonzalez farthest-point seeding, all subspaces per round at once:
     # seed = the min-vec_id sub-vector per s, each next center the
@@ -598,10 +598,10 @@ def ivfpq_topk(
     n_probe = min(n_probe, k_cells)
     from pyspark.sql import Window
 
-    from ..plans.staging import spread
+    from ..plans.staging import stage
 
     scale = _corpus_scale(corpus, vec_col=vec_col).localCheckpoint()
-    codes_full = spread(
+    codes_full = stage(
         _global_codes(corpus, id_col=id_col, vec_col=vec_col, scale=scale)
     )
 

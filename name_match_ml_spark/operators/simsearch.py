@@ -1007,12 +1007,12 @@ def kcenter_select(
     """
     if k < 1:
         raise ValueError("k >= 1")
-    from ..plans.staging import spread
+    from ..plans.staging import stage
     from .dedup import cosine_expr
 
-    # spread: a 1-split scan would cap every per-round argmax below at
+    # stage: a 1-split scan would cap every per-round argmax below at
     # 1 task (guide §6 parallelism floor)
-    base = spread(
+    base = stage(
         corpus.select(
             F.col(id_col).cast("long").alias("vec_id"),
             F.col(vec_col).cast("array<double>").alias("_v"),

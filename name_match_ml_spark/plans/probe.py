@@ -10,7 +10,7 @@ module, so each input to such a choice has one definition:
 * :func:`probe_side` — broadcast vs shuffle-hash for the ANN family's
   per-query probe table;
 * :func:`parallelism_floor` — round-robin re-spread of an under-parallel
-  scan (``plans/staging.spread``, ``sources/parquet.table``,
+  scan (``plans/staging.stage``, ``sources/parquet.table``,
   ``operators/profiling.profile_columns``).
 
 Mis-estimation only ever pushes toward the safe path: byte-derived row

@@ -2,24 +2,33 @@
 
 Several operators here are *multi-pass* over one derived table — the
 shingle table feeds the df-statistics pass, the candidate join, and the
-verification join in :mod:`..operators.dedup`; the prepared username /
-roster texts feed candidate generation, the dummy branch, and the final
-fan-out join in :mod:`..operators.matching`.  Left lazy, Catalyst gives
-each consumer its own copy of the lineage: the derivation (scans,
-normalization, higher-order shingling) re-executes once per consumer, and
-exchange reuse never applies because each consumer projects differently.
-Worse, ``explode``/``Generate`` over a derived array column re-evaluates
-the collapsed producing expression (measured ~10× on the sf0.1 shingle
-table).
+verification join in :mod:`..operators.dedup`; the near-dup pair graph
+feeds every graph-family consumer in :mod:`..operators.graph`; the
+quantized base table feeds every seeding/Lloyd round in
+:mod:`..operators.clustering` and :mod:`..operators.pq`.  Left lazy,
+Catalyst gives each consumer its own copy of the lineage: the derivation
+(scans, normalization, higher-order shingling) re-executes once per
+consumer, and exchange reuse never applies because each consumer
+projects differently.  Worse, ``explode``/``Generate`` over a derived
+array column re-evaluates the collapsed producing expression (measured
+~10× on the sf0.1 shingle table).
 
-:func:`stage` cuts the lineage with ``localCheckpoint(eager=False)``: the
-sub-plan runs exactly once (on first action), its rows are stored on the
-executors (memory, spilling to disk), and every consumer reads the stored
-rows.  A ``repartition`` by the key first spreads the stored blocks so
-downstream joins start parallel even when the producing scan had few
-input splits.  :func:`spread` is the eager variant for iterative
-consumers; its partition count comes from the one parallelism floor in
-:mod:`.probe`.
+:func:`stage` is the one way to cut that lineage: the parallelism floor
+(:func:`.probe.parallelism_floor`) and then an eager
+``localCheckpoint()``.  The sub-plan runs exactly once, during the call;
+its rows are stored on the executors (memory, spilling to disk), and
+every consumer's plan is a ``Scan ExistingRDD`` of the stored rows.  The
+floor matters for iterative consumers: a one-split scan would otherwise
+cap every per-round job over the stored rows at one task.
+
+Two things a lazy checkpoint behind a hash ``repartition`` by key looks
+like it buys and, under AQE (Spark 4.1), does not:
+
+* it is not lazy — the repartition's map stage runs when the checkpoint
+  is requested, one job at the call, as many as the eager checkpoint;
+* its keys are lost — the checkpoint reports ``UnknownPartitioning``, so
+  a later ``groupBy``/join on the key still plans an Exchange.  The
+  hash-by-key shuffle costs a shuffle and buys no co-partitioning.
 
 Scale notes (100 TB): this is the standard pattern of persisting the
 tokenized/featurized intermediate before a multi-pass similarity join —
@@ -36,31 +45,12 @@ from pyspark.sql import DataFrame
 
 from .probe import parallelism_floor
 
-__all__ = ["stage", "spread"]
+__all__ = ["stage"]
 
 
-def stage(df: DataFrame, *keys: str, enabled: bool = True) -> DataFrame:
-    """Materialize ``df`` once for multi-consumer plans.
-
-    ``keys``: repartition by these columns first (round-robin when empty)
-    so the stored blocks are spread across the cluster.  ``enabled=False``
-    returns ``df`` untouched — streaming plans and single-consumer
-    callers skip staging.
-    """
-    if not enabled:
-        return df
-    sc = df.sparkSession.sparkContext
-    n = sc.defaultParallelism
-    df = df.repartition(n, *keys) if keys else df.repartition(n)
-    return df.localCheckpoint(eager=False)
-
-
-def spread(df: DataFrame) -> DataFrame:
-    """Eager ``localCheckpoint`` behind the parallelism floor
-    (:func:`.probe.parallelism_floor`): an iterative consumer (k-means
-    seeding/Lloyd, PQ training, Gonzalez selection) runs every per-round
-    job over the stored rows, so a one-split scan would cap each round at
-    one task.  Results are unaffected: every consumer aggregates with
-    order-independent exact arithmetic (min/max/sum of ints and
-    structs)."""
+def stage(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` once, now, for a multi-consumer plan: the
+    parallelism floor, then an eager ``localCheckpoint``.  Consumers must
+    read the stored rows order-independently (the floor may round-robin
+    them)."""
     return parallelism_floor(df).localCheckpoint()

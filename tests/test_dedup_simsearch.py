@@ -244,6 +244,39 @@ def test_ngram_strategies_agree(spark, docs, strategy):
     assert got == want and want
 
 
+def test_ngram_auto_bitmap_overflow_falls_back_to_countjoin(spark, docs, monkeypatch):
+    """An HLL undercount that lets ``auto`` pick bitmap on a corpus whose
+    exact vocabulary is over the cap reruns the staged table as
+    countjoin instead of raising; a forced ``strategy="bitmap"`` still
+    raises."""
+    from name_match_ml_spark.operators import dedup
+
+    want = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in ngram_jaccard_pairs(docs, threshold=0.5, strategy="countjoin").collect()
+    }
+    tried = []
+    real_bitmap = dedup._bitmap_jaccard_pairs
+
+    def spy_bitmap(*args, **kwargs):
+        tried.append(1)
+        return real_bitmap(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "_bitmap_jaccard_pairs", spy_bitmap)
+    monkeypatch.setattr(dedup, "_BITMAP_MAX_VOCAB", 16)
+    # the vocabulary estimate reads 1: dense, far under the cap → bitmap
+    monkeypatch.setattr(dedup.F, "approx_count_distinct", lambda col, rsd=None: F.lit(1))
+
+    got = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in ngram_jaccard_pairs(docs, threshold=0.5).collect()
+    }
+    assert tried == [1]
+    assert got == want and want
+    with pytest.raises(ValueError, match="bitmap strategy requires"):
+        ngram_jaccard_pairs(docs, threshold=0.5, strategy="bitmap")
+
+
 def test_ngram_corpus_bitmap_equals_countjoin(spark):
     d = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     b = {

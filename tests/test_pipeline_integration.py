@@ -57,7 +57,7 @@ def test_training_data_pipeline_end_to_end(spark, monkeypatch):
     # 3. resolve near-dup clusters once, stage the map, share it between
     #    keeper selection and the leak-safe split
     pairs = ngram_jaccard_pairs(stage2, threshold=0.5, shingle_n=2)
-    clusters = stage(graph.connected_components(pairs), "id")
+    clusters = stage(graph.connected_components(pairs))
     keepers = select_keepers(stage2, clusters=clusters, quality_col="n_chars")
     split = leak_safe_split(stage2, clusters=clusters)
     train_ids = split.filter("split = 'train'").select("doc_id")

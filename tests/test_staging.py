@@ -1,0 +1,69 @@
+"""Plan staging (plans/staging.py): the one staging helper is eager, its
+consumers read the stored rows, and the n-gram join plans never reach
+back to the source files."""
+
+from __future__ import annotations
+
+import shutil
+
+import pytest
+from pyspark.sql import functions as F
+
+from name_match_ml_spark.operators.dedup import ngram_jaccard_pairs
+from name_match_ml_spark.plans import staging
+from name_match_ml_spark.plans.staging import stage
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_staging_exposes_one_function():
+    assert staging.__all__ == ["stage"]
+
+
+def test_stage_runs_during_the_call_and_cuts_the_source(spark, tmp_path):
+    """``stage`` starts its job(s) while it is called, returns a scan of
+    the stored rows, and two consumers' actions never read the source
+    file again — they still answer after the file is deleted."""
+    sc = spark.sparkContext
+    path = str(tmp_path / "src.parquet")
+    spark.range(300).withColumn("g", F.col("id") % 7).write.parquet(path)
+    src = spark.read.parquet(path)
+
+    group = "stage-eager-test"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        staged = stage(src.select("id", "g"))
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert "Scan ExistingRDD" in _plan(staged)
+
+    by_group = staged.groupBy("g").agg(F.count(F.lit(1)).alias("n"))
+    evens = staged.filter(F.col("id") % 2 == 0)
+    for consumer in (by_group, evens):
+        plan = _plan(consumer)
+        assert "Scan ExistingRDD" in plan
+        assert "FileScan" not in plan and "src.parquet" not in plan
+
+    shutil.rmtree(path)
+    assert sum(r["n"] for r in by_group.collect()) == 300
+    assert evens.count() == 150
+
+
+@pytest.mark.parametrize("strategy", ["auto", "prefix", "countjoin", "bitmap"])
+def test_ngram_jaccard_plan_reads_staged_shingles(spark, tmp_path, strategy):
+    """Every consumer of the shingle table reads the staged rows: the
+    returned plan has no ``FileScan`` of the ``documents`` parquet."""
+    path = str(tmp_path / "documents.parquet")
+    base = ["spark sql window join group sort " + " ".join(f"w{i}" for i in range(k, k + 6)) for k in range(10)]
+    rows = [(i, t) for i, t in enumerate(base)] + [(100 + i, base[i]) for i in range(3)]
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(path)
+    docs = spark.read.parquet(path)
+
+    pairs = ngram_jaccard_pairs(docs, threshold=0.5, strategy=strategy)
+    plan = _plan(pairs)
+    assert "Scan ExistingRDD" in plan
+    assert "FileScan" not in plan
+    assert {(0, 100), (1, 101), (2, 102)} <= {(r.doc_a, r.doc_b) for r in pairs.collect()}
