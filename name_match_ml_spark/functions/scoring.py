@@ -14,13 +14,23 @@ Spark decomposition (see ``operators/matching.py`` for assembly):
 * Everything that needs Python runs in **one** per-pair pass,
   :func:`pair_ratios_udf` — an Arrow-vectorised pandas UDF returning a
   struct of the five ratio components plus the phonetic term (Soundex/
-  Metaphone equality on first/last name, ``main.py:63-66,82-85``).  The
-  codes come from a bounded per-text memo in the worker, so each distinct
-  text is still coded once, and the flagship plan keeps a single Python
-  stage.
+  Metaphone equality on first/last name, ``main.py:63-66,82-85``), so
+  the flagship plan keeps a single Python stage.
 * :func:`phonetic_codes_udf` computes the codes per row for callers that
   want them as columns (``prepare_usernames``/``prepare_employees`` with
   ``codes=True``); the flagship pipeline does not use it.
+
+Memo: one dict per :func:`pair_ratios_udf` call (one Arrow batch) maps
+each distinct text of the batch to its match masks, token view and
+phonetic codes (:func:`_prepare`); a username or roster name that sits in
+many candidate pairs is prepared once.  Nothing outlives the call, as in
+the flagship, which keeps nothing across requests (``operators/
+matching.py``).  There is no memo of whole pairs: both candidate paths
+hand the UDF distinct text pairs (Spark deduplicates them), so a pair
+memo never hits within a call — instrumented workers counted 0 hits over
+6 ``match_corpus`` ops × 2 workers — and across calls it held up to
+about 1M entries of four strings and six ints per Python worker for a
+hit share on real traffic that nobody has measured.
 
 The pure-Python :func:`compute_match_score` mirrors the reference
 row-function exactly (including the dead ``number_match_bonus`` at
@@ -33,7 +43,6 @@ dot) — this engine scores them instead of crashing.
 from __future__ import annotations
 
 import re
-from functools import lru_cache
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
@@ -44,7 +53,18 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .similarity import metaphone, partial_ratio, ratio, soundex, token_set_ratio
+from .similarity import (
+    _match_masks,
+    _partial_ratio,
+    _ratio,
+    _token_set_ratio,
+    _token_view,
+    metaphone,
+    partial_ratio,
+    ratio,
+    soundex,
+    token_set_ratio,
+)
 
 __all__ = [
     "SCORE_THRESHOLD",
@@ -173,42 +193,34 @@ PAIR_RATIOS_SCHEMA = StructType(
 )
 
 
-@lru_cache(maxsize=1 << 16)
-def _phonetic_codes(s: str) -> tuple[str, str]:
-    """Memoized (Soundex, Metaphone) of one normalized text.  A worker
-    sees each username and each roster name in many candidate pairs;
-    the bounded memo codes every distinct text once."""
-    return soundex(s), metaphone(s)
+def _prepare(s: str) -> tuple:
+    """Everything the pair kernel reads of one text: its match masks, its
+    token view (``full_process`` token set, sorted token string and that
+    string's match masks) and its (Soundex, Metaphone) codes."""
+    return _match_masks(s), _token_view(s), soundex(s), metaphone(s)
 
 
-def _phonetic_term(u: str, f: str, l: str) -> int:
-    """Phonetic points of ``main.py:63-66,82-85``: Soundex/Metaphone
-    equality of the username with the last name (6/7) and with the first
-    name (3/3)."""
-    u_sdx, u_mp = _phonetic_codes(u)
-    f_sdx, f_mp = _phonetic_codes(f)
-    l_sdx, l_mp = _phonetic_codes(l)
+def _pair_components(
+    u: str, e: str, f: str, l: str, prepared
+) -> tuple[int, int, int, int, int, int]:
+    """The five ratios of ``main.py:56-61`` and the phonetic points of
+    ``main.py:63-66,82-85`` (Soundex/Metaphone equality of the username
+    with the last name, 6/7, and with the first name, 3/3) for one pair.
+    ``prepared(text)`` returns :func:`_prepare` of a text."""
+    u_pm, u_view, u_sdx, u_mp = prepared(u)
+    e_pm, e_view, _, _ = prepared(e)
+    _, f_view, f_sdx, f_mp = prepared(f)
+    _, l_view, l_sdx, l_mp = prepared(l)
     return (
+        _ratio(u, u_pm, e),
+        _partial_ratio(u, u_pm, e, e_pm),
+        _token_set_ratio(u_view, e_view),
+        _token_set_ratio(u_view, f_view),
+        _token_set_ratio(u_view, l_view),
         6 * (u_sdx == l_sdx)
         + 7 * (u_mp == l_mp)
         + 3 * (u_sdx == f_sdx)
-        + 3 * (u_mp == f_mp)
-    )
-
-
-@lru_cache(maxsize=1 << 20)
-def _pair_components(u: str, e: str, f: str, l: str) -> tuple[int, int, int, int, int, int]:
-    """Memoized per-pair Python bundle — real rosters repeat names (many
-    employees share a first or last name), and blocked candidate
-    generation re-presents the same (username, name) text pair across
-    blocks, so the hit rate in the hot path is substantial."""
-    return (
-        ratio(u, e),
-        partial_ratio(u, e),
-        token_set_ratio(u, e),
-        token_set_ratio(u, f),
-        token_set_ratio(u, l),
-        _phonetic_term(u, f, l),
+        + 3 * (u_mp == f_mp),
     )
 
 
@@ -222,9 +234,18 @@ def pair_ratios_udf(
     """Per-pair ratio components (``main.py:56-61``) and phonetic term
     (``main.py:63-66``), one Arrow batch at a time.  Inputs are
     pre-lowercased/trimmed columns; this is the only Python stage in the
-    flagship plan."""
+    flagship plan.  Each distinct text of the batch is prepared once
+    (:func:`_prepare`); the memo is dropped when the batch is done."""
+    memo: dict[str, tuple] = {}
+
+    def prepared(s: str) -> tuple:
+        p = memo.get(s)
+        if p is None:
+            p = memo[s] = _prepare(s)
+        return p
+
     rows = [
-        _pair_components(u, e, f, l)
+        _pair_components(u, e, f, l, prepared)
         for u, e, f, l in zip(
             username.fillna(""),
             employee_name.fillna(""),
@@ -249,5 +270,5 @@ def phonetic_codes_udf(s: pd.Series) -> pd.DataFrame:
     callers that want the codes as columns; scoring computes them inside
     :func:`pair_ratios_udf`."""
     return pd.DataFrame(
-        [_phonetic_codes(v) for v in s.fillna("")], columns=["sdx", "mp"]
+        [(soundex(v), metaphone(v)) for v in s.fillna("")], columns=["sdx", "mp"]
     )

@@ -18,8 +18,32 @@ re-implemented here from their published semantics:
 
 These run inside Arrow-vectorised pandas UDFs (see ``functions/scoring.py``)
 — never as row-at-a-time Python UDFs — and are unit-tested against golden
-rows from the reference's ``assets/example.png`` (see
+rows from the reference's ``assets/example.png`` and against a frozen copy
+of their first, straightforward implementation (see
 ``tests/test_similarity.py``).
+
+The flagship calls them once per candidate pair, so the ratios are built
+to spend as little as possible per pair while returning the same
+integers:
+
+* Each public function has a private twin that takes the per-text parts
+  ready-made — the match masks (``_ratio``, ``_partial_ratio``) or the
+  token view (``_token_set_ratio``: the ``full_process`` token set and
+  the sorted token string with its masks).  The pair UDF builds them once
+  per distinct text of an Arrow batch and reuses them for every pair the
+  text is in.
+* ``partial_ratio`` sweeps only windows that start and end on a
+  character of the shorter string: no other window beats the one
+  trimmed of its dead edge character, which has the same LCS and is
+  shorter.
+* The LCS sweep skips characters that do not occur in the other string
+  (their mask is 0 and the bit row would not change), and counts bits
+  with ``int.bit_count``.
+* ``token_set_ratio`` reads its LCS lengths off the common prefix of the
+  strings it compares: with no common token it is the ratio of the two
+  sorted token strings (ready-made per text), with one token set inside
+  the other it is 100, and otherwise one sweep covers only the two
+  differing tails.
 
 All functions are total: they return defined values for empty strings and
 strings with digits/punctuation, where the reference can crash
@@ -52,42 +76,42 @@ def _match_masks(s: str) -> dict[str, int]:
     return pm
 
 
-def _lcs_len(s1: str, s2: str) -> int:
-    """Longest-common-subsequence length via the Allison–Dix (1986)
-    bit-parallel row update — O(len2) big-int ops instead of an
-    O(len1·len2) cell DP.  Python's arbitrary-precision ints act as the
-    bit register, so no 64-char limit."""
-    if not s1 or not s2:
-        return 0
+def _lcs_len(s1: str, pm: dict[str, int], s2: str) -> int:
+    """Longest-common-subsequence length of ``s1`` (match masks ``pm``)
+    and ``s2`` via the Allison–Dix (1986) bit-parallel row update — O(len2)
+    big-int ops instead of an O(len1·len2) cell DP.  Python's
+    arbitrary-precision ints act as the bit register, so no 64-char limit.
+    A character of ``s2`` absent from ``s1`` has mask 0, which leaves the
+    row unchanged, so it is skipped."""
     m = len(s1)
     full = (1 << m) - 1
-    pm = _match_masks(s1)
     v = full
     for c in s2:
-        mask = pm.get(c, 0)
-        u = v & mask
-        v = ((v + u) | (v & ~mask)) & full
-    return m - bin(v).count("1")
+        mask = pm.get(c)
+        if mask:
+            v = ((v + (v & mask)) | (v & ~mask)) & full
+    return m - v.bit_count()
 
 
-def _ratio_float(s1: str, s2: str) -> float:
-    """python-Levenshtein ``ratio``: (lensum - indel_dist) / lensum.
-
-    Substitutions cost 2 (i.e. pure insert/delete distance), hence
-    equivalently ``2*LCS / lensum``.
-    """
-    lensum = len(s1) + len(s2)
+def _indel_ratio(lcs: int, len1: int, len2: int) -> int:
+    """python-Levenshtein ``ratio`` as thefuzz rounds it, from the LCS
+    length: (lensum - indel_dist) / lensum with substitutions costing 2,
+    i.e. ``2*LCS / lensum``; 100 for two empty strings."""
+    lensum = len1 + len2
     if lensum == 0:
-        return 1.0
-    return (2.0 * _lcs_len(s1, s2)) / lensum
+        return 100
+    return int(round(100 * ((2.0 * lcs) / lensum)))
+
+
+def _ratio(s1: str, pm1: dict[str, int], s2: str) -> int:
+    """:func:`ratio` of ``s1`` (match masks ``pm1``) and ``s2``."""
+    return _indel_ratio(_lcs_len(s1, pm1, s2), len(s1), len(s2))
 
 
 def ratio(s1: str, s2: str) -> int:
     """thefuzz ``fuzz.ratio`` parity (``main.py:56``): int(round(100*r))."""
     s1, s2 = str(s1), str(s2)
-    if not s1 and not s2:
-        return 100
-    return int(round(100 * _ratio_float(s1, s2)))
+    return _ratio(s1, _match_masks(s1), s2)
 
 
 def partial_ratio(s1: str, s2: str) -> int:
@@ -100,34 +124,49 @@ def partial_ratio(s1: str, s2: str) -> int:
     (e.g. ``partial_ratio("swati.patel", "tanvi patel") == 74`` via the
     substring ``"ti patel"``).
 
-    Complexity: O(m·n²) on short name-like strings (≤ a few dozen chars) —
-    one incremental LCS sweep per substring start.
+    Only windows that start and end on a character of the shorter string
+    are swept (see :func:`_partial_ratio_float`): a window whose first or
+    last character does not occur in the shorter string never beats the
+    window without that character, which is shorter and has the same LCS.
     """
     s1, s2 = str(s1), str(s2)
+    return _partial_ratio(s1, _match_masks(s1), s2, _match_masks(s2))
+
+
+def _partial_ratio(s1: str, pm1: dict[str, int], s2: str, pm2: dict[str, int]) -> int:
+    """:func:`partial_ratio` on texts whose match masks are already built."""
     if not s1 and not s2:
         return 100
     if not s1 or not s2:
         return 0
-    shorter, longer = (s1, s2) if len(s1) <= len(s2) else (s2, s1)
-    best = _partial_ratio_float(shorter, longer)
+    if len(s1) <= len(s2):
+        best = _partial_ratio_float(s1, pm1, s2)
+    else:
+        best = _partial_ratio_float(s2, pm2, s1)
     # rapidfuzz equal-length special case: try both directions.
     if best < 1.0 and len(s1) == len(s2):
-        best = max(best, _partial_ratio_float(longer, shorter))
+        best = max(best, _partial_ratio_float(s2, pm2, s1))
     return int(round(100 * best))
 
 
-def _partial_ratio_float(needle: str, haystack: str) -> float:
-    """Max indel ratio of ``needle`` vs any substring of ``haystack``.
+def _partial_ratio_float(needle: str, pm: dict[str, int], haystack: str) -> float:
+    """Max indel ratio of ``needle`` (match masks ``pm``) vs any substring
+    of ``haystack``.
 
     One Allison–Dix bit-parallel sweep per substring start gives
     LCS(needle, haystack[start:j]) for every end j — O(n²) big-int ops
-    total instead of an O(m·n²) cell DP.
+    total instead of an O(m·n²) cell DP.  Both ends of a window are
+    restricted to the haystack's *live* positions, those whose character
+    occurs in the needle.  Exact: a dead first character adds 1 to the
+    window length and 0 to the LCS, so the window one start later scores
+    at least as high; a dead last character leaves the bit row, hence the
+    LCS, unchanged while the length grows, so the ratio can only fall.
     """
     m, n = len(needle), len(haystack)
     full = (1 << m) - 1
-    pm = _match_masks(needle)
+    live = [(j, pm[c]) for j, c in enumerate(haystack) if c in pm]
     best = 0.0
-    for start in range(n):
+    for a, (start, _) in enumerate(live):
         # Even a full-LCS match from here can't beat `best` once the
         # window is forced long (needle must embed entirely): bound is
         # 2m/(m+w_min) with w_min = m when remaining ≥ m, else worse.
@@ -136,12 +175,11 @@ def _partial_ratio_float(needle: str, haystack: str) -> float:
         if (2.0 * min(m, remaining)) / (m + bound_w) <= best:
             break
         v = full
-        for w in range(1, remaining + 1):
-            mask = pm.get(haystack[start + w - 1], 0)
-            u = v & mask
-            v = ((v + u) | (v & ~mask)) & full
-            lcs = m - bin(v).count("1")
-            r = (2.0 * lcs) / (m + w)
+        # m + (window length) for the window ending at live position j.
+        offset = m + 1 - start
+        for j, mask in live[a:]:
+            v = ((v + (v & mask)) | (v & ~mask)) & full
+            r = (2.0 * (m - v.bit_count())) / (offset + j)
             if r > best:
                 best = r
         if best == 1.0:
@@ -158,6 +196,16 @@ def full_process(s: str) -> str:
     return _NON_WORD_RE.sub(" ", str(s)).lower().strip()
 
 
+def _token_view(s: str) -> tuple[frozenset[str], str, dict[str, int]]:
+    """What :func:`token_set_ratio` reads of one text: the token set of
+    the ``full_process``-ed text (empty exactly when that text is), the
+    sorted tokens joined by single spaces, and that string's match
+    masks."""
+    tokens = frozenset(full_process(s).split())
+    joined = " ".join(sorted(tokens))
+    return tokens, joined, _match_masks(joined)
+
+
 def token_set_ratio(s1: str, s2: str) -> int:
     """thefuzz ``fuzz.token_set_ratio`` parity (``main.py:58-61``).
 
@@ -165,23 +213,47 @@ def token_set_ratio(s1: str, s2: str) -> int:
     {sorted-intersection vs intersection+diff1, intersection vs
     intersection+diff2, the two combined strings}.
     """
-    p1, p2 = full_process(s1), full_process(s2)
-    if not p1 or not p2:
+    return _token_set_ratio(_token_view(s1), _token_view(s2))
+
+
+def _token_set_ratio(
+    view1: tuple[frozenset[str], str, dict[str, int]],
+    view2: tuple[frozenset[str], str, dict[str, int]],
+) -> int:
+    """:func:`token_set_ratio` on two :func:`_token_view` results.
+
+    thefuzz compares ``sect`` (the sorted intersection) with
+    ``combined_i = (sect + " " + diff_i).strip()`` for i = 1, 2, and the
+    two combined strings with each other.  ``sect`` is a prefix of both
+    combined strings, so its LCS with either is ``len(sect)``, and two
+    strings with a common prefix have the prefix length plus the LCS of
+    their rests.  That leaves three cases:
+
+    * no common token: both ``sect`` ratios are 0 and the combined
+      strings are the two joined token strings;
+    * one token set inside the other: one combined string is ``sect``
+      itself, a ratio of 100;
+    * otherwise the LCS of the two diff strings, one sweep.
+    """
+    tokens1, joined1, pm1 = view1
+    tokens2, joined2, _ = view2
+    if not tokens1 or not tokens2:
         return 0
-
-    tokens1, tokens2 = set(p1.split()), set(p2.split())
     intersection = tokens1 & tokens2
-
-    sorted_sect = " ".join(sorted(intersection))
-    sorted_1to2 = " ".join(sorted(tokens1 - tokens2))
-    sorted_2to1 = " ".join(sorted(tokens2 - tokens1))
-    combined_1to2 = (sorted_sect + " " + sorted_1to2).strip()
-    combined_2to1 = (sorted_sect + " " + sorted_2to1).strip()
-
+    if not intersection:
+        return _ratio(joined1, pm1, joined2)
+    if intersection == tokens1 or intersection == tokens2:
+        return 100
+    sect = " ".join(sorted(intersection))
+    diff1 = " ".join(sorted(tokens1 - tokens2))
+    diff2 = " ".join(sorted(tokens2 - tokens1))
+    n = len(sect)
+    len1 = n + 1 + len(diff1)
+    len2 = n + 1 + len(diff2)
     return max(
-        ratio(sorted_sect, combined_1to2),
-        ratio(sorted_sect, combined_2to1),
-        ratio(combined_1to2, combined_2to1),
+        _indel_ratio(n, n, len1),
+        _indel_ratio(n, n, len2),
+        _indel_ratio(n + 1 + _lcs_len(diff1, _match_masks(diff1), diff2), len1, len2),
     )
 
 

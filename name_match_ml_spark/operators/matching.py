@@ -18,9 +18,10 @@ Spark-first plan (vs the reference's O(U×E) row-at-a-time Python loop):
    broadcast, a *blocked* union of equi-joins (``plans/blocking.py``).
 3. **Scoring** — pattern short-circuit, split/initial bonuses, the
    weighted composite and the 100-cap are native Catalyst expressions; the
-   five per-pair ratios and the phonetic term (Soundex/Metaphone codes
-   memoized per text in the worker) run in one Arrow pandas UDF, the
-   plan's only Python stage.
+   five per-pair ratios and the phonetic term run in one Arrow pandas UDF,
+   the plan's only Python stage.  Each Arrow batch prepares every distinct
+   text it holds once (match masks, token set, Soundex/Metaphone codes)
+   and drops that memo when the batch is done.
 4. **Top-k** — one window (`row_number <= k`) per username partition; in
    Spark ≥3.5 the rank filter is pushed into the shuffle via
    WindowGroupLimit, so each partition keeps ≤ k rows per key.

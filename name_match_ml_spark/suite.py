@@ -958,7 +958,7 @@ def q_incremental_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = d.filter(F.col("doc_id") % 5 == 0)
     base = d.filter(F.col("doc_id") % 5 != 0)
     removed = base.filter(F.col("doc_id") % 11 == 0).select("doc_id")
-    pairs = near_dup_graph(base, materialize=False).localCheckpoint(eager=False)
+    pairs = near_dup_graph(base)
     cached = connected_components(pairs).localCheckpoint(eager=False)
     return incremental_cluster_update(
         base, delta, cached, base_pairs=pairs, removed=removed
@@ -997,7 +997,7 @@ def q_incremental_refresh_pipeline(spark: SparkSession, sf_dir: str) -> DataFram
         F.count(F.lit(1)).cast("long").alias("n_bands")
     )
 
-    pairs = near_dup_graph(base, materialize=False).localCheckpoint(eager=False)
+    pairs = near_dup_graph(base)
     cached = connected_components(pairs).localCheckpoint(eager=False)
     clusters = incremental_cluster_update(
         base, delta, cached, base_pairs=pairs, removed=removed
@@ -2070,10 +2070,11 @@ def q_pipeline_pack_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.text import gopher_quality
     from .operators.cleaning import boilerplate_spans, decontaminate_spans
     from .operators.packing import pack_attention_spans
+    from .plans.staging import stage
 
     d = table(spark, sf_dir, "documents")
     gq = gopher_quality(d, min_words=40, min_stopword_hits=1)
-    kept = d.join(gq.filter("passes").select("doc_id"), "doc_id").localCheckpoint(eager=False)
+    kept = stage(d.join(gq.filter("passes").select("doc_id"), "doc_id"))
     bp = boilerplate_spans(kept, span_words=10, max_docs=2, hash_fn="md5_60")
     bench = d.filter(F.col("doc_id") % 97 == 0)
     corpus = bp.filter(F.col("doc_id") % 97 != 0).select("doc_id", "text")
@@ -2100,6 +2101,7 @@ def q_pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from .operators.graph import near_dup_graph
     from .operators.packing import pack_documents
+    from .plans.staging import stage
 
     d = table(spark, sf_dir, "documents")
     # 1. rule-based quality gate (same thresholds as gopher_quality);
@@ -2108,7 +2110,7 @@ def q_pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    as the pair graph itself (measured: the gopher agg+join
     #    re-executed per consumer cost ~8s of the sf0.1 pipeline)
     gq = gopher_quality(d, min_words=40, min_stopword_hits=1)
-    kept = d.join(gq.filter("passes").select("doc_id"), "doc_id").localCheckpoint(eager=False)
+    kept = stage(d.join(gq.filter("passes").select("doc_id"), "doc_id"))
     # 2. near-dup dedup: ONE staged pair derivation + component map;
     #    at 100 TB the graph is materialized once and every consumer
     #    reads the stored rows
@@ -2123,7 +2125,7 @@ def q_pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    is removed outright and docs sharing any 4-gram with it drop;
     #    `corpus` feeds the flag derivation AND the clean join — stage it
     bench = d.filter(F.col("doc_id") % 97 == 0)
-    corpus = deduped.filter(F.col("doc_id") % 97 != 0).localCheckpoint(eager=False)
+    corpus = stage(deduped.filter(F.col("doc_id") % 97 != 0))
     flags = decontaminate_ngrams(corpus, bench, n=4, min_hits=1, hash_fn="md5_60")
     clean = corpus.join(flags.filter("NOT contaminated").select("doc_id"), "doc_id")
     # 4. deterministic mixture rebalance (seeded hash threshold).

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import csv
 import os
+import re
 
 import pandas as pd
 import pytest
@@ -282,3 +283,192 @@ def test_pair_udf_phonetic_term_matches_oracle():
     soundex_only = got[-2 * len(_SOUNDEX_ONLY):]
     assert soundex_only == [6, 3] * len(_SOUNDEX_ONLY), soundex_only
 
+
+# -- the pair kernel against a frozen copy of its first implementation -----
+#
+# The kernel in ``functions/similarity.py`` skips dead window starts,
+# reads LCS lengths of token-set strings off their common prefixes and
+# takes its inputs prepared once per text.  Every integer it returns must
+# equal what the straightforward implementation below returns; that
+# implementation is kept here verbatim as the oracle.
+
+
+def _old_match_masks(s):
+    pm = {}
+    for i, c in enumerate(s):
+        pm[c] = pm.get(c, 0) | (1 << i)
+    return pm
+
+
+def _old_lcs_len(s1, s2):
+    if not s1 or not s2:
+        return 0
+    m = len(s1)
+    full = (1 << m) - 1
+    pm = _old_match_masks(s1)
+    v = full
+    for c in s2:
+        mask = pm.get(c, 0)
+        u = v & mask
+        v = ((v + u) | (v & ~mask)) & full
+    return m - bin(v).count("1")
+
+
+def _old_ratio_float(s1, s2):
+    lensum = len(s1) + len(s2)
+    if lensum == 0:
+        return 1.0
+    return (2.0 * _old_lcs_len(s1, s2)) / lensum
+
+
+def _old_ratio(s1, s2):
+    s1, s2 = str(s1), str(s2)
+    if not s1 and not s2:
+        return 100
+    return int(round(100 * _old_ratio_float(s1, s2)))
+
+
+def _old_partial_ratio_float(needle, haystack):
+    m, n = len(needle), len(haystack)
+    full = (1 << m) - 1
+    pm = _old_match_masks(needle)
+    best = 0.0
+    for start in range(n):
+        remaining = n - start
+        bound_w = m if remaining >= m else remaining
+        if (2.0 * min(m, remaining)) / (m + bound_w) <= best:
+            break
+        v = full
+        for w in range(1, remaining + 1):
+            mask = pm.get(haystack[start + w - 1], 0)
+            u = v & mask
+            v = ((v + u) | (v & ~mask)) & full
+            lcs = m - bin(v).count("1")
+            r = (2.0 * lcs) / (m + w)
+            if r > best:
+                best = r
+        if best == 1.0:
+            break
+    return best
+
+
+def _old_partial_ratio(s1, s2):
+    s1, s2 = str(s1), str(s2)
+    if not s1 and not s2:
+        return 100
+    if not s1 or not s2:
+        return 0
+    shorter, longer = (s1, s2) if len(s1) <= len(s2) else (s2, s1)
+    best = _old_partial_ratio_float(shorter, longer)
+    if best < 1.0 and len(s1) == len(s2):
+        best = max(best, _old_partial_ratio_float(longer, shorter))
+    return int(round(100 * best))
+
+
+def _old_full_process(s):
+    return re.sub(r"(?u)\W", " ", str(s)).lower().strip()
+
+
+def _old_token_set_ratio(s1, s2):
+    p1, p2 = _old_full_process(s1), _old_full_process(s2)
+    if not p1 or not p2:
+        return 0
+    tokens1, tokens2 = set(p1.split()), set(p2.split())
+    intersection = tokens1 & tokens2
+    sorted_sect = " ".join(sorted(intersection))
+    sorted_1to2 = " ".join(sorted(tokens1 - tokens2))
+    sorted_2to1 = " ".join(sorted(tokens2 - tokens1))
+    combined_1to2 = (sorted_sect + " " + sorted_1to2).strip()
+    combined_2to1 = (sorted_sect + " " + sorted_2to1).strip()
+    return max(
+        _old_ratio(sorted_sect, combined_1to2),
+        _old_ratio(sorted_sect, combined_2to1),
+        _old_ratio(combined_1to2, combined_2to1),
+    )
+
+
+def _old_phonetic_term(u, f, l):
+    u_sdx, u_mp = soundex(u), metaphone(u)
+    f_sdx, f_mp = soundex(f), metaphone(f)
+    l_sdx, l_mp = soundex(l), metaphone(l)
+    return (
+        6 * (u_sdx == l_sdx)
+        + 7 * (u_mp == l_mp)
+        + 3 * (u_sdx == f_sdx)
+        + 3 * (u_mp == f_mp)
+    )
+
+
+def _old_pair_components(u, e, f, l):
+    return (
+        _old_ratio(u, e),
+        _old_partial_ratio(u, e),
+        _old_token_set_ratio(u, e),
+        _old_token_set_ratio(u, f),
+        _old_token_set_ratio(u, l),
+        _old_phonetic_term(u, f, l),
+    )
+
+
+def _pair_udf_rows(quads):
+    out = pair_ratios_udf.func(*(pd.Series([q[i] for q in quads], dtype=object) for i in range(4)))
+    return [tuple(int(x) for x in row) for row in out.itertuples(index=False)]
+
+
+# Separators, digits, letters the names share, and text that is not
+# ASCII: accented and title-case letters, a non-ASCII digit and a
+# no-break space (both \w / \W edge cases for full_process), and a
+# capital whose lowercase form is two characters long.
+_ALPHABET = "abcdeij._- 09" + "éüßǅ٣ İ"
+_short = st.text(alphabet=_ALPHABET, max_size=14)
+
+
+@st.composite
+def _equal_length_pair(draw):
+    n = draw(st.integers(min_value=0, max_value=12))
+    s = st.text(alphabet=_ALPHABET, min_size=n, max_size=n)
+    return draw(s), draw(s)
+
+
+@given(st.one_of(st.tuples(_short, _short), _equal_length_pair()))
+@settings(max_examples=400, deadline=None)
+def test_ratios_match_frozen_kernel(pair):
+    s1, s2 = pair
+    assert ratio(s1, s2) == _old_ratio(s1, s2)
+    assert partial_ratio(s1, s2) == _old_partial_ratio(s1, s2)
+    assert token_set_ratio(s1, s2) == _old_token_set_ratio(s1, s2)
+
+
+@given(st.lists(st.tuples(_short, _short, _short, _short), min_size=1, max_size=12))
+@settings(max_examples=150, deadline=None)
+def test_pair_udf_matches_frozen_kernel(quads):
+    # Texts repeat across the batch's pairs, as in a candidate batch, so
+    # the per-batch preparation is read back for later pairs.
+    quads = quads + [(u, f, e, l) for u, e, f, l in quads]
+    assert _pair_udf_rows(quads) == [_old_pair_components(*q) for q in quads]
+
+
+def test_pair_udf_matches_frozen_kernel_on_fixture():
+    """Every (username, employee) text pair of the committed fixture's
+    cross product, normalized as the flagship normalizes them."""
+    with open(FIXTURE_EMPLOYEES) as f:
+        emps = [(r["First_Name"], r["Last_Name"]) for r in csv.DictReader(f)]
+    with open(FIXTURE_USERNAMES) as f:
+        unames = [r["username"] for r in csv.DictReader(f)]
+    quads = [
+        tuple(x.lower().strip() for x in (u, f"{first} {last}", first, last))
+        for u in unames
+        for first, last in emps
+    ]
+    assert len(quads) == len(unames) * len(emps) > 3000
+    assert _pair_udf_rows(quads) == [_old_pair_components(*q) for q in quads]
+
+
+@pytest.mark.parametrize(
+    "a,b", [(123, "123"), (12.5, "12 5"), (None, "none"), ("john", 7), (0, 0)]
+)
+def test_public_ratios_coerce_with_str(a, b):
+    sa, sb = str(a), str(b)
+    assert ratio(a, b) == ratio(sa, sb) == _old_ratio(sa, sb)
+    assert partial_ratio(a, b) == partial_ratio(sa, sb) == _old_partial_ratio(sa, sb)
+    assert token_set_ratio(a, b) == token_set_ratio(sa, sb) == _old_token_set_ratio(sa, sb)
