@@ -73,65 +73,37 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     threshold: float = 0.7,
     shingle_n: int = 2,
-    strategy: str = "auto",
     max_shingle_df: int | None = None,
 ) -> DataFrame:
     """ALL pairs with word-``shingle_n``-gram-shingle Jaccard ≥ ``threshold``
-    — exact and lossless (requires ``threshold > 0``), via one of two
-    strategies whose costs dominate on opposite corpus shapes:
+    — exact and lossless (requires ``threshold > 0``), via one fused
+    count-join: explode distinct shingle hashes, narrow self-equi-join on
+    the hash, and ``groupBy(pair).count()`` *is* |A∩B| (map-side partial
+    aggregation collapses the join output before the wire).  Before the
+    aggregate, the PPJoin length filter ``min(n_a,n_b) ≥ t·max(n_a,n_b)``
+    drops pairs that cannot reach ``t`` (|A∩B| ≤ min ⇒ J ≤ min/max).  The
+    score is integer arithmetic, ``inter / (n_a + n_b − inter)``.  Work is
+    Σ_s df(s)² join rows, every row three longs through whole-stage
+    codegen; the call builds the plan and stages the shingle table, and
+    runs no other job.
 
-    * ``"prefix"`` — prefix-filtered set-similarity join (AllPairs/PPJoin
-      family): under a global rarest-first shingle order,
-      ``J(A,B) ≥ t ⇒ |A∩B| ≥ ⌈t·|A|⌉``, so matching pairs must share a
-      shingle within their first ``n - ⌈t·n⌉ + 1`` shingles of that
-      order.  Only prefix shingles become join keys; candidates pass the
-      PPJoin length filter ``min(n_a,n_b) ≥ t·max(n_a,n_b)`` and are
-      verified exactly with one ``array_intersect`` per pair.  Join
-      fan-out is Σ_s pdf(s)² over *prefix* document frequencies — ≈ the
-      true duplicate count on sparse-vocabulary corpora (web text, where
-      most shingles have df ≈ 1).
-    * ``"countjoin"`` — fused candidate+intersection: explode distinct
-      shingle hashes, narrow self-equi-join on the hash, and
-      ``groupBy(pair).count()`` *is* |A∩B| (map-side partial aggregation
-      collapses the join output before the wire).  Work is Σ_s df(s)²
-      over full frequencies, but every row is three longs through
-      whole-stage codegen — cheaper than prefix+verify on
-      dense-vocabulary corpora where prefixes stop pruning.
-    * ``"bitmap"`` — chunk-pair GEMM over vocabulary indicator vectors:
-      when the distinct-shingle vocabulary V is small, each doc is a
-      V-bit set-membership vector and |A∩B| for a whole block of pairs
-      is ONE ``float32`` matrix product (exact: counts ≤ 2²⁴).  Reuses
-      the :func:`embedding_near_dup` blocking (chunk-pair equi-join, no
-      cartesian node, one BLAS call per block task).  This is the
-      regime where countjoin is at its WORST — dense vocab means
-      Σdf(s)² approaches V·(N/V·avg_n)² — while the GEMM does the same
-      arithmetic at BLAS throughput.  Only eligible when a
-      chunk×V block fits a task (V ≤ ~16k), and only *faster* at
-      EXTREME density (mean df approaching N: Σdf² → V·N² shuffled join
-      rows vs N²·V BLAS flops, and a shuffled row costs ~50× a flop; at
-      moderate density the two tie — measured 2.8 s vs 2.7 s on the
-      sf0.1 corpus).  Web-scale vocabularies take the other paths.
-    * ``"auto"`` — one aggregate over the (tiny) shingle df table picks:
-      mean df ≥ N/4 with vocab ≤ 16384 ⇒ bitmap; mean df ≥ 16 ⇒
-      countjoin; else prefix.  Runs eagerly at plan-build time; the
-      stats pass reads the staged shingle table, so it costs one scan of
-      stored longs.  If the exact vocabulary then overruns bitmap's cap
-      (an HLL undercount), auto reruns the same table as countjoin.
+    Prefix filtering (AllPairs/PPJoin) pays only where rare shingles
+    prune; the sf0.001-sf0.1 documents corpora have dense vocabularies
+    (mean shingle df 28-276) where it does not, so there is one plan.
 
     The shingle table is staged once (:func:`..plans.staging.stage`) —
-    every strategy consumes it 2-3 times, and re-deriving it per consumer
-    re-runs the higher-order shingling per pass (measured ~10× on sf0.1;
-    see staging.py).
+    it feeds both join sides, and re-deriving it per consumer re-runs
+    the higher-order shingling per pass (measured ~10× on sf0.1; see
+    staging.py).
 
-    Shared scale properties (100 TB): shuffles carry only longs —
-    ``(doc_id, n, hash)`` streams, id pairs, and (prefix path) shingle
-    arrays for the few deduped candidates; hot shingles/prefixes are
-    split by AQE skew-join; 64-bit ``xxhash64`` shingle hashing makes
+    Scale properties (100 TB): shuffles carry only longs —
+    ``(doc_id, n, hash)`` streams and id pairs; hot shingles are split
+    by AQE skew-join; 64-bit ``xxhash64`` shingle hashing makes
     cross-doc collisions ~2⁻⁶⁴ per pair.  At extreme scale the standard
     *approximate* knob is ``max_shingle_df``: shingles whose document
     frequency exceeds the cap (boilerplate n-grams — the Σdf² pair
-    bombs) are dropped from every doc's shingle SET before any strategy
-    runs, and sizes are recomputed over the surviving shingles, so the
+    bombs) are dropped from every doc's shingle SET before the join,
+    and sizes are recomputed over the surviving shingles, so the
     result is exact Jaccard over the capped universe (the same move
     :mod:`..plans.blocking` makes on hot join keys).  Default ``None``
     keeps this operator the oracle-exact baseline
@@ -139,128 +111,31 @@ def ngram_jaccard_pairs(
     """
     base = _staged_shingle_hashes(docs, text_col, id_col, shingle_n)
     base = stage(_cap_shingle_df(base, max_shingle_df))
-    tok = base.select(
-        "doc_id",
-        F.size("sh").alias("n"),
-        F.explode("sh").alias("h"),
-    )
-
-    jaccard_of = lambda inter, sz: (  # noqa: E731
-        inter.cast("double") / (sz - inter)
-    ).alias("jaccard")
-
-    auto = strategy == "auto"
-    if auto:
-        # One partial-combining pass (count + HLL distinct) instead of a
-        # full groupBy(h) shuffle of the df table: the stats job exists
-        # only to pick a strategy, all strategies return IDENTICAL rows
-        # (pinned by test_ngram_strategies_agree), so an approximate
-        # vocabulary size is exactly as good as the exact one — and at
-        # corpus scale the df table is billions of rows while the HLL
-        # sketch is one row per map task (optimization round 10, guide
-        # §2.3 "aggregate before you shuffle").
-        row = tok.agg(
-            F.count(F.lit(1)).alias("t"),
-            # rsd 2%: the estimate gates the bitmap path's hard vocab cap
-            # below, so the sketch must be tight enough that the safety
-            # margin is many standard deviations wide.
-            F.approx_count_distinct("h", 0.02).alias("v"),
-        ).first()
-        v = row["v"] or 0
-        m = (row["t"] / v) if v else 0.0
-        dense = m >= 16
-        # 0.9 margin on the HLL estimate (≈5σ at rsd 2%): an undercount
-        # on a corpus whose true vocabulary sits just above
-        # _BITMAP_MAX_VOCAB should not auto-select bitmap, whose
-        # point-of-use guard exact-counts and raises (ADVICE r10); one
-        # that slips past the margin falls back to countjoin below.  The
-        # margin only moves the bitmap/countjoin boundary — all
-        # strategies return identical rows (test_ngram_strategies_agree).
-        if dense and v <= _BITMAP_MAX_VOCAB * 0.9 and m >= base.count() / 4.0:
-            strategy = "bitmap"
-        else:
-            strategy = "countjoin" if dense else "prefix"
-
-    if strategy == "bitmap":
-        try:
-            return _bitmap_jaccard_pairs(base, threshold)
-        except _BitmapVocabOverflow:
-            if not auto:
-                raise
-            strategy = "countjoin"  # same staged table, shuffle plan
-
-    if strategy == "countjoin":
-        a = tok.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"), "h")
-        b = tok.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"), "h")
-        return (
-            a.join(b, "h")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            # length filter: |A∩B| ≤ min ⇒ J ≤ min/max — prune pre-agg
-            .filter(
-                F.least(F.col("n_a"), F.col("n_b"))
-                >= threshold * F.greatest(F.col("n_a"), F.col("n_b"))
-            )
-            .groupBy("doc_a", "doc_b", "n_a", "n_b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-            .select(
-                "doc_a",
-                "doc_b",
-                jaccard_of(F.col("inter"), F.col("n_a") + F.col("n_b")),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
-    if strategy != "prefix":
-        raise ValueError(f"unknown strategy {strategy!r}")
-
-    # Global document frequency per shingle.  NOT broadcast: the
-    # distinct-shingle table grows with the corpus (billions of rows at
-    # 100 TB), so a forced broadcast is an executor OOM — the plain
-    # shuffle join on the shingle hash is the correct plan, and AQE
-    # still broadcasts it at small scale.
-    df_tbl = tok.groupBy("h").agg(F.count(F.lit(1)).alias("_df"))
-
-    # Rarest-first rank within each doc; keep the (n - ⌈t·n⌉ + 1)-prefix.
-    # The 1e-9 nudge only ever *lengthens* the prefix (safe direction)
-    # against float noise in t·n.
-    w_doc = Window.partitionBy("doc_id").orderBy(F.col("_df").asc(), F.col("h").asc())
-    prefix_len = F.col("n") - F.ceil(F.lit(threshold) * F.col("n") - F.lit(1e-9)) + 1
-    prefix = (
-        tok.join(df_tbl, "h")
-        .withColumn("_pr", F.row_number().over(w_doc))
-        .filter(F.col("_pr") <= prefix_len)
-        .select("doc_id", "n", "h")
-    )
-
-    a = prefix.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"), "h")
-    b = prefix.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"), "h")
-    cand = (
+    tok = base.select("doc_id", F.size("sh").alias("n"), F.explode("sh").alias("h"))
+    a = tok.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"), "h")
+    b = tok.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"), "h")
+    return (
         a.join(b, "h")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .filter(
             F.least(F.col("n_a"), F.col("n_b"))
             >= threshold * F.greatest(F.col("n_a"), F.col("n_b"))
         )
-        .select("doc_a", "doc_b")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-
-    sh_a = base.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sh_b = base.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    return (
-        cand.join(sh_a, "doc_a")
-        .join(sh_b, "doc_b")
+        .groupBy("doc_a", "doc_b", "n_a", "n_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
         .select(
             "doc_a",
             "doc_b",
-            F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).alias("inter"),
-            (F.size(F.col("sh_a")) + F.size(F.col("sh_b"))).alias("sz"),
+            (
+                F.col("inter").cast("double")
+                / (F.col("n_a") + F.col("n_b") - F.col("inter"))
+            ).alias("jaccard"),
         )
-        .select("doc_a", "doc_b", jaccard_of(F.col("inter"), F.col("sz")))
         .filter(F.col("jaccard") >= threshold)
     )
 
 
-_BITMAP_MAX_VOCAB = 16384
+_BITMAP_MAX_VOCAB = 16384  # vocabulary cap of the containment bitmap plan
 _BITMAP_CHUNK_ROWS = 1024  # best of {512, 1024, 2048, 4096} on local[32]
 # One shuffled+aggregated countjoin row buys ~this many indicator-GEMM
 # flops (measured, see ngram_containment_pairs auto): used to compare
@@ -268,56 +143,36 @@ _BITMAP_CHUNK_ROWS = 1024  # best of {512, 1024, 2048, 4096} on local[32]
 _BITMAP_FLOPS_PER_ROW = 500
 
 
-class _BitmapVocabOverflow(ValueError):
-    """The exact vocabulary exceeds ``_BITMAP_MAX_VOCAB``."""
+def _bitmap_set_pairs(base: DataFrame, threshold: float) -> DataFrame:
+    """Exact max-directional-containment ``|A∩B| / min(|A|,|B|)`` pairs
+    ≥ t via blocked indicator-matrix products (the ``"bitmap"`` strategy
+    of :func:`ngram_containment_pairs`; same chunk-pair blocking as
+    :func:`embedding_near_dup`).  Containment's countjoin alternative has
+    NO sound length prune (a tiny doc may be fully contained in a huge
+    one), so it pays the full Σdf(s)² join fan-out; on a small dense
+    vocabulary one GEMM per block is cheaper.
 
-
-def _bitmap_set_pairs(
-    base: DataFrame, threshold: float, measure: str = "jaccard"
-) -> DataFrame:
-    """Exact set-overlap pairs ≥ t via blocked indicator-matrix products
-    (the ``"bitmap"`` strategy of :func:`ngram_jaccard_pairs` and
-    :func:`ngram_containment_pairs`; same chunk-pair blocking as
-    :func:`embedding_near_dup`).
-
-    ``measure="jaccard"`` scores ``|A∩B| / |A∪B|``;
-    ``measure="containment"`` scores the max directional containment
-    ``|A∩B| / min(|A|,|B|)``.  Both share the identical intersection
-    GEMM — only the (elementwise) denominator differs, so containment
-    gets the BLAS path for free.  That matters more for containment
-    than for Jaccard: the countjoin alternative has NO sound length
-    prune for containment (a tiny doc may be fully contained in a huge
-    one), so it pays the full Σdf(s)² join fan-out that Jaccard's
-    ``min ≥ t·max`` prefilter cuts away.
-
-    Eager at plan build: one distinct-shingle collect (V ≤
+    Eager at plan build: one distinct-shingle count and collect (V ≤
     ``_BITMAP_MAX_VOCAB`` longs — broadcast like a hash-join build side)
     and one count for chunk sizing.  Each block task reconstructs its
     rows' indicator matrices with one vectorized ``searchsorted`` against
     the broadcast vocabulary and computes |A∩B| for every pair in the
     block with one float32 GEMM; the score is then exact integer
-    arithmetic in float64 — bit-identical to the countjoin paths'
-    ``inter/(n_a+n_b-inter)`` resp. ``inter/least(n_a,n_b)``.
+    arithmetic in float64 — bit-identical to the countjoin plan's
+    ``inter/least(n_a,n_b)``.
 
-    The in-kernel prefilter keeps a 1e-6 slack under ``threshold`` so
-    callers that round before filtering (containment rounds to 6 dp)
-    make the boundary call on the rounded value, identically to their
-    countjoin plan."""
-    if measure not in ("jaccard", "containment"):
-        raise ValueError(f"unknown measure {measure!r}")
-    score_col = "jaccard" if measure == "jaccard" else "containment"
+    The in-kernel prefilter keeps a 1e-6 slack under ``threshold`` so the
+    caller, which rounds to 6 dp before filtering, makes the boundary call
+    on the rounded value, identically to its countjoin plan."""
     spark = base.sparkSession
     distinct_h = base.select(F.explode("sh").alias("h")).distinct()
-    # Guard at point of use, not only in the auto selector, and BEFORE
-    # the collect: a caller forcing strategy="bitmap" on a wide-vocab
-    # corpus must get this error, not a driver OOM from an unbounded
-    # collect+broadcast.  The extra count re-scans only the distinct
-    # aggregate.  The containment auto exact-counts the vocabulary; the
-    # jaccard auto estimates it (HLL, rsd 2%) with a 0.9 margin under the
-    # cap and catches this error as a countjoin fallback.
+    # Guard BEFORE the collect: a caller forcing strategy="bitmap" on a
+    # wide-vocab corpus must get this error, not a driver OOM from an
+    # unbounded collect+broadcast.  The count re-scans only the distinct
+    # aggregate.
     v_exact = distinct_h.count()
     if v_exact > _BITMAP_MAX_VOCAB:
-        raise _BitmapVocabOverflow(
+        raise ValueError(
             f"bitmap strategy requires a distinct-shingle vocabulary of at most "
             f"{_BITMAP_MAX_VOCAB} (got {v_exact}): the vocabulary is collected "
             f"to the driver and broadcast. Use strategy='auto' (picks a shuffle "
@@ -352,18 +207,15 @@ def _bitmap_set_pairs(
         a = pdf[pdf["side"] == "a"]
         b = a if diagonal else pdf[pdf["side"] == "b"]
         if not len(a) or not len(b):
-            return pd.DataFrame({"doc_a": [], "doc_b": [], score_col: []}).astype(
-                {"doc_a": "int64", "doc_b": "int64", score_col: "float64"}
+            return pd.DataFrame({"doc_a": [], "doc_b": [], "containment": []}).astype(
+                {"doc_a": "int64", "doc_b": "int64", "containment": "float64"}
             )
         ida = a["doc_id"].to_numpy(dtype=np.int64)
         idb = b["doc_id"].to_numpy(dtype=np.int64)
         A, na = indicator(a["sh"], voc)
         B, nb = (A, na) if diagonal else indicator(b["sh"], voc)
         inter = A @ B.T  # exact set-intersection counts in float32
-        if measure == "jaccard":
-            denom = na[:, None] + nb[None, :] - inter
-        else:
-            denom = np.minimum(na[:, None], nb[None, :]).astype(np.float32)
+        denom = np.minimum(na[:, None], nb[None, :]).astype(np.float32)
         with np.errstate(invalid="ignore", divide="ignore"):
             J = inter.astype(np.float64) / denom
         i, j = np.nonzero(J >= threshold - 1e-6)
@@ -371,22 +223,16 @@ def _bitmap_set_pairs(
         i, j = i[keep], j[keep]
         lo = np.minimum(ida[i], idb[j])
         hi = np.maximum(ida[i], idb[j])
-        return pd.DataFrame({"doc_a": lo, "doc_b": hi, score_col: J[i, j]})
+        return pd.DataFrame({"doc_a": lo, "doc_b": hi, "containment": J[i, j]})
 
     out_schema = StructType(
         [
             StructField("doc_a", LongType()),
             StructField("doc_b", LongType()),
-            StructField(score_col, DoubleType()),
+            StructField("containment", DoubleType()),
         ]
     )
     return side_a.unionByName(side_b).groupBy("pid").applyInPandas(score_block, out_schema)
-
-
-def _bitmap_jaccard_pairs(base: DataFrame, threshold: float) -> DataFrame:
-    return _bitmap_set_pairs(base, threshold, "jaccard").filter(
-        F.col("jaccard") >= threshold
-    )
 
 
 def _shingles(words: Column, n: int = 2) -> Column:
@@ -994,12 +840,12 @@ def ngram_containment_pairs(
       prefilter cuts away.  Right on sparse web-scale vocabularies where
       df(s) ≈ 1.
     * ``"bitmap"`` — the chunk-pair indicator-GEMM of
-      :func:`_bitmap_set_pairs` with the containment denominator: on
-      dense small vocabularies with a bounded doc count the missing
-      prune makes this the winner — |A∩B| for a whole block of pairs is
-      one BLAS call instead of Σdf² shuffled join rows (measured
-      8.7 s → ~3 s on the sf0.1 documents corpus, where Jaccard's
-      pruned countjoin and bitmap tie).  But the GEMM pays O(N²·V)
+      :func:`_bitmap_set_pairs`: on dense small vocabularies with a
+      bounded doc count the missing prune makes this the winner —
+      |A∩B| for a whole block of pairs is one BLAS call instead of
+      Σdf² shuffled join rows (measured 8.7 s → ~3 s on the sf0.1
+      documents corpus, where a Jaccard bitmap plan only tied Jaccard's
+      length-pruned countjoin).  But the GEMM pays O(N²·V)
       regardless of how sparse the overlap is, so at 10× the docs the
       SAME vocabulary-eligible corpus flips decisively back to
       countjoin — which is why auto compares the two costs explicitly
@@ -1050,7 +896,7 @@ def ngram_containment_pairs(
 
     if strategy == "bitmap":
         return (
-            _bitmap_set_pairs(base, threshold, "containment")
+            _bitmap_set_pairs(base, threshold)
             .withColumn("containment", F.round("containment", 6))
             .filter(F.col("containment") >= threshold)
         )

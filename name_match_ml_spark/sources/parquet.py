@@ -12,6 +12,7 @@ already split and the floor is a no-op.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,18 +44,30 @@ _EXPRESSION_HEAVY_TABLES = frozenset(
     {"customer", "part", "events", "documents", "embeddings"}
 )
 
-__all__ = ["TABLES", "table", "register_views"]
+__all__ = ["TABLES", "table", "read_events_parquet", "register_views"]
+
+
+def read_events_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Batch read of an events parquet whose ``ts`` has shipped as either
+    timestamp[us] or INT64 TIMESTAMP(NANOS).  Spark's reader rejects the
+    latter at schema inference (``PARQUET_TYPE_ILLEGAL``); only then is
+    ``spark.sql.legacy.parquet.nanosAsLong`` set, for the session, and ts
+    read as long nanos.  A timestamp[us] corpus leaves the conf as it was."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PARQUET_TYPE_ILLEGAL":
+            raise
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(path)
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown corpus table {name!r}; expected one of {TABLES}")
     if name == "events":
-        # events.ts has shipped as either INT64 TIMESTAMP(NANOS) (which
-        # Spark's parquet reader rejects without nanosAsLong) or a plain
-        # timestamp[us]; branch on the landed dtype so both corpora load.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
+        # branch on the landed ts dtype so both events encodings load
+        df = read_events_parquet(spark, f"{sf_dir}/events.parquet")
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             # nanos as long; rebuild with exact integer division (micros) —

@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..sources.parquet import read_events_parquet
+
 __all__ = [
     "EVENTS_SCHEMA",
     "stream_events",
@@ -71,8 +73,7 @@ def stream_events(spark: SparkSession, events_dir: str) -> DataFrame:
     with ``ts`` as either INT64 TIMESTAMP(NANOS) or timestamp[us]; a one-off
     batch footer peek (plan-build time, not per-row) picks the matching
     stream schema, and the ts normalization mirrors ``sources/parquet.py``."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    landed = dict(spark.read.parquet(events_dir).dtypes).get("ts")
+    landed = dict(read_events_parquet(spark, events_dir).dtypes).get("ts")
     if landed == "bigint":
         raw = spark.readStream.schema(EVENTS_SCHEMA).parquet(events_dir)
         # exact integer division: double division loses precision at 1e18

@@ -3,6 +3,8 @@ brute-force oracles on small data, recall gates for the approximate paths."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -49,19 +51,40 @@ def test_exact_dedup_groups(docs):
             assert r.keeper_doc_id < 100
 
 
-def _shingle_jaccard(a: str, b: str, n: int) -> float:
-    def sh(t: str) -> set[str]:
-        w = t.lower().split()
-        if len(w) < n:
-            return set(w)
-        return {" ".join(w[i : i + n]) for i in range(len(w) - n + 1)}
+def _shingle_set(t: str, n: int) -> set[str]:
+    w = t.lower().split()
+    if len(w) < n:
+        return set(w)
+    return {" ".join(w[i : i + n]) for i in range(len(w) - n + 1)}
 
-    sa, sb = sh(a), sh(b)
+
+def _shingle_jaccard(a: str, b: str, n: int) -> float:
+    sa, sb = _shingle_set(a, n), _shingle_set(b, n)
     return len(sa & sb) / len(sa | sb)
 
 
-@pytest.mark.parametrize("n,threshold", [(1, 0.6), (2, 0.5)])
-def test_ngram_jaccard_matches_bruteforce(docs, n, threshold):
+@pytest.fixture(scope="module")
+def dense_docs(spark):
+    """Five-word vocabulary, so the mean bigram df is far over 16 (the sf
+    corpora read 28-276).  Holds pairs at Jaccard exactly 0.5: bigrams
+    {ab, bc, cd} vs {ab, bc, ce}, and {ab, bc} inside {ab, bc, cd, de},
+    where the length prefilter ``min ≥ t·max`` holds with equality."""
+    rng = np.random.default_rng(7)
+    texts = ["a b c d", "a b c e", "a b c", "a b c d e"]
+    texts += [" ".join(rng.choice(list("abcde"), size=rng.integers(3, 10))) for _ in range(120)]
+    return spark.createDataFrame(list(enumerate(texts)), ["doc_id", "text"])
+
+
+@pytest.mark.parametrize(
+    "corpus,n,threshold",
+    [
+        pytest.param("docs", 1, 0.6, id="1-0.6"),
+        pytest.param("docs", 2, 0.5, id="2-0.5"),
+        pytest.param("dense_docs", 2, 0.5, id="dense-2-0.5"),
+    ],
+)
+def test_ngram_jaccard_matches_bruteforce(request, corpus, n, threshold):
+    docs = request.getfixturevalue(corpus)
     got = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in ngram_jaccard_pairs(docs, threshold=threshold, shingle_n=n).collect()
@@ -77,6 +100,10 @@ def test_ngram_jaccard_matches_bruteforce(docs, n, threshold):
     assert set(got) == set(want)
     for k in want:
         assert got[k] == pytest.approx(want[k], abs=1e-12)
+    if corpus == "dense_docs":
+        assert want[(0, 1)] == want[(2, 3)] == threshold
+        df = Counter(g for t in rows.values() for g in _shingle_set(t, n))
+        assert sum(df.values()) / len(df) >= 16
 
 
 def test_minhash_lsh_finds_high_jaccard_pairs(docs):
@@ -227,67 +254,6 @@ def test_connected_components_empty(spark):
 
     empty = spark.createDataFrame([], "doc_a long, doc_b long")
     assert connected_components(empty).count() == 0
-
-
-@pytest.mark.parametrize("strategy", ["prefix", "countjoin", "bitmap"])
-def test_ngram_strategies_agree(spark, docs, strategy):
-    """All three exact strategies must produce identical pairs AND
-    identical jaccard doubles (same integer arithmetic)."""
-    want = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(docs, threshold=0.5, strategy="countjoin").collect()
-    }
-    got = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(docs, threshold=0.5, strategy=strategy).collect()
-    }
-    assert got == want and want
-
-
-def test_ngram_auto_bitmap_overflow_falls_back_to_countjoin(spark, docs, monkeypatch):
-    """An HLL undercount that lets ``auto`` pick bitmap on a corpus whose
-    exact vocabulary is over the cap reruns the staged table as
-    countjoin instead of raising; a forced ``strategy="bitmap"`` still
-    raises."""
-    from name_match_ml_spark.operators import dedup
-
-    want = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(docs, threshold=0.5, strategy="countjoin").collect()
-    }
-    tried = []
-    real_bitmap = dedup._bitmap_jaccard_pairs
-
-    def spy_bitmap(*args, **kwargs):
-        tried.append(1)
-        return real_bitmap(*args, **kwargs)
-
-    monkeypatch.setattr(dedup, "_bitmap_jaccard_pairs", spy_bitmap)
-    monkeypatch.setattr(dedup, "_BITMAP_MAX_VOCAB", 16)
-    # the vocabulary estimate reads 1: dense, far under the cap → bitmap
-    monkeypatch.setattr(dedup.F, "approx_count_distinct", lambda col, rsd=None: F.lit(1))
-
-    got = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(docs, threshold=0.5).collect()
-    }
-    assert tried == [1]
-    assert got == want and want
-    with pytest.raises(ValueError, match="bitmap strategy requires"):
-        ngram_jaccard_pairs(docs, threshold=0.5, strategy="bitmap")
-
-
-def test_ngram_corpus_bitmap_equals_countjoin(spark):
-    d = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    b = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(d, threshold=0.5, strategy="bitmap").collect()
-    }
-    cj = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(d, threshold=0.5, strategy="countjoin").collect()
-    }
-    assert b == cj and cj
 
 
 def test_simhash_md5_matches_python_oracle(docs):

@@ -181,9 +181,7 @@ def test_containment_catches_subset_jaccard_misses(spark):
     cont = ngram_containment_pairs(df, threshold=0.9, shingle_n=2).collect()
     assert len(cont) == 1
     assert (cont[0].doc_a, cont[0].doc_b, cont[0].containment) == (0, 1, 1.0)
-    jac = ngram_jaccard_pairs(
-        df, threshold=0.9, shingle_n=2, strategy="countjoin"
-    ).collect()
+    jac = ngram_jaccard_pairs(df, threshold=0.9, shingle_n=2).collect()
     assert jac == []  # Jaccard of a 20% subset is ~0.2 — invisible at 0.9
 
 

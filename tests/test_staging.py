@@ -6,10 +6,9 @@ from __future__ import annotations
 
 import shutil
 
-import pytest
 from pyspark.sql import functions as F
 
-from name_match_ml_spark.operators.dedup import ngram_jaccard_pairs
+from name_match_ml_spark.operators.dedup import _staged_shingle_hashes, ngram_jaccard_pairs
 from name_match_ml_spark.plans import staging
 from name_match_ml_spark.plans.staging import stage
 
@@ -52,18 +51,44 @@ def test_stage_runs_during_the_call_and_cuts_the_source(spark, tmp_path):
     assert evens.count() == 150
 
 
-@pytest.mark.parametrize("strategy", ["auto", "prefix", "countjoin", "bitmap"])
-def test_ngram_jaccard_plan_reads_staged_shingles(spark, tmp_path, strategy):
-    """Every consumer of the shingle table reads the staged rows: the
-    returned plan has no ``FileScan`` of the ``documents`` parquet."""
-    path = str(tmp_path / "documents.parquet")
+def _near_dup_docs(spark, path: str):
     base = ["spark sql window join group sort " + " ".join(f"w{i}" for i in range(k, k + 6)) for k in range(10)]
     rows = [(i, t) for i, t in enumerate(base)] + [(100 + i, base[i]) for i in range(3)]
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(path)
-    docs = spark.read.parquet(path)
+    return spark.read.parquet(path)
 
-    pairs = ngram_jaccard_pairs(docs, threshold=0.5, strategy=strategy)
+
+def test_ngram_jaccard_plan_reads_staged_shingles(spark, tmp_path):
+    """Every consumer of the shingle table reads the staged rows: the
+    returned plan has no ``FileScan`` of the ``documents`` parquet."""
+    docs = _near_dup_docs(spark, str(tmp_path / "documents.parquet"))
+
+    pairs = ngram_jaccard_pairs(docs, threshold=0.5)
     plan = _plan(pairs)
     assert "Scan ExistingRDD" in plan
     assert "FileScan" not in plan
     assert {(0, 100), (1, 101), (2, 102)} <= {(r.doc_a, r.doc_b) for r in pairs.collect()}
+
+
+def test_ngram_jaccard_call_starts_only_the_staging_jobs(spark, tmp_path):
+    """Building the Jaccard plan starts exactly the jobs that staging its
+    shingle table starts alone — no plan-time stats or count job."""
+    docs = _near_dup_docs(spark, str(tmp_path / "documents.parquet"))
+    sc = spark.sparkContext
+
+    def jobs_of(build, group: str) -> int:
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            build()
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    staged = jobs_of(
+        lambda: stage(_staged_shingle_hashes(docs, "text", "doc_id", 2)), "jaccard-stage-only"
+    )
+    called = jobs_of(
+        lambda: ngram_jaccard_pairs(docs, threshold=0.5, shingle_n=2), "jaccard-call"
+    )
+    assert staged > 0
+    assert called == staged

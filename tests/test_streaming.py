@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -21,6 +23,7 @@ from name_match_ml_spark.streaming.windows import (
 )
 
 SF = "/root/testdata/sf0.001"
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 @pytest.fixture(scope="module")
@@ -310,3 +313,30 @@ def test_foreachbatch_incremental_agg_state_equals_batch(
     assert state["batches"] >= 2, "expected multiple micro-batches"
     expect = agg_state_of(batch_events, ["user_id"], "value")
     assert _rows_set(state["df"].collect()) == _rows_set(expect.collect())
+
+
+def test_events_loaders_set_nanos_conf_only_for_nanos_ts(spark, events_dir, tmp_path):
+    """sf0.001 lands ``ts`` as timestamp[us]: loading it, batch or stream,
+    leaves ``nanosAsLong`` unset.  A TIMESTAMP(NANOS) copy of the same rows
+    sets it and loads to the same rows."""
+    prior = spark.conf.get(NANOS_AS_LONG, None)
+    try:
+        spark.conf.unset(NANOS_AS_LONG)
+        want = table(spark, SF, "events").orderBy("event_id").collect()
+        stream_events(spark, events_dir)
+        assert spark.conf.get(NANOS_AS_LONG, None) is None
+
+        ev = pq.read_table(f"{SF}/events.parquet")
+        i = ev.schema.get_field_index("ts")
+        pq.write_table(
+            ev.set_column(i, "ts", ev["ts"].cast(pa.timestamp("ns"))),
+            tmp_path / "events.parquet",
+        )
+        got = table(spark, str(tmp_path), "events").orderBy("event_id").collect()
+        assert spark.conf.get(NANOS_AS_LONG, None) == "true"
+        assert got == want
+    finally:
+        if prior is None:
+            spark.conf.unset(NANOS_AS_LONG)
+        else:
+            spark.conf.set(NANOS_AS_LONG, prior)
