@@ -143,55 +143,68 @@ _BITMAP_CHUNK_ROWS = 1024  # best of {512, 1024, 2048, 4096} on local[32]
 _BITMAP_FLOPS_PER_ROW = 500
 
 
-def _bitmap_set_pairs(base: DataFrame, threshold: float) -> DataFrame:
-    """Exact max-directional-containment ``|A∩B| / min(|A|,|B|)`` pairs
-    ≥ t via blocked indicator-matrix products (the ``"bitmap"`` strategy
-    of :func:`ngram_containment_pairs`; same chunk-pair blocking as
-    :func:`embedding_near_dup`).  Containment's countjoin alternative has
-    NO sound length prune (a tiny doc may be fully contained in a huge
-    one), so it pays the full Σdf(s)² join fan-out; on a small dense
-    vocabulary one GEMM per block is cheaper.
+def _chunk_pair_blocks(base: DataFrame, id_col: str, c: int) -> DataFrame:
+    """Rows of ``base`` replicated to the blocks of the chunk-pair table.
 
-    Eager at plan build: one distinct-shingle count and collect (V ≤
-    ``_BITMAP_MAX_VOCAB`` longs — broadcast like a hash-join build side)
-    and one count for chunk sizing.  Each block task reconstructs its
-    rows' indicator matrices with one vectorized ``searchsorted`` against
-    the broadcast vocabulary and computes |A∩B| for every pair in the
-    block with one float32 GEMM; the score is then exact integer
-    arithmetic in float64 — bit-identical to the countjoin plan's
-    ``inter/least(n_a,n_b)``.
-
-    The in-kernel prefilter keeps a 1e-6 slack under ``threshold`` so the
-    caller, which rounds to 6 dp before filtering, makes the boundary call
-    on the rounded value, identically to its countjoin plan."""
-    spark = base.sparkSession
-    distinct_h = base.select(F.explode("sh").alias("h")).distinct()
-    # Guard BEFORE the collect: a caller forcing strategy="bitmap" on a
-    # wide-vocab corpus must get this error, not a driver OOM from an
-    # unbounded collect+broadcast.  The count re-scans only the distinct
-    # aggregate.
-    v_exact = distinct_h.count()
-    if v_exact > _BITMAP_MAX_VOCAB:
-        raise ValueError(
-            f"bitmap strategy requires a distinct-shingle vocabulary of at most "
-            f"{_BITMAP_MAX_VOCAB} (got {v_exact}): the vocabulary is collected "
-            f"to the driver and broadcast. Use strategy='auto' (picks a shuffle "
-            f"plan for wide vocabularies) or raise max_shingle_df pruning."
-        )
-    vocab = np.sort(np.array([r[0] for r in distinct_h.collect()], dtype=np.int64))
-    bc_vocab = spark.sparkContext.broadcast(vocab)
-    c = max(1, -(-base.count() // _BITMAP_CHUNK_ROWS))
-    chunked = base.withColumn("chunk", F.pmod(F.xxhash64("doc_id"), F.lit(c)).cast("int"))
-    pairs = spark.createDataFrame(
+    ``id_col`` hashes each row into one of ``c`` chunks; every chunk pair
+    ``ca <= cb`` is one block, numbered ``pid = ca * c + cb``.  A row
+    reaches each block of its chunk as side ``"a"`` (via ``ca``) and each
+    off-diagonal block as side ``"b"`` (via ``cb``), through broadcast
+    equi-joins against the pair table (no cartesian-product node).  The
+    result carries ``pid``, the columns of ``base`` and ``side``; diagonal
+    blocks hold side ``"a"`` only."""
+    chunked = base.withColumn("chunk", F.pmod(F.xxhash64(id_col), F.lit(c)).cast("int"))
+    pairs = base.sparkSession.createDataFrame(
         [(a, b, a * c + b) for a in range(c) for b in range(a, c)],
         "ca int, cb int, pid int",
     )
     side_a = chunked.join(F.broadcast(pairs), chunked["chunk"] == pairs["ca"]).select(
-        "pid", "doc_id", "sh", F.lit("a").alias("side")
+        "pid", *base.columns, F.lit("a").alias("side")
     )
     side_b = chunked.join(
         F.broadcast(pairs), (chunked["chunk"] == pairs["cb"]) & (pairs["ca"] != pairs["cb"])
-    ).select("pid", "doc_id", "sh", F.lit("b").alias("side"))
+    ).select("pid", *base.columns, F.lit("b").alias("side"))
+    return side_a.unionByName(side_b)
+
+
+def _bitmap_set_pairs(base: DataFrame, threshold: float, n_docs: int | None = None) -> DataFrame:
+    """Exact max-directional-containment ``|A∩B| / min(|A|,|B|)`` pairs
+    ≥ t via blocked indicator-matrix products (the ``"bitmap"`` strategy
+    of :func:`ngram_containment_pairs`; the chunk-pair blocks of
+    :func:`_chunk_pair_blocks`, like :func:`embedding_near_dup`).
+    Containment's countjoin alternative has NO sound length prune (a tiny
+    doc may be fully contained in a huge one), so it pays the full
+    Σdf(s)² join fan-out; on a small dense vocabulary one GEMM per block
+    is cheaper.
+
+    Eager at plan build: one bounded collect of the distinct shingles (V
+    ≤ ``_BITMAP_MAX_VOCAB`` longs — broadcast like a hash-join build
+    side), and a count for chunk sizing unless the caller passes
+    ``n_docs``.  Each block task reconstructs its rows' indicator matrices
+    with one vectorized ``searchsorted`` against the broadcast vocabulary
+    and computes |A∩B| for every pair in the block with one float32 GEMM;
+    the score is then exact integer arithmetic in float64 — bit-identical
+    to the countjoin plan's ``inter/least(n_a,n_b)``.
+
+    The in-kernel prefilter keeps a 1e-6 slack under ``threshold`` so the
+    caller, which rounds to 6 dp before filtering, makes the boundary call
+    on the rounded value, identically to its countjoin plan."""
+    distinct_h = base.select(F.explode("sh").alias("h")).distinct()
+    # Bounded: a caller forcing strategy="bitmap" on a wide-vocab corpus
+    # gets this error, not a driver OOM from an unbounded collect+broadcast.
+    found = distinct_h.limit(_BITMAP_MAX_VOCAB + 1).collect()
+    if len(found) > _BITMAP_MAX_VOCAB:
+        raise ValueError(
+            f"bitmap strategy requires a distinct-shingle vocabulary of at most "
+            f"{_BITMAP_MAX_VOCAB} (got more): the vocabulary is collected "
+            f"to the driver and broadcast. Use strategy='auto' (picks a shuffle "
+            f"plan for wide vocabularies) or raise max_shingle_df pruning."
+        )
+    vocab = np.sort(np.array([r[0] for r in found], dtype=np.int64))
+    bc_vocab = base.sparkSession.sparkContext.broadcast(vocab)
+    if n_docs is None:
+        n_docs = base.count()
+    c = max(1, -(-n_docs // _BITMAP_CHUNK_ROWS))
 
     def indicator(rows: pd.Series, voc: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         lens = np.array([len(x) for x in rows], dtype=np.int64)
@@ -232,7 +245,8 @@ def _bitmap_set_pairs(base: DataFrame, threshold: float) -> DataFrame:
             StructField("containment", DoubleType()),
         ]
     )
-    return side_a.unionByName(side_b).groupBy("pid").applyInPandas(score_block, out_schema)
+    blocks = _chunk_pair_blocks(base, "doc_id", c)
+    return blocks.groupBy("pid").applyInPandas(score_block, out_schema)
 
 
 def _shingles(words: Column, n: int = 2) -> Column:
@@ -753,21 +767,9 @@ def embedding_near_dup(
         F.col(id_col).cast("long").alias("vid"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    spark = embeddings.sparkSession
     if n_chunks is None:
         n_chunks = max(1, -(-base.count() // _NEAR_DUP_CHUNK_ROWS))
     c = int(n_chunks)
-    chunked = base.withColumn("chunk", F.pmod(F.xxhash64("vid"), F.lit(c)).cast("int"))
-    pairs = spark.createDataFrame(
-        [(a, b, a * c + b) for a in range(c) for b in range(a, c)],
-        "ca int, cb int, pid int",
-    )
-    side_a = chunked.join(
-        F.broadcast(pairs), chunked["chunk"] == pairs["ca"]
-    ).select("pid", "vid", "v", F.lit("a").alias("side"))
-    side_b = chunked.join(
-        F.broadcast(pairs), (chunked["chunk"] == pairs["cb"]) & (pairs["ca"] != pairs["cb"])
-    ).select("pid", "vid", "v", F.lit("b").alias("side"))
     margin = threshold - 1e-6  # UDF prefilter; exact rounded filter below
 
     def score_block(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -794,7 +796,7 @@ def embedding_near_dup(
         return pd.DataFrame({"id_a": lo, "id_b": hi, "cosine": S[i, j]})
 
     return (
-        side_a.unionByName(side_b)
+        _chunk_pair_blocks(base, "vid", c)
         .groupBy("pid")
         .applyInPandas(score_block, _NEAR_DUP_PAIR_SCHEMA)
         .withColumn("cosine", F.round("cosine", 6))
@@ -868,6 +870,7 @@ def ngram_containment_pairs(
     base = stage(_cap_shingle_df(base, max_shingle_df))
     tok = base.select("doc_id", F.size("sh").alias("n"), F.explode("sh").alias("h"))
 
+    n = None  # doc count: the auto pick's, reused by the bitmap plan
     if strategy == "auto":
         row = (
             tok.groupBy("h")
@@ -896,7 +899,7 @@ def ngram_containment_pairs(
 
     if strategy == "bitmap":
         return (
-            _bitmap_set_pairs(base, threshold)
+            _bitmap_set_pairs(base, threshold, n)
             .withColumn("containment", F.round("containment", 6))
             .filter(F.col("containment") >= threshold)
         )

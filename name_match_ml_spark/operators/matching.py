@@ -25,8 +25,10 @@ Spark-first plan (vs the reference's O(U×E) row-at-a-time Python loop):
 4. **Top-k** — one window (`row_number <= k`) per username partition; in
    Spark ≥3.5 the rank filter is pushed into the shuffle via
    WindowGroupLimit, so each partition keeps ≤ k rows per key.
-5. **Labels + NOT-FOUND** — ``dense_rank`` + a ``CASE`` label; usernames
-   with no surviving match re-enter via left-anti join + sentinel union.
+5. **Threshold, labels, NOT-FOUND** — the threshold filters the top-k
+   rows, ``dense_rank`` + a ``CASE`` label the kept ones, and the fan-out
+   back to the username rows is a left join: a username with nothing
+   left gets the ``USER NOT FOUND`` sentinel from its NULL-extended row.
 
 Every call prepares both sides afresh and keeps nothing across calls: the
 reference reads the roster from each request's upload (``main.py:138-146``),
@@ -106,6 +108,12 @@ _COMPOSITE = (
 
 # main.py:46-47, 90
 _SCORE = f"CAST(IF({_PATTERN_HIT}, 100.0D, least({_COMPOSITE}, 100.0D)) AS DOUBLE)"
+
+# main.py:181-186; ties share a label via dense_rank (main.py:188-198).
+_LABEL = (
+    "CASE _dr WHEN 1 THEN 'HIGH CONFIDENCE' WHEN 2 THEN '2nd HIGH CONFIDENCE'"
+    " WHEN 3 THEN '3rd HIGH CONFIDENCE' WHEN 4 THEN 'NOT SURE' ELSE '' END"
+)
 
 # blocking=None auto-select: exact cross-scoring is allowed only when the
 # estimated (usernames × roster) pair count stays under this budget AND the
@@ -204,8 +212,9 @@ def match_usernames(
 
     Options: ``top_k`` matches kept per username (``main.py:169``),
     ``threshold`` the minimum score (``main.py:170``),
-    ``include_not_found`` emits the ``USER NOT FOUND`` sentinel for
-    usernames with no match (``main.py:172-179``), and ``blocking``
+    ``include_not_found`` makes the fan-out join a left join, so each
+    username row with no match gets one ``USER NOT FOUND`` sentinel
+    (``main.py:172-179``; off, it is an inner join), and ``blocking``
     forces the candidate path (``None`` auto-selects, below).
 
     Scale design — the expensive Python scoring runs once per **distinct
@@ -248,9 +257,9 @@ def match_usernames(
         blocking = not (e_broadcastable and u_rows * e_rows <= _CROSS_PAIR_BUDGET)
 
     # The per-row username side is checkpointed: it feeds the
-    # distinct-text derivation, the dummy branch and the final fan-out,
-    # and without the cut the scan + normalize lineage re-executes per
-    # consumer (same-session A/B: unstaged 8.6 s vs staged 6.5 s).
+    # distinct-text derivation and the final fan-out, and without the cut
+    # the scan + normalize lineage re-executes per consumer (same-session
+    # A/B: unstaged 8.6 s vs staged 6.5 s).
     # Eagerly: with a lazy checkpoint, AQE's concurrent stage jobs each
     # compute the lineage, the first to finish truncates it, and the
     # others' tasks report SQL metrics to accumulators already collected
@@ -301,64 +310,36 @@ def match_usernames(
         "u_norm", "emp_id", "employee_name AS emp_name", "score"
     )
 
-    if include_not_found:
-        # One dummy candidate per distinct username text (score -1, sorts
-        # last).  It wins rank 1 only when a username has no real candidate
-        # at all (possible under blocking), which funnels every username
-        # through the single window pass below — no anti-join, no second
-        # evaluation of the scored lineage (main.py:172-179 semantics).
-        dummy = u_texts.selectExpr(
-            "u_norm", "'' AS emp_id", "'' AS emp_name", "-1.0D AS score"
-        )
-        slim = slim.unionByName(dummy)
-
-    key = ["input_id", "username"] if "input_id" in u.columns else ["username"]
-    top = (
+    # main.py:169-170: head(k), then the threshold.  Scores sort descending
+    # within the window, so one filter keeps the same rows, and dense ranks
+    # over the kept rows equal those over the whole top-k.
+    per_text = (
         slim.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY u_norm ORDER BY score DESC, emp_id) AS _rn",
+            "*", "row_number() OVER (PARTITION BY u_norm ORDER BY score DESC, emp_id) AS _rn"
         )
-        .filter(f"_rn <= {top_k}")  # main.py:169 head(k)
-        .selectExpr(
-            "*",
-            "dense_rank() OVER (PARTITION BY u_norm ORDER BY score DESC) AS _dr",
-            "max(score) OVER (PARTITION BY u_norm) AS _max_score",
-        )
+        .filter((F.col("_rn") <= top_k) & (F.col("score") >= threshold))
+        .selectExpr("*", "dense_rank() OVER (PARTITION BY u_norm ORDER BY score DESC) AS _dr")
+        .selectExpr("*", "_dr AS match_rank", f"{_LABEL} AS match_type")
     )
-
-    # main.py:181-186; ties share a label via dense_rank (main.py:188-198)
-    labels = (
-        "CASE _dr WHEN 1 THEN 'HIGH CONFIDENCE' WHEN 2 THEN '2nd HIGH CONFIDENCE'"
-        " WHEN 3 THEN '3rd HIGH CONFIDENCE' WHEN 4 THEN 'NOT SURE' ELSE '' END"
-    )
-
-    if not include_not_found:
-        per_text = top.filter(F.col("score") >= threshold).selectExpr(  # main.py:170
-            "u_norm", "emp_id", "emp_name", "score", "_dr AS match_rank", f"{labels} AS match_type"
-        )
-    else:
-        # A username "has matches" iff its best (non-dummy) score clears
-        # the threshold; otherwise its rank-1 row morphs into the
-        # NOT-FOUND sentinel (main.py:172-179).  Dense ranks are
-        # unaffected by dropping the sub-threshold tail, since that tail
-        # always ranks below the kept rows.
-        per_text = (
-            top.withColumn("_nf", F.col("_max_score") < threshold)
-            .filter((F.col("score") >= threshold) | (F.col("_nf") & (F.col("_rn") == 1)))
-            .selectExpr(
-                "u_norm",
-                "IF(_nf, 'N/A', emp_id) AS emp_id",
-                "IF(_nf, 'USER NOT FOUND', emp_name) AS emp_name",
-                "IF(_nf, 0.0D, score) AS score",
-                "IF(_nf, CAST(NULL AS INT), _dr) AS match_rank",
-                f"IF(_nf, 'USER NOT FOUND', {labels}) AS match_type",
-            )
-        )
 
     # Fan the per-distinct-text result back out to every original username
     # row (≤ k rows per u_norm on the right side; AQE broadcasts when
-    # small).
-    return u.select(*key, "u_norm").join(per_text, "u_norm").drop("u_norm")
+    # small).  A left join keeps the usernames with nothing left, and their
+    # one NULL-extended row becomes the NOT-FOUND sentinel
+    # (main.py:172-179); match_rank is NULL exactly on that row.
+    key = ["input_id", "username"] if "input_id" in u.columns else ["username"]
+    return (
+        u.select(*key, "u_norm")
+        .join(per_text, "u_norm", "left" if include_not_found else "inner")
+        .selectExpr(
+            *key,
+            "nvl2(match_rank, emp_id, 'N/A') AS emp_id",
+            "nvl2(match_rank, emp_name, 'USER NOT FOUND') AS emp_name",
+            "nvl2(match_rank, score, 0.0D) AS score",
+            "match_rank",
+            "coalesce(match_type, 'USER NOT FOUND') AS match_type",
+        )
+    )
 
 
 def format_output(matches: DataFrame) -> DataFrame:

@@ -191,6 +191,39 @@ def test_golden_output_rows(spark, ref_dfs):
         assert r.match_type == label, (uname, emp_id)
 
 
+_SENTINEL = ("N/A", "USER NOT FOUND", 0.0, None, "USER NOT FOUND")
+
+
+@pytest.mark.parametrize("include_not_found", [True, False])
+@pytest.mark.parametrize("blocking", [False, True])
+def test_not_found_sentinel_per_input_row(spark, blocking, include_not_found):
+    """Every input row whose username keeps no match gets exactly one
+    sentinel row with ``include_not_found`` and none without it, on the
+    cross path and on the blocked path (where a username can have no
+    candidate at all); a matched username keeps its golden rows."""
+    emps, _ = _ref_rows("fixture")
+    no_match = ["", ".", "12345", "qzxv", "qzxv"]  # "qzxv" on two input rows
+    assert not any(_oracle_matches(emps, no_match[:4]).values())
+    usernames = spark.createDataFrame(
+        list(enumerate(no_match + ["swati.patel"])), "input_id long, username string"
+    )
+    employees = load_employees(spark, FIXTURE_EMPLOYEES)
+    got = {}
+    for r in match_usernames(
+        usernames, employees, blocking=blocking, include_not_found=include_not_found
+    ).collect():
+        got.setdefault(r.input_id, []).append(
+            (r.emp_id, r.emp_name, round(r.score, 6), r.match_rank, r.match_type)
+        )
+
+    want_nf = [_SENTINEL] if include_not_found else None
+    assert [got.get(i) for i in range(len(no_match))] == [want_nf] * len(no_match)
+    swati = got[len(no_match)]
+    assert ("7", "Swati Patel", 100.0, 1, "HIGH CONFIDENCE") in swati
+    assert ("60", "Tanvi Patel", 79.8, 2, "2nd HIGH CONFIDENCE") in swati
+    assert _SENTINEL not in swati
+
+
 def test_blocked_candidates_recall_on_matches(spark, source, ref_dfs):
     """Blocking must retain every pair the cross product scores ≥ threshold
     on the reference fixtures (the blocking keys subsume the scorer's own
@@ -250,6 +283,7 @@ def test_blocked_plan_has_one_python_stage(spark):
     assert plan.count("ArrowEvalPython") == 1
     assert "phonetic_codes_udf" not in plan
     assert "LeftAnti" not in plan
+    assert "Union" not in plan  # NOT-FOUND rows come from the fan-out left join
     assert not re.search(r"Aggregate\(keys?=\[_bkey#\d+\]", plan)
     assert plan.count("Exchange hashpartitioning(_bkey") == 2  # one window per side
     assert re.search(

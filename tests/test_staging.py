@@ -8,7 +8,12 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from name_match_ml_spark.operators.dedup import _staged_shingle_hashes, ngram_jaccard_pairs
+from name_match_ml_spark.operators.dedup import (
+    _BITMAP_MAX_VOCAB,
+    _staged_shingle_hashes,
+    ngram_containment_pairs,
+    ngram_jaccard_pairs,
+)
 from name_match_ml_spark.plans import staging
 from name_match_ml_spark.plans.staging import stage
 
@@ -70,25 +75,63 @@ def test_ngram_jaccard_plan_reads_staged_shingles(spark, tmp_path):
     assert {(0, 100), (1, 101), (2, 102)} <= {(r.doc_a, r.doc_b) for r in pairs.collect()}
 
 
+def _jobs_of(spark, build, group: str) -> int:
+    """The number of Spark jobs ``build()`` starts."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        build()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_ngram_jaccard_call_starts_only_the_staging_jobs(spark, tmp_path):
     """Building the Jaccard plan starts exactly the jobs that staging its
     shingle table starts alone — no plan-time stats or count job."""
     docs = _near_dup_docs(spark, str(tmp_path / "documents.parquet"))
-    sc = spark.sparkContext
 
-    def jobs_of(build, group: str) -> int:
-        sc.setLocalProperty("spark.jobGroup.id", group)
-        try:
-            build()
-            return len(sc.statusTracker().getJobIdsForGroup(group))
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-
-    staged = jobs_of(
-        lambda: stage(_staged_shingle_hashes(docs, "text", "doc_id", 2)), "jaccard-stage-only"
+    staged = _jobs_of(
+        spark,
+        lambda: stage(_staged_shingle_hashes(docs, "text", "doc_id", 2)),
+        "jaccard-stage-only",
     )
-    called = jobs_of(
-        lambda: ngram_jaccard_pairs(docs, threshold=0.5, shingle_n=2), "jaccard-call"
+    called = _jobs_of(
+        spark, lambda: ngram_jaccard_pairs(docs, threshold=0.5, shingle_n=2), "jaccard-call"
     )
     assert staged > 0
     assert called == staged
+
+
+def test_containment_bitmap_call_counts_each_thing_once(spark, tmp_path):
+    """On the auto→bitmap path, building the containment plan starts the
+    staging jobs, the auto pick's stats aggregate and doc count, and one
+    bounded vocabulary collect — the bitmap plan reuses the pick's doc
+    count and does not count its vocabulary before collecting it."""
+    docs = _near_dup_docs(spark, str(tmp_path / "documents.parquet"))
+    base = stage(_staged_shingle_hashes(docs, "text", "doc_id", 2))
+    tok = base.select("doc_id", F.size("sh").alias("n"), F.explode("sh").alias("h"))
+
+    def pick():
+        sq = F.col("count") * F.col("count")
+        tok.groupBy("h").count().select(F.count(F.lit(1)), F.sum(sq)).first()
+        base.count()
+
+    staged = _jobs_of(
+        spark, lambda: stage(_staged_shingle_hashes(docs, "text", "doc_id", 2)), "cont-stage"
+    )
+    picked = _jobs_of(spark, pick, "cont-pick")
+    vocab = _jobs_of(
+        spark,
+        lambda: base.select(F.explode("sh")).distinct().limit(_BITMAP_MAX_VOCAB + 1).collect(),
+        "cont-vocab",
+    )
+    out = []
+    called = _jobs_of(
+        spark,
+        lambda: out.append(ngram_containment_pairs(docs, threshold=0.5, shingle_n=2)),
+        "cont-call",
+    )
+    assert "FlatMapGroupsInPandas" in _plan(out[0])  # auto picked the bitmap plan
+    assert called == staged + picked + vocab
+    assert {(0, 100), (1, 101), (2, 102)} <= {(r.doc_a, r.doc_b) for r in out[0].collect()}
