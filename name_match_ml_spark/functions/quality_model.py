@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .text import md5_60, split_words
+
 __all__ = ["model_quality_scores", "QUALITY_WEIGHTS_GRID", "QUALITY_BIAS_GRID"]
 
 N_BUCKETS = 64
@@ -54,13 +56,9 @@ def model_quality_scores(
     """``(doc_id, n_words, score_grid, keep)`` — frozen-model quality
     logit per document and its sign gate, as one per-row int64 fold."""
     assert len(QUALITY_WEIGHTS_GRID) == N_BUCKETS
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != ""
-    )
+    words = split_words(F.col(text_col))
     wgt = F.array(*[F.lit(int(v)).cast("long") for v in QUALITY_WEIGHTS_GRID])
-    bucket = lambda w: (  # noqa: E731 — md5_60 % 64, nonneg so % == pmod
-        F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("long") % N_BUCKETS
-    )
+    bucket = lambda w: md5_60(w) % N_BUCKETS  # noqa: E731 — nonneg, so % == pmod
     score = F.aggregate(
         words,
         F.lit(QUALITY_BIAS_GRID).cast("long"),

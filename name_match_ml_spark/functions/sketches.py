@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .text import md5_60, split_words
+
 __all__ = [
     "kmv_distinct",
     "kmv_overlap",
@@ -155,9 +157,7 @@ def cms_term_counts(
         )
 
     words = docs.select(
-        F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
-        ).alias("_t")
+        F.explode(split_words(F.col(text_col))).alias("_t")
     )
     cells = (
         words.select(
@@ -481,13 +481,7 @@ def quantile_sketch_state(
         raise ValueError("k must be >= 2")
     rows = df.select(
         F.col(value_col).cast("long").alias("val"),
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string"))), 1, 15),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("hh"),
+        md5_60(F.concat(F.lit(salt), F.col(key_col).cast("string"))).alias("hh"),
     ).filter(F.col("val").isNotNull())
     n = rows.count()
     level = 0

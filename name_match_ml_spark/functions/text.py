@@ -39,6 +39,8 @@ __all__ = [
     "rrf_fuse",
     "blocklist_filter",
     "perplexity_buckets",
+    "split_words",
+    "md5_60",
 ]
 
 # Top stopwords per language — enough signal for a coarse heuristic ID.
@@ -55,8 +57,18 @@ STOPWORDS: dict[str, list[str]] = {
 BPE_PRETOKEN_RE = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]+"
 
 
-def _words(text: Column) -> Column:
+def split_words(text: Column) -> Column:
+    """The lowercase whitespace word array every text operator and its
+    oracle share: ``filter(split(lower(text), '\\s+'), w -> w != '')``
+    (order preserved, duplicates kept, no empty words)."""
     return F.filter(F.split(F.lower(text), r"\s+"), lambda w: w != "")
+
+
+def md5_60(col: Column) -> Column:
+    """The replayable 60-bit hash: the first 15 hex digits of ``md5(col)``
+    as a BIGINT (60 bits < 63, so the ANSI cast cannot overflow; the
+    DuckDB oracles write ``('0x' || substr(md5(x), 1, 15))::BIGINT``)."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def lang_id(text: Column, words: Column | None = None) -> Column:
@@ -68,7 +80,7 @@ def lang_id(text: Column, words: Column | None = None) -> Column:
     tie-break branch — pass ``words`` as a **materialized** word-array
     column (its own projection) to avoid re-splitting the text per
     reference (higher-order functions evaluate inline subtrees per use)."""
-    words = F.array_distinct(_words(text) if words is None else words)
+    words = F.array_distinct(split_words(text) if words is None else words)
     scores = {
         lang: F.size(F.array_intersect(words, F.array(*[F.lit(w) for w in sw])))
         for lang, sw in STOPWORDS.items()
@@ -94,7 +106,7 @@ def quality_score(text: Column, words: Column | None = None) -> Column:
     hot path (see :func:`lang_id`).
     """
     n = F.length(text)
-    words = _words(text) if words is None else words
+    words = split_words(text) if words is None else words
     n_words = F.greatest(F.size(words), F.lit(1))
 
     len_score = F.when(n >= 200, F.least(F.lit(1.0), F.lit(8000.0) / n)).otherwise(
@@ -121,7 +133,7 @@ def quality_score(text: Column, words: Column | None = None) -> Column:
 def token_counts(text: Column, words: Column | None = None) -> dict[str, Column]:
     """Whitespace-token and BPE-ish pre-token counts (both native)."""
     return {
-        "ws_tokens": F.size(_words(text) if words is None else words),
+        "ws_tokens": F.size(split_words(text) if words is None else words),
         "bpe_pretokens": F.size(F.regexp_extract_all(text, F.lit(BPE_PRETOKEN_RE), 0)),
     }
 
@@ -181,7 +193,7 @@ def gopher_quality(
     gates (intra-doc repetition has its own operator,
     :func:`..operators.cleaning.repetition_stats`).
     """
-    w = _words(F.col(text_col))
+    w = split_words(F.col(text_col))
     staged = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"), w.alias("_w"))
     n_words = F.size(F.col("_w"))
     denom = F.greatest(n_words, F.lit(1))
@@ -246,7 +258,7 @@ def tfidf_top_terms(
     """
     words = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(_words(F.col(text_col))).alias("term"),
+        F.explode(split_words(F.col(text_col))).alias("term"),
     )
     tf = words.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -303,7 +315,7 @@ def unigram_logprob_scores(
     """
     words = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(_words(F.col(text_col))).alias("term"),
+        F.explode(split_words(F.col(text_col))).alias("term"),
     )
     tf = words.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     cf = tf.groupBy("term").agg(F.sum("tf").alias("cf"))
@@ -354,7 +366,7 @@ def bigram_logprob_scores(
     the unigram scorer: ``sum(tf·ln p) / sum(tf)`` over vocabulary-sized
     terms per doc, rounded for cross-engine reproducibility.
     """
-    w = _words(F.col(text_col))
+    w = split_words(F.col(text_col))
     grams = F.when(
         F.size(w) >= 2,
         F.transform(
@@ -424,7 +436,7 @@ def backoff_logprob_scores(
     UNHINTED (billions of distinct n-grams at 100 TB — forcing a
     broadcast would OOM; AQE broadcasts when measured small).  N/V is
     the only forced broadcast (1 row, allowlisted)."""
-    w = _words(F.col(text_col))
+    w = split_words(F.col(text_col))
     tri = F.when(
         F.size(w) >= 3,
         F.transform(
@@ -452,7 +464,7 @@ def backoff_logprob_scores(
         .agg(F.count(F.lit(1)).alias("c2"))
     )
     u1 = (
-        train.select(F.explode(_words(F.col(text_col))).alias("w"))
+        train.select(F.explode(split_words(F.col(text_col))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c1"))
     )
@@ -663,7 +675,7 @@ def vocab_oov_stats(
     tf = (
         docs.select(
             F.col(id_col).alias("doc_id"),
-            F.explode(_words(F.col(text_col))).alias("w"),
+            F.explode(split_words(F.col(text_col))).alias("w"),
         )
         .groupBy("doc_id", "w")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -735,7 +747,7 @@ def inverted_index(
     wd = stage(
         docs.select(
             F.col(id_col).alias("doc_id"),
-            F.explode(F.array_distinct(_words(F.col(text_col)))).alias("term"),
+            F.explode(F.array_distinct(split_words(F.col(text_col)))).alias("term"),
         )
     )
     dfreq = wd.groupBy("term").agg(F.count(F.lit(1)).alias("df_count"))
@@ -783,7 +795,7 @@ def source_kl_divergence(
     """
     words = docs.select(
         F.col(group_col).alias("source"),
-        F.explode(_words(F.col(text_col))).alias("term"),
+        F.explode(split_words(F.col(text_col))).alias("term"),
     )
     tf = words.groupBy("source", "term").agg(F.count(F.lit(1)).alias("tf"))
     totals = tf.groupBy("source").agg(F.sum("tf").alias("t_s"))
@@ -842,7 +854,7 @@ def bm25_topk(
         raise ValueError("query_terms must be non-empty")
     words = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(_words(F.col(text_col))).alias("term"),
+        F.explode(split_words(F.col(text_col))).alias("term"),
     )
     dl = words.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     qtf = (
@@ -909,7 +921,7 @@ def tfidf_query_rank(
         raise ValueError("query_terms must be non-empty")
     words = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(_words(F.col(text_col))).alias("term"),
+        F.explode(split_words(F.col(text_col))).alias("term"),
     )
     n_docs = docs.select(F.col(id_col)).agg(F.count(F.lit(1)).alias("n_docs"))
     qtf = (
@@ -1109,7 +1121,7 @@ def blocklist_filter(
       bit-identically in any engine (no float division).
 
     Matching is whole-token over the corpus tokenization (lowercased
-    whitespace split — the same ``_words`` every text operator here
+    whitespace split — the same ``split_words`` every text operator here
     uses), NOT substring: "scunthorpe" never matches "horp".  The term
     lists are tiny compile-time literals folded into the row expression
     — at 100 TB this is pure map-side codegen at scan speed, no UDF, no
@@ -1123,7 +1135,7 @@ def blocklist_filter(
     (227-LoC pandas Flask app) has no corpus-filter surface; this
     extends the LLM-pipeline cleaning family (SURVEY §2.10).
     """
-    w = _words(F.col(text_col))
+    w = split_words(F.col(text_col))
     soft_arr = F.array(*[F.lit(t) for t in sorted(set(soft_terms))])
     severe_arr = F.array(*[F.lit(t) for t in sorted(set(severe_terms))])
     staged = docs.select(

@@ -48,6 +48,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import split_words
+
 __all__ = [
     "bpe_lexicon",
     "bpe_train",
@@ -87,9 +89,7 @@ def bpe_lexicon(
     makes the training set size explicit at 100 TB (rare-tail words
     contribute negligible pair mass; the cut is deterministic)."""
     words = docs.select(
-        F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
-        ).alias("wid")
+        F.explode(split_words(F.col(text_col))).alias("wid")
     )
     lex = words.groupBy("wid").agg(F.count(F.lit(1)).alias("freq"))
     if max_words is not None:
@@ -107,9 +107,7 @@ def _collect_lexicon(
     training, after which everything is bounded model state (Sennrich's
     lexicon formulation).  The collect is bounded by the LIMIT."""
     words = docs.select(
-        F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
-        ).alias("wid")
+        F.explode(split_words(F.col(text_col))).alias("wid")
     )
     lex = (
         words.groupBy("wid")
@@ -338,9 +336,7 @@ def replay_merges_over_docs(
     learned = {r["round"]: (r["sym_a"], r["sym_b"]) for r in merges.collect()}
     dw = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(
-            F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
-        ).alias("wpos", "wid"),
+        F.posexplode(split_words(F.col(text_col))).alias("wpos", "wid"),
     )
     allw = dw.select("wid").distinct()
     # Replay the merge list as ONE chained-fold projection over the

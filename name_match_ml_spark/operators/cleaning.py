@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import md5_60, split_words
+
 __all__ = [
     "decontaminate_ngrams",
     "decontaminate_spans",
@@ -60,22 +62,18 @@ __all__ = [
 ]
 
 
-def _words(text_col: str) -> Column:
-    return F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
-
-
 def _gram_hash(gram: Column, hash_fn: str) -> Column:
     if hash_fn == "xxhash64":
         return F.xxhash64(gram)
     if hash_fn == "md5_60":
-        return F.conv(F.substring(F.md5(gram), 1, 15), 16, 10).cast("long")
+        return md5_60(gram)
     raise ValueError(f"unknown hash_fn {hash_fn!r}")
 
 
 def _ngram_strings(text_col: str, n: int) -> Column:
     """Distinct word n-gram strings of ``text_col`` (empty array for docs
     shorter than ``n`` words)."""
-    w = _words(text_col)
+    w = split_words(F.col(text_col))
     grams = F.when(
         F.size(w) >= n,
         F.transform(
@@ -154,7 +152,7 @@ def repetition_stats(
     C4-style repetitive-document filter.  Pure per-row expressions —
     no shuffle, no Python; whole-stage codegen end to end.
     """
-    w = _words(text_col)
+    w = split_words(F.col(text_col))
     grams = F.when(
         F.size(w) >= n,
         F.transform(
@@ -219,7 +217,7 @@ def _doc_spans(
     contiguous ``span_words``-word windows (the C4/CCNet "line" unit for
     a corpus with no sentence boundaries), with the span's join hash.
     Shared by :func:`span_dedup` and :func:`boilerplate_spans`."""
-    w = _words(text_col)
+    w = split_words(F.col(text_col))
     n_spans = F.ceil(F.size(w) / F.lit(float(span_words))).cast("int")
     return (
         docs.select(F.col(id_col).alias("doc_id"), w.alias("_w"), n_spans.alias("_n"))
@@ -425,7 +423,7 @@ def exact_substring_spans(
 
     if gram_words < 1 or min_count < 2:
         raise ValueError("gram_words >= 1 and min_count >= 2")
-    w = _words(text_col)
+    w = split_words(F.col(text_col))
     grams = (
         docs.select(F.col(id_col).alias("doc_id"), w.alias("_w"), F.size(w).alias("_n"))
         .filter(F.col("_n") >= gram_words)
@@ -1132,7 +1130,7 @@ def decontaminate_spans(
     co-partitioned with the word table, and reassembly is one bounded
     ``collect_list`` per doc.
     """
-    w = _words(text_col)
+    w = split_words(F.col(text_col))
     base = corpus.select(
         F.col(id_col).alias("doc_id"), w.alias("_w"), F.size(w).alias("_nw")
     )
@@ -1226,7 +1224,7 @@ def unimax_mixture(
 
     sizes = (
         docs.select(
-            F.col(strata_col).alias("stratum"), F.size(_words(text_col)).alias("_t")
+            F.col(strata_col).alias("stratum"), F.size(split_words(F.col(text_col))).alias("_t")
         )
         .groupBy("stratum")
         .agg(F.sum("_t").cast("long").alias("n_tokens"))

@@ -51,7 +51,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "grid_kmeans",
-    "grid_kmeans_model",
     "grid_ivf_topk",
     "cluster_balanced_sample",
     "GRID_KMEANS_ROUNDS",
@@ -69,25 +68,6 @@ def _sq_dist(a: Column, b: Column) -> Column:
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
-    )
-
-
-def _assign_to(qz: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest centroid per vector (``(vec_id, cid, dist)``; ties →
-    smallest cid) — one bounded k-row broadcast against the streaming
-    code table.  (Kept for API/tests; the fitted paths use the
-    zero-shuffle literal form :func:`_best_center_expr`.)"""
-    scored = qz.crossJoin(F.broadcast(cents)).select(
-        "vec_id", F.col("cid"), _sq_dist(F.col("q"), F.col("cv")).alias("dist")
-    )
-    return (
-        scored.groupBy("vec_id")
-        .agg(F.min(F.struct(F.col("dist"), F.col("cid"))).alias("_b"))
-        .select(
-            "vec_id",
-            F.col("_b.cid").alias("cid"),
-            F.col("_b.dist").alias("dist"),
-        )
     )
 
 
@@ -111,22 +91,40 @@ def _sqd_sql(a: str, b: str) -> str:
     )
 
 
-def _best_center_expr(q: str, centers: list[tuple[int, list[int]]]) -> Column:
-    """``struct(dist, cid)`` of the nearest literal centroid — the
-    map-side argmin that replaces the crossJoin+groupBy assignment:
-    ``array_min`` over ``struct(dist, cid)`` is the same
-    ``min(struct(dist, cid))`` ordering (ties → smallest cid), with the
-    centroids folded into the plan as literals so NO join, exchange, or
-    aggregate touches the corpus.  ``q`` is the SQL name of the code
-    column; the whole expression is one parsed SQL string (see
-    :func:`_vec_sql`)."""
-    return F.expr(
-        "array_min(array("
+def _center_dists_sql(
+    q: str, centers: list[tuple[int, list[int]]], dist: str = "dist"
+) -> str:
+    """SQL ``array<struct<{dist}, cid>>`` of the code column ``q``'s exact
+    distance to every literal centroid; struct order sorts by
+    ``(dist, cid)`` (ties → smallest cid)."""
+    return (
+        "array("
         + ",".join(
-            f"named_struct('dist', {_sqd_sql(q, _vec_sql(cv))}, 'cid', {int(cid)})"
+            f"named_struct('{dist}', {_sqd_sql(q, _vec_sql(cv))}, 'cid', {int(cid)})"
             for cid, cv in centers
         )
-        + "))"
+        + ")"
+    )
+
+
+def _best_center_expr(q: str, centers: list[tuple[int, list[int]]]) -> Column:
+    """``struct(dist, cid)`` of the nearest literal centroid — a map-side
+    ``array_min`` (ties → smallest cid), with the centroids folded into
+    the plan as literals so NO join, exchange, or aggregate touches the
+    corpus.  ``q`` is the SQL name of the code column; the whole
+    expression is one parsed SQL string (see :func:`_vec_sql`)."""
+    return F.expr(f"array_min({_center_dists_sql(q, centers)})")
+
+
+def _nearest_cells_expr(
+    q: str, centers: list[tuple[int, list[int]]], n_probe: int
+) -> Column:
+    """The ``n_probe`` nearest literal centroids of the code column
+    ``q``: ``array<struct<cdist, cid>>`` sorted ``(cdist, cid)`` asc and
+    sliced — the IVF probe of :func:`grid_ivf_topk` and
+    ``pq.ivfpq_topk``, map-side (no per-query window exchange)."""
+    return F.slice(
+        F.array_sort(F.expr(_center_dists_sql(q, centers, "cdist"))), 1, n_probe
     )
 
 
@@ -156,7 +154,10 @@ def _grid_kmeans_fit(
     centroid join/window from the corpus-sized stages.  Bit-identical
     to the pre-round-10 DataFrame formulation: distances, tie rules,
     Gonzalez order and the truncating centroid update are unchanged
-    (hash-checked against the same unrolled-CTE oracles)."""
+    (hash-checked against the same unrolled-CTE oracles).  ``codes``
+    injects a precomputed ``(vec_id, q)`` long-array code table instead
+    of quantizing ``embeddings`` per vector (``pq.ivfpq_topk`` trains on
+    the global-scale grid); ``staged`` marks it already checkpointed."""
     if k < 1:
         raise ValueError("k >= 1")
     from ..plans.staging import stage
@@ -174,7 +175,7 @@ def _grid_kmeans_fit(
             qz = stage(qz)
     else:
         if embeddings is None:
-            raise ValueError("grid_kmeans_model: pass embeddings or codes")
+            raise ValueError("_grid_kmeans_fit: pass embeddings or codes")
         from .simsearch import quantize_expr
 
         v = F.col(vec_col).cast("array<double>")
@@ -248,36 +249,6 @@ def _grid_kmeans_fit(
     return qz, centers
 
 
-def grid_kmeans_model(
-    embeddings: DataFrame | None = None,
-    *,
-    k: int = 10,
-    rounds: int = GRID_KMEANS_ROUNDS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codes: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Train the deterministic grid k-means and return ``(qz, centers)``
-    — the checkpointed quantized code table ``(vec_id, q)`` and the
-    final centroid table ``(cid, cv)`` (k rows, broadcastable).  Shared
-    by :func:`grid_kmeans` (assignments), :func:`grid_ivf_topk`
-    (inverted-list ANN over the same coarse quantizer), and
-    ``operators/pq.py::ivfpq_topk`` (coarse cells for IVFADC).
-
-    ``codes`` injects a precomputed ``(vec_id, q)`` long-array code
-    table instead of quantizing ``embeddings`` with the per-vector
-    device — IVFADC needs the GLOBAL-scale grid (``pq._global_codes``)
-    so residuals stay comparable across vectors; the seeding/Lloyd
-    machinery is identical either way."""
-    qz, centers = _grid_kmeans_fit(
-        embeddings, k=k, rounds=rounds, id_col=id_col, vec_col=vec_col, codes=codes
-    )
-    cdf = qz.sparkSession.createDataFrame(
-        [(cid, cv) for cid, cv in centers], "cid int, cv array<bigint>"
-    )
-    return qz, cdf
-
-
 def grid_kmeans(
     embeddings: DataFrame,
     *,
@@ -347,7 +318,7 @@ def grid_ivf_topk(
     """
     if n_probe < 1 or k < 1:
         raise ValueError("n_probe >= 1 and k >= 1")
-    from ..plans.probe import PROBE_BROADCAST_ROW_BUDGET, probe_side
+    from ..plans.probe import PROBE_BROADCAST_ROW_BUDGET, bounded_rows, probe_side
     from .simsearch import quantize_expr
 
     qz, centers = _grid_kmeans_fit(
@@ -371,29 +342,16 @@ def grid_ivf_topk(
             F.transform(qexpr, lambda x: x.cast("long")).alias("qq"),
         )
     # The probe table is |Q|·n_probe rows.  Byte-derived stats
-    # overestimate |Q| ~100× (code rows are wide arrays), so use a
-    # LIMIT-bounded exact count: the limit short-circuits after
-    # budget/n_probe + 1 rows regardless of corpus size, and a capped
-    # probe decides "shuffle" — the safe direction.
+    # overestimate |Q| ~100× (code rows are wide arrays), so count the
+    # queries exactly up to budget/n_probe (a capped count is +inf and
+    # decides "shuffle" — the safe direction).
     budget = PROBE_BROADCAST_ROW_BUDGET if probe_row_budget is None else probe_row_budget
-    q_cap = budget // n_probe
-    est_probe = float(qcodes.limit(q_cap + 1).count()) * n_probe
+    est_probe = bounded_rows(qcodes, budget // n_probe) * n_probe
 
-    # n_probe nearest cells per query, map-side: sort the literal
-    # ``struct(cdist, cid)`` array and slice — same (cdist, cid asc)
-    # order as the old per-query window, with the window exchange gone.
-    cells_arr = F.expr(
-        "array("
-        + ",".join(
-            f"named_struct('cdist', {_sqd_sql('qq', _vec_sql(cv))}, 'cid', {int(cid)})"
-            for cid, cv in centers
-        )
-        + ")"
-    )
     probe = (
         qcodes.select(
             "query_id", "qq",
-            F.explode(F.slice(F.array_sort(cells_arr), 1, n_probe)).alias("_pc"),
+            F.explode(_nearest_cells_expr("qq", centers, n_probe)).alias("_pc"),
         )
         .select("query_id", "qq", F.col("_pc.cid").alias("cid"))
     )

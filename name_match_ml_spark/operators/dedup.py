@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from ..functions.text import md5_60, split_words
 from ..plans.staging import stage
 
 __all__ = [
@@ -57,13 +58,8 @@ def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
-def _words(text_col: str) -> Column:
-    """Whitespace word sequence (order preserved, duplicates kept)."""
-    return F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
-
-
 def _word_set(text_col: str) -> Column:
-    return F.array_distinct(_words(text_col))
+    return F.array_distinct(split_words(F.col(text_col)))
 
 
 def ngram_jaccard_pairs(
@@ -289,7 +285,7 @@ def _staged_shingle_hashes(
     # whose HOF lambdas then re-evaluate their inline input per element
     # (measured 25× on this stage).
     return (
-        docs.select(F.col(id_col).alias("doc_id"), _words(text_col).alias("_w"))
+        docs.select(F.col(id_col).alias("doc_id"), split_words(F.col(text_col)).alias("_w"))
         .filter(F.size("_w") > 0)
         .select("doc_id", _shingles(F.col("_w"), shingle_n).alias("_sh"))
         .select("doc_id", F.transform("_sh", lambda s: _gram_hash(s, hash_fn)).alias("sh"))
@@ -454,7 +450,7 @@ def simhash_pairs(
     elif hash_fn == "md5_60":
         total_bits = 60
         # 15 hex chars = 60 bits < 63, so the ANSI cast can't overflow
-        word_hash = F.conv(F.substring(F.md5(F.col("_t")), 1, 15), 16, 10).cast("long")
+        word_hash = md5_60(F.col("_t"))
     else:
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
     n_bands = max_hamming + 1
@@ -585,7 +581,7 @@ def shared_substring_pairs(
 
     if min_words < seed_n:
         raise ValueError("min_words must be >= seed_n (shorter runs have no seed)")
-    w = _words(text_col)
+    w = split_words(F.col(text_col))
     if winnow_window is None:
         # Exact mode hashes AFTER the positional explode — one md5 per
         # output row.  Hashing inside a transform() array that a
@@ -1090,7 +1086,7 @@ def minhash_estimate_audit(
         shingle_n=shingle_n,
     ).select("doc_a", "doc_b")
     base = (
-        docs.select(F.col(id_col).alias("doc_id"), _words(text_col).alias("_w"))
+        docs.select(F.col(id_col).alias("doc_id"), split_words(F.col(text_col)).alias("_w"))
         .filter(F.size("_w") > 0)
         .select("doc_id", _shingles(F.col("_w"), shingle_n).alias("sh"))
     )
@@ -1106,9 +1102,7 @@ def minhash_estimate_audit(
         return F.array_min(
             F.transform(
                 F.col("sh"),
-                lambda s: F.conv(
-                    F.substring(F.md5(F.concat(F.lit(salt), s)), 1, 15), 16, 10
-                ).cast("long"),
+                lambda s: md5_60(F.concat(F.lit(salt), s)),
             )
         )
 

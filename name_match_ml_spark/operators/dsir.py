@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import md5_60, split_words
 from .ordering import ordered_index
 
 __all__ = ["dsir_select"]
@@ -49,7 +50,7 @@ def _feat_buckets(text: Column, n_buckets: int) -> Column:
     """Hashed uni+bigram feature buckets of a text column: md5_60 of
     each lowercase word and each adjacent word pair, mod ``n_buckets``
     (md5_60 is nonnegative, so ``%`` equals ``pmod``)."""
-    ws = F.filter(F.split(F.lower(text), r"\s+"), lambda w: w != "")
+    ws = split_words(text)
     bigrams = F.when(
         F.size(ws) >= 2,
         F.transform(
@@ -62,8 +63,7 @@ def _feat_buckets(text: Column, n_buckets: int) -> Column:
     feats = F.concat(ws, bigrams)
     return F.transform(
         feats,
-        lambda f: F.conv(F.substring(F.md5(f), 1, 15), 16, 10).cast("long")
-        % n_buckets,
+        lambda f: md5_60(f) % n_buckets,
     )
 
 

@@ -50,6 +50,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import md5_60
+
 __all__ = [
     "near_dup_graph",
     "incremental_near_dup",
@@ -1054,24 +1056,14 @@ def graph_walks(
     ).localCheckpoint(eager=False)
     out = cur.select("start", F.lit(0).alias("step"), "node")
     for r in range(1, steps + 1):
-        pick = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit(seed),
-                            F.lit(":"),
-                            F.col("start").cast("string"),
-                            F.lit(":"),
-                            F.lit(str(r)),
-                        )
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("long")
+        pick = md5_60(
+            F.concat(
+                F.lit(seed),
+                F.lit(":"),
+                F.col("start").cast("string"),
+                F.lit(":"),
+                F.lit(str(r)),
+            )
         )
         stepped = (
             cur.join(degs, cur["node"] == degs["s"])

@@ -39,13 +39,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _shingles, _words
+from ..functions.text import md5_60, split_words
+from .dedup import _shingles
 
 __all__ = ["minhash_band_index", "incremental_band_index"]
-
-
-def _md5_60(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def minhash_band_index(
@@ -67,7 +64,7 @@ def minhash_band_index(
         raise ValueError("num_perm must be divisible by bands")
     rows_per_band = num_perm // bands
     base = (
-        docs.select(F.col(id_col).alias("doc_id"), _words(text_col).alias("_w"))
+        docs.select(F.col(id_col).alias("doc_id"), split_words(F.col(text_col)).alias("_w"))
         .filter(F.size("_w") > 0)
         .select("doc_id", _shingles(F.col("_w"), shingle_n).alias("sh"))
     )
@@ -76,14 +73,14 @@ def minhash_band_index(
         salt = f"mh{j}:"
         return F.array_min(
             F.transform(
-                F.col("sh"), lambda s: _md5_60(F.concat(F.lit(salt), s))
+                F.col("sh"), lambda s: md5_60(F.concat(F.lit(salt), s))
             )
         )
 
     def _band_sig(b: int) -> Column:
         mins = [_mh(b * rows_per_band + r) for r in range(rows_per_band)]
         payload = F.concat_ws(",", *[m.cast("string") for m in mins])
-        return _md5_60(F.concat(F.lit(f"band{b}:"), payload))
+        return md5_60(F.concat(F.lit(f"band{b}:"), payload))
 
     band_structs = F.array(
         *[

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import split_words
+
 __all__ = ["minhash_lsh_pairs_ml", "brp_cosine_topk_ml", "brp_cosine_neighbors_ml"]
 
 
@@ -59,9 +61,7 @@ def minhash_lsh_pairs_ml(
 
     words = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.array_distinct(
-            F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
-        ).alias("tokens"),
+        F.array_distinct(split_words(F.col(text_col))).alias("tokens"),
     ).filter(F.size("tokens") > 0)
     cv = CountVectorizer(
         inputCol="tokens", outputCol="features", binary=True, vocabSize=vocab_size

@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import md5_60, split_words
 from ..plans.probe import estimated_rows
 
 __all__ = ["pack_documents", "pack_attention_spans"]
@@ -74,12 +75,8 @@ def pack_documents(
             4096 if not math.isfinite(est)
             else max(32, math.ceil(est / target_docs_per_bucket))
         )
-    words = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        % n_buckets
-    )
+    words = split_words(F.col(text_col))
+    bucket = md5_60(F.col(id_col).cast("string")) % n_buckets
     base = docs.select(
         F.col(id_col).alias("doc_id"),
         bucket.cast("int").alias("bucket"),

@@ -52,21 +52,24 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["pq_topk", "pq_codebooks", "ivfpq_topk", "PQ_LLOYD_ROUNDS"]
+from ..plans.probe import PROBE_BROADCAST_ROW_BUDGET, bounded_rows, probe_side
+from .clustering import (
+    GRID_KMEANS_ROUNDS,
+    _best_center_expr,
+    _grid_kmeans_fit,
+    _nearest_cells_expr,
+    _sq_dist,
+    _sqd_sql,
+    _trunc_div,
+    _vec_sql,
+)
+
+__all__ = ["pq_topk", "ivfpq_topk", "PQ_LLOYD_ROUNDS"]
 
 # Pinned Lloyd iteration count per subspace, shared with the oracle
 # generator (suite._pq_topk_oracle_sql) — fixed depth on both sides,
 # never a convergence test only one side runs.
 PQ_LLOYD_ROUNDS = 2
-
-
-def _sq_dist(a: Column, b: Column) -> Column:
-    """Exact int64 squared Euclidean distance between two long arrays."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
 
 
 def _corpus_scale(embeddings: DataFrame, *, vec_col: str) -> DataFrame:
@@ -120,26 +123,6 @@ def _subvectors(codes: DataFrame, *, m: int, extra: tuple[str, ...] = ()) -> Dat
     )
 
 
-def _vec_sql(cv: list[int]) -> str:
-    """A codebook sub-vector as a Spark SQL ``array<bigint>`` literal.
-    Literal expressions are generated as SQL TEXT and parsed server-side
-    with ONE ``F.expr`` call: building the same tree with ``F.lit``/
-    ``F.array``/``F.struct`` costs one py4j round-trip per node —
-    measured ~27 s for one m=16×k=16 codebook vs 0.02 s for the parsed
-    string (same resulting expression, bit-identical results)."""
-    return "array(" + ",".join(f"{int(v)}L" for v in cv) + ")"
-
-
-def _sqd_sql(a: str, b: str) -> str:
-    """Exact int64 squared Euclidean distance between two
-    ``array<bigint>`` SQL expressions — the SQL twin of
-    :func:`_sq_dist` (same zip_with/aggregate shape)."""
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
-        f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-    )
-
-
 def _cb_sql(books: list[list[tuple[int, list[int]]]]) -> str:
     """The codebooks as one SQL literal
     ``array<array<struct<cid int, cv array<bigint>>>>`` indexed
@@ -163,43 +146,40 @@ def _encode_cid_expr(
     books: list[list[tuple[int, list[int]]]], s: str, sq: str
 ) -> Column:
     """Nearest codebook entry id for (s, sq) against the literal
-    codebooks — the same ``min(struct(dist, cid))`` ordering as
-    :func:`_assign` (ties → smallest cid), evaluated map-side.  ``s``
+    codebooks — ``array_min`` over ``struct(dist, cid)`` (ties →
+    smallest cid), evaluated map-side with no join or shuffle.  ``s``
     and ``sq`` are SQL column names; one parsed SQL string (see
-    :func:`_vec_sql`)."""
+    ``clustering._vec_sql``)."""
     return F.expr(
         f"array_min(transform(element_at({_cb_sql(books)}, CAST({s} + 1 AS INT)), "
         f"c -> named_struct('dist', {_sqd_sql(sq, 'c.cv')}, 'cid', c.cid)))"
     ).getField("cid")
 
 
-def _dtab_entries_expr(
-    books: list[list[tuple[int, list[int]]]], s: str, qsq: str
-) -> Column:
-    """ADC distance-table entries for one (query, s) row against the
-    literal codebooks: ``array<struct<cid, d>>`` — the map-side
-    replacement for the old broadcast join against the centers table."""
-    return F.expr(
-        f"transform(element_at({_cb_sql(books)}, CAST({s} + 1 AS INT)), "
-        f"c -> named_struct('cid', c.cid, 'd', {_sqd_sql(qsq, 'c.cv')}))"
-    )
-
-
-def _trunc_div(a: int, b: int) -> int:
-    """Spark ``DIV`` / DuckDB ``//`` semantics: truncate toward zero."""
-    q = abs(a) // abs(b)
-    return q if (a >= 0) == (b >= 0) else -q
-
-
-def _assign(subq: DataFrame, centers: DataFrame) -> DataFrame:
-    """Nearest codebook entry per (vec_id, s): ties → smallest cid."""
-    scored = subq.join(F.broadcast(centers), "s").select(
-        "vec_id", "s", "cid", _sq_dist(F.col("sq"), F.col("cv")).alias("dist")
-    )
+def _dist_table(
+    q_sub: DataFrame,
+    books: list[list[tuple[int, list[int]]]],
+    extra: tuple[str, ...] = (),
+) -> DataFrame:
+    """ADC distance table ``(query_id, *extra, s, cid, d)`` of the query
+    sub-vectors ``q_sub = (vec_id, *extra, s, sq)``: ``d`` is the exact
+    int64 distance of each sub-vector to every literal codebook entry of
+    its subspace, built map-side (no join against a centers table)."""
     return (
-        scored.groupBy("vec_id", "s")
-        .agg(F.min(F.struct(F.col("dist"), F.col("cid"))).alias("_b"))
-        .select("vec_id", "s", F.col("_b.cid").alias("cid"), F.col("_b.dist").alias("dist"))
+        q_sub.select(
+            F.col("vec_id").alias("query_id"),
+            *extra,
+            "s",
+            F.expr(
+                f"transform(element_at({_cb_sql(books)}, CAST(s + 1 AS INT)), "
+                f"c -> named_struct('cid', c.cid, 'd', {_sqd_sql('sq', 'c.cv')}))"
+            ).alias("_es"),
+        )
+        .select("query_id", *extra, "s", F.explode("_es").alias("_e"))
+        .select(
+            "query_id", *extra, "s",
+            F.col("_e.cid").alias("cid"), F.col("_e.d").alias("d"),
+        )
     )
 
 
@@ -222,9 +202,23 @@ def _pq_fit(
     (``m·k_codes`` sub-vectors), inlined as plan literals by the query
     paths.  Bit-identical to the pre-round-10 DataFrame formulation
     (same Gonzalez order, tie rules, truncating updates — hash-checked
-    against the same unrolled-CTE oracles).  ``staged`` marks ``codes``
-    as already checkpointed (skips the redundant re-materialization);
-    ``extra`` columns ride through ``subq`` untouched by training."""
+    against the same unrolled-CTE oracles).  ``scale`` injects a
+    precomputed 1-row quantization scale (an external query set is then
+    encoded on the same grid); ``codes`` injects a precomputed
+    ``(vec_id, q)`` long-array code table and skips quantization
+    (:func:`ivfpq_topk` trains on coarse-cell residuals); ``staged``
+    marks ``codes`` as already checkpointed (skips the redundant
+    re-materialization); ``extra`` columns ride through ``subq``
+    untouched by training.  All m subspaces train concurrently: each
+    seeding/Lloyd round is one job over the (vec, subspace) table.
+
+    The seeding is this trainer's own, not ``clustering._grid_kmeans_fit``'s
+    top-1 ``orderBy().limit(1)``: m subspaces need a per-``s`` winner,
+    hence the grouped ``max(struct)`` aggregate below.  For m = 1 the
+    top-1 form is cheaper — running grid k-means' seeding through this
+    aggregate measured 60 vs 40 jobs and 2.23 vs 1.47 s per fit (median
+    of 7 alternating reps, sf0.01 embeddings, k=10, ``local[2]``;
+    identical centres) — so the two trainers stay separate."""
     if m < 1 or k_codes < 1:
         raise ValueError("m >= 1 and k_codes >= 1")
     from ..plans.staging import stage
@@ -237,7 +231,7 @@ def _pq_fit(
             codes_full = stage(codes_full)
     else:
         if embeddings is None:
-            raise ValueError("pq_codebooks: pass embeddings or codes")
+            raise ValueError("_pq_fit: pass embeddings or codes")
         codes_full = stage(
             _global_codes(embeddings, id_col=id_col, vec_col=vec_col, scale=scale)
         )
@@ -348,45 +342,64 @@ def _pq_fit(
     return codes_full, subq, books
 
 
-def pq_codebooks(
-    embeddings: DataFrame | None = None,
+def _adc_refine(
+    codes: DataFrame,
+    dtab: DataFrame,
+    keys: list[str],
+    q_full: DataFrame,
+    codes_full: DataFrame,
     *,
-    m: int = 16,
-    k_codes: int = 16,
-    rounds: int = PQ_LLOYD_ROUNDS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: DataFrame | None = None,
-    codes: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Train per-subspace codebooks; returns ``(codes_full, subq,
-    centers)`` where ``codes_full = (vec_id, q)`` is the global-scale
-    full-width code table, ``subq = (vec_id, s, sq)`` its subspace
-    split, and ``centers = (s, cid, cv)`` with ``cid`` in 1..k_codes
-    (farthest-point selection order).  ``scale`` injects a precomputed
-    1-row quantization-scale table (so a caller encoding an external
-    query set on the same grid computes the corpus scale exactly once).
-    ``codes`` injects a precomputed ``(vec_id, q)`` long-array code
-    table and skips quantization entirely — :func:`ivfpq_topk` trains
-    the PQ stage on coarse-cell RESIDUALS, which are already integers.
-    All m subspaces train CONCURRENTLY: each seeding/Lloyd round is one
-    job over the combined (vec, subspace) table, never a per-subspace
-    loop of jobs."""
-    codes_full, subq, books = _pq_fit(
-        embeddings,
-        m=m,
-        k_codes=k_codes,
-        rounds=rounds,
-        id_col=id_col,
-        vec_col=vec_col,
-        scale=scale,
-        codes=codes,
+    est_dtab: float,
+    est_q: float,
+    budget: int,
+    rerank: int,
+    k: int,
+) -> DataFrame:
+    """The ADC scan + exact refine shared by :func:`pq_topk` and
+    :func:`ivfpq_topk`: join the corpus codes to the per-query distance
+    table ``dtab`` on ``keys``, sum ``d`` into ``pq_dist`` per (query,
+    neighbor), keep the best ``rerank`` per query, re-rank those by the
+    EXACT int64 distance over the full-width codes (``q_full`` for the
+    queries, ``codes_full`` for the neighbors) and keep the top ``k``.
+    Both query-scaled join sides go through ``probe_side`` with the
+    caller's row estimates; self-matches excluded, ties → smallest
+    neighbor_id."""
+    scores = (
+        codes.join(probe_side(dtab, est_rows=est_dtab, row_budget=budget), keys)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+        .agg(F.sum("d").cast("long").alias("pq_dist"))
     )
-    rows = [(s, cid, cv) for s, book in enumerate(books) for cid, cv in book]
-    centers = codes_full.sparkSession.createDataFrame(
-        rows, "s int, cid int, cv array<bigint>"
+    wc = Window.partitionBy("query_id").orderBy("pq_dist", "neighbor_id")
+    cand = scores.withColumn("_crn", F.row_number().over(wc)).filter(
+        F.col("_crn") <= rerank
     )
-    return codes_full, subq, centers
+
+    qfull = q_full.select(
+        F.col("vec_id").alias("query_id"), F.col("q").alias("_qq")
+    )
+    rer = (
+        cand.join(
+            probe_side(qfull, est_rows=est_q, row_budget=budget),
+            "query_id",
+        )
+        .join(
+            codes_full.select(F.col("vec_id").alias("neighbor_id"), F.col("q").alias("_nq")),
+            "neighbor_id",
+        )
+        .select(
+            "query_id",
+            "neighbor_id",
+            "pq_dist",
+            _sq_dist(F.col("_nq"), F.col("_qq")).alias("dist_grid"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy("dist_grid", "neighbor_id")
+    return (
+        rer.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "pq_dist", "dist_grid", "rank")
+    )
 
 
 def pq_topk(
@@ -433,8 +446,6 @@ def pq_topk(
     ``pq_dist`` the int64 ADC estimate, ``dist_grid`` the exact int64
     squared distance, ``rank`` by ``(dist_grid, neighbor_id)``.
     """
-    from ..plans.probe import PROBE_BROADCAST_ROW_BUDGET, probe_side
-
     budget = PROBE_BROADCAST_ROW_BUDGET if probe_row_budget is None else probe_row_budget
     scale = None
     if queries is not None:
@@ -458,69 +469,16 @@ def pq_topk(
             queries, id_col=id_col, vec_col=vec_col, scale=scale
         ).localCheckpoint()
         q_sub = _subvectors(q_full, m=m)
-    # The probe/distance-table row count is |Q|·m·k_codes.  Byte-derived
-    # stats overestimate |Q| ~100× here (code rows are wide arrays, the
-    # dtab rows that actually broadcast are 4 longs), so use a
-    # LIMIT-bounded exact count instead: the limit short-circuits after
-    # budget/(m·k_codes)+1 rows regardless of corpus size, and a capped
-    # probe decides "shuffle" — the safe direction.
-    q_cap = budget // (m * k_codes)
-    n_q = q_full.limit(q_cap + 1).count()
-    est_dtab = n_q * m * k_codes
-    # When the LIMIT-bounded count saturates, |Q| is unknown (could be
-    # corpus-sized) — the saturated value itself (~q_cap+1) is always
-    # under the row budget, so feeding it to probe_side for the rerank
-    # join would still broadcast the full-width query-code table.
-    # Treat saturated as infinite so the rerank join goes shuffle_hash
-    # too (ADVICE r8, medium).
-    est_q = float("inf") if n_q > q_cap else float(n_q)
-
-    # ADC distance table, map-side from the literal codebooks (the old
-    # centers broadcast join is gone); same (query_id, s, cid, d) rows.
-    dtab = (
-        q_sub.select(
-            F.col("vec_id").alias("query_id"),
-            "s",
-            _dtab_entries_expr(books, "s", "sq").alias("_es"),
-        )
-        .select("query_id", "s", F.explode("_es").alias("_e"))
-        .select("query_id", "s", F.col("_e.cid").alias("cid"), F.col("_e.d").alias("d"))
-    )
-    scores = (
-        codes.join(probe_side(dtab, est_rows=est_dtab, row_budget=budget), ["s", "cid"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("d").cast("long").alias("pq_dist"))
-    )
-    wc = Window.partitionBy("query_id").orderBy("pq_dist", "neighbor_id")
-    cand = scores.withColumn("_crn", F.row_number().over(wc)).filter(
-        F.col("_crn") <= rerank
-    )
-
-    qfull = q_full.select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("_qq")
-    )
-    rer = (
-        cand.join(
-            probe_side(qfull, est_rows=est_q, row_budget=budget),
-            "query_id",
-        )
-        .join(
-            codes_full.select(F.col("vec_id").alias("neighbor_id"), F.col("q").alias("_nq")),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            "pq_dist",
-            _sq_dist(F.col("_nq"), F.col("_qq")).alias("dist_grid"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("dist_grid", "neighbor_id")
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "pq_dist", "dist_grid", "rank")
+    # The distance table is |Q|·m·k_codes rows.  Byte-derived stats
+    # overestimate |Q| ~100× here (code rows are wide arrays, the dtab
+    # rows that actually broadcast are 4 longs), so count |Q| exactly up
+    # to budget/(m·k_codes); a capped count is +inf, which sends both
+    # query-scaled joins to shuffle-hash — the safe direction.
+    est_q = bounded_rows(q_full, budget // (m * k_codes))
+    return _adc_refine(
+        codes, _dist_table(q_sub, books), ["s", "cid"], q_full, codes_full,
+        est_dtab=est_q * m * k_codes, est_q=est_q, budget=budget,
+        rerank=rerank, k=k,
     )
 
 
@@ -545,14 +503,14 @@ def ivfpq_topk(
     production billion-vector ANN layout, restated on the integer grid
     so every stage hash-checks in DuckDB:
 
-    * coarse quantizer: :func:`..clustering.grid_kmeans_model` over the
+    * coarse quantizer: ``clustering._grid_kmeans_fit`` over the
       GLOBAL-scale codes (``_global_codes`` — one corpus-wide scale, so
       residuals are comparable across vectors; the per-vector device of
       ``grid_ivf_topk`` cannot feed a shared PQ codebook);
     * residual encoding: ``r = q - cell_centroid`` (exact int64), then
-      ONE shared PQ codebook set trained on residuals (:func:`
-      pq_codebooks` with ``codes=`` — FAISS's default shared-codebook
-      IVFADC, not per-cell codebooks);
+      ONE shared PQ codebook set trained on residuals (:func:`_pq_fit`
+      with ``codes=`` — FAISS's default shared-codebook IVFADC, not
+      per-cell codebooks);
     * query: probe the ``n_probe`` nearest cells, build the per-(query,
       cell) ADC distance table from the QUERY'S residual in that cell,
       table-lookup-add over only the codes assigned to probed cells;
@@ -572,10 +530,11 @@ def ivfpq_topk(
     streaming codes, PQ training aggregates are map-side-combined, and
     the inverted code lists NEVER shuffle on the cell key: the ADC
     distance table (``|Q|·n_probe·m·k_codes`` rows) scales with the
-    query set, so its join strategy is auto-selected from a
-    LIMIT-bounded exact query count (``plans/probe.py``): small query
-    set → broadcast, corpus-proportional or saturated count →
-    shuffle-hash (the pq_topk saturation rule, ADVICE r8).
+    query set, so its join strategy is auto-selected from a bounded
+    exact query count (``plans/probe.bounded_rows``): small query set →
+    broadcast, corpus-proportional or capped count → shuffle-hash (the
+    pq_topk rule).  The ADC scan and refine are :func:`_adc_refine`,
+    shared with :func:`pq_topk`.
 
     Returns ``(query_id, neighbor_id, pq_dist, dist_grid, rank)`` —
     ``pq_dist`` the int64 ADC estimate on residuals, ``dist_grid`` the
@@ -588,16 +547,11 @@ def ivfpq_topk(
     app) has no vector surface; this completes the SURVEY §2.10 ANN
     family's production shape.
     """
-    from ..plans.probe import PROBE_BROADCAST_ROW_BUDGET, probe_side
-    from .clustering import GRID_KMEANS_ROUNDS, _best_center_expr, _grid_kmeans_fit
-
     if coarse_rounds is None:
         coarse_rounds = GRID_KMEANS_ROUNDS
     if n_probe < 1 or k < 1 or rerank < k:
         raise ValueError("n_probe >= 1, k >= 1, rerank >= k")
     n_probe = min(n_probe, k_cells)
-    from pyspark.sql import Window
-
     from ..plans.staging import stage
 
     scale = _corpus_scale(corpus, vec_col=vec_col).localCheckpoint()
@@ -652,94 +606,27 @@ def ivfpq_topk(
             queries, id_col=id_col, vec_col=vec_col, scale=scale
         ).localCheckpoint()
 
-    # dtab is |Q|·n_probe·m·k_codes rows; LIMIT-bounded exact |Q| count,
-    # saturated ⇒ treat as infinite so BOTH query-scaled joins go
-    # shuffle-hash (the pq_topk device, ADVICE r8)
+    # dtab is |Q|·n_probe·m·k_codes rows: count |Q| exactly up to the
+    # budget; a capped count is +inf, so BOTH query-scaled joins go
+    # shuffle-hash (the pq_topk rule)
     budget = PROBE_BROADCAST_ROW_BUDGET if probe_row_budget is None else probe_row_budget
-    q_cap = budget // (n_probe * m * k_codes)
-    n_q = q_full.limit(q_cap + 1).count()
-    est_q = float("inf") if n_q > q_cap else float(n_q)
-    est_dtab = est_q * n_probe * m * k_codes
+    est_q = bounded_rows(q_full, budget // (n_probe * m * k_codes))
 
-    # probe the n_probe nearest cells, map-side: sort the literal
-    # ``struct(cdist, cell)`` array and slice — same (cdist, cell asc)
-    # order as the old per-query window, with the window exchange and
-    # the k_cells-row BNLJ broadcast gone; the query residual per cell
-    # comes from the same literal centroid array.
-    parr = F.expr(
-        "array("
-        + ",".join(
-            f"named_struct('cdist', {_sqd_sql('qq', _vec_sql(cv))}, 'cell', {int(cid)})"
-            for cid, cv in cells_py
-        )
-        + ")"
-    )
-    probe = (
-        q_full.select(F.col("vec_id").alias("query_id"), F.col("q").alias("qq"))
-        .select("query_id", "qq", F.slice(F.array_sort(parr), 1, n_probe).alias("_pcs"))
-        .select("query_id", "qq", F.explode("_pcs").alias("_pc"))
-        .select(
-            "query_id",
-            F.col("_pc.cell").alias("cell"),
-            F.expr(
-                f"zip_with(qq, element_at({cells_sql}, _pc.cell), (x, y) -> x - y)"
-            ).alias("qr"),
-        )
-    )
-    sub = (F.size(F.col("qr")) / m).cast("int")
-    qsub = probe.select("query_id", "cell", sub.alias("_sub"), "qr").select(
-        "query_id",
-        "cell",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.slice(F.col("qr"), s * F.col("_sub") + 1, F.col("_sub")),
-            )
-        ).alias("s", "qsq"),
+    # probe the n_probe nearest cells map-side and take the query's
+    # residual in each from the same literal centroid array
+    probe = q_full.select(
+        "vec_id", "q", F.explode(_nearest_cells_expr("q", cells_py, n_probe)).alias("_pc")
+    ).select(
+        "vec_id",
+        F.col("_pc.cid").alias("cell"),
+        F.expr(
+            f"zip_with(q, element_at({cells_sql}, _pc.cid), (x, y) -> x - y)"
+        ).alias("q"),
     )
     # ADC distance table, map-side from the literal residual codebooks
-    dtab = (
-        qsub.select(
-            "query_id", "cell", "s",
-            _dtab_entries_expr(books, "s", "qsq").alias("_es"),
-        )
-        .select("query_id", "cell", "s", F.explode("_es").alias("_e"))
-        .select(
-            "query_id", "cell", "s",
-            F.col("_e.cid").alias("cid"), F.col("_e.d").alias("d"),
-        )
-    )
-    scores = (
-        codes_cell.join(
-            probe_side(dtab, est_rows=est_dtab, row_budget=budget), ["cell", "s", "cid"]
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("d").cast("long").alias("pq_dist"))
-    )
-    wc = Window.partitionBy("query_id").orderBy("pq_dist", "neighbor_id")
-    cand = scores.withColumn("_crn", F.row_number().over(wc)).filter(
-        F.col("_crn") <= rerank
-    )
-    qfull_t = q_full.select(F.col("vec_id").alias("query_id"), F.col("q").alias("_qq"))
-    rer = (
-        cand.join(probe_side(qfull_t, est_rows=est_q, row_budget=budget), "query_id")
-        .join(
-            codes_full.select(
-                F.col("vec_id").alias("neighbor_id"), F.col("q").alias("_nq")
-            ),
-            "neighbor_id",
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            "pq_dist",
-            _sq_dist(F.col("_nq"), F.col("_qq")).alias("dist_grid"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("dist_grid", "neighbor_id")
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "pq_dist", "dist_grid", "rank")
+    dtab = _dist_table(_subvectors(probe, m=m, extra=("cell",)), books, ("cell",))
+    return _adc_refine(
+        codes_cell, dtab, ["cell", "s", "cid"], q_full, codes_full,
+        est_dtab=est_q * n_probe * m * k_codes, est_q=est_q, budget=budget,
+        rerank=rerank, k=k,
     )

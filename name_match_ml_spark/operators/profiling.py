@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import md5_60
 from ..plans.probe import parallelism_floor
 
 __all__ = ["profile_columns", "winsorize", "equi_width_histogram", "apply_expectations", "chi_square_independence", "dp_noisy_counts", "table_digest"]
@@ -322,7 +323,7 @@ def dp_noisy_counts(
     key = F.concat_ws(
         ":", F.lit(seed), *[F.col(c).cast("string") for c in group_cols]
     )
-    h = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long")
+    h = md5_60(key)
     # divide by the POWER OF TWO 2^60 (exact in IEEE), not 2^60+1 — the
     # division is then exact and u ∈ (0, 1] replays bit-identically
     u = (h.cast("double") + 1.0) / float(1 << 60)

@@ -61,6 +61,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import split_words
+
 __all__ = [
     "unigram_lm_train",
     "unigram_tokenize_docs",
@@ -89,9 +91,7 @@ def _lexicon(docs: DataFrame, text_col: str, max_words: int) -> DataFrame:
     frequency and char length, capped at the top ``max_words`` by
     (freq desc, word asc)."""
     words = docs.select(
-        F.explode(
-            F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
-        ).alias("wid")
+        F.explode(split_words(F.col(text_col))).alias("wid")
     )
     lex = words.groupBy("wid").agg(F.count(F.lit(1)).alias("freq"))
     lex = lex.orderBy(F.desc("freq"), "wid").limit(max_words)
@@ -588,9 +588,7 @@ def unigram_tokenize_docs(
     )
     dw = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(
-            F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
-        ).alias("wpos", "wid"),
+        F.posexplode(split_words(F.col(text_col))).alias("wpos", "wid"),
     )
     allw = (
         dw.select("wid")

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import split_words
+
 __all__ = ["normalized_url_cols", "url_dedup", "domain_quality_priors"]
 
 
@@ -102,9 +104,7 @@ def domain_quality_priors(
     round()-free convention).
     """
     _, _, registrable = normalized_url_cols(F.col(url_col))
-    words = F.size(
-        F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda w: w != "")
-    ).cast("long")
+    words = F.size(split_words(F.col(text_col))).cast("long")
     per_dom = (
         docs.select(
             registrable.alias("domain"),

@@ -6,6 +6,9 @@ module, so each input to such a choice has one definition:
 * :func:`estimated_rows` — rows from Catalyst plan statistics; feeds the
   flagship's cross vs blocked auto-select (``operators/matching.py``),
   the pack bucket count (``operators/packing.py``) and :func:`probe_side`;
+* :func:`bounded_rows` — exact row count up to a cap (+inf above it);
+  the unknown-stats branch of :func:`estimated_rows` and the ANN
+  family's query-set count (``operators/clustering.py``, ``operators/pq.py``);
 * :func:`broadcast_threshold` — the session's broadcast budget in bytes;
 * :func:`probe_side` — broadcast vs shuffle-hash for the ANN family's
   per-query probe table;
@@ -34,6 +37,7 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "estimated_rows",
+    "bounded_rows",
     "broadcast_threshold",
     "probe_side",
     "parallelism_floor",
@@ -67,9 +71,8 @@ def estimated_rows(df: DataFrame) -> float:
     Normally free: uses the optimized logical plan's statistics
     (``rowCount`` under CBO, else ``sizeInBytes`` — exact file size for
     parquet/csv leaves).  When stats are unknown (LogicalRDD from
-    ``createDataFrame``), runs one LIMIT-bounded count: LIMIT
-    short-circuits the scan, so the probe touches at most ~``_PROBE_ROW_CAP``
-    rows regardless of source size, and a capped probe reports +inf.
+    ``createDataFrame``), counts up to ``_PROBE_ROW_CAP`` rows with
+    :func:`bounded_rows` (+inf above the cap).
     """
     try:
         stats = df._jdf.queryExecution().optimizedPlan().stats()
@@ -79,10 +82,19 @@ def estimated_rows(df: DataFrame) -> float:
         size = float(str(stats.sizeInBytes()))
         if size < _UNKNOWN_STATS_BYTES:
             return size / EST_BYTES_PER_ROW
-        n = df.limit(_PROBE_ROW_CAP + 1).count()
-        return float("inf") if n > _PROBE_ROW_CAP else float(n)
+        return bounded_rows(df, _PROBE_ROW_CAP)
     except Exception:  # py4j / analysis edge: be safe, assume huge
         return float("inf")
+
+
+def bounded_rows(df: DataFrame, cap: int) -> float:
+    """Exact row count of ``df`` when it is at most ``cap``, else +inf.
+
+    One job: ``LIMIT cap + 1`` short-circuits the scan, so the count
+    touches at most ``cap + 1`` rows regardless of source size, and any
+    size decision fed +inf takes its large-input (safe) branch."""
+    n = df.limit(cap + 1).count()
+    return float("inf") if n > cap else float(n)
 
 
 def broadcast_threshold(spark: SparkSession) -> int:

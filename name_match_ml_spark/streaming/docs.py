@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..functions.text import split_words
+
 __all__ = ["DOCS_SCHEMA", "stream_documents", "clean_documents"]
 
 DOCS_SCHEMA = StructType(
@@ -57,7 +59,7 @@ def clean_documents(
     drops exact duplicates on ``md5(text)`` — first arrival wins.
     Returns ``(doc_id, content_hash, lang, source, n_words)``.
     """
-    w = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda x: x != "")
+    w = split_words(F.col("text"))
     grams = F.when(
         F.size(w) >= rep_n,
         F.transform(

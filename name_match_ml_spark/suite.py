@@ -1134,12 +1134,12 @@ def q_lsh_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID + quality score + token counts per document
     (functions/text.py; fully oracle-checkable)."""
-    from .functions.text import _words, lang_id, quality_score, token_counts
+    from .functions.text import split_words, lang_id, quality_score, token_counts
 
     d = table(spark, sf_dir, "documents")
     # Words split once in a materialized projection — every scalar below
     # references the array attribute, not a re-split of the text.
-    staged = d.select("doc_id", "text", _words(F.col("text")).alias("_w"))
+    staged = d.select("doc_id", "text", split_words(F.col("text")).alias("_w"))
     counts = token_counts(F.col("text"), words=F.col("_w"))
     return staged.select(
         "doc_id",
@@ -1470,11 +1470,11 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     slopes cluster near -1; flat slopes mean templating).  Bounded
     per-group term lists (50), exact integer ranks, ln the only
     transcendental, everything else one partial-combining aggregate."""
-    from .functions.text import _words
+    from .functions.text import split_words
 
     d = table(spark, sf_dir, "documents")
     tf = (
-        d.select("source", F.explode(_words(F.col("text"))).alias("w"))
+        d.select("source", F.explode(split_words(F.col("text"))).alias("w"))
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -1906,11 +1906,11 @@ def q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number-over-empty-window spelling serializes the corpus through
     one task).  The emitted index is the true global rank, so the oracle
     replays it with a plain window."""
-    from .functions.text import _words, quality_score
+    from .functions.text import split_words, quality_score
     from .operators.ordering import ordered_index
 
     d = table(spark, sf_dir, "documents")
-    staged = d.select("doc_id", "text", _words(F.col("text")).alias("_w"))
+    staged = d.select("doc_id", "text", split_words(F.col("text")).alias("_w"))
     scored = staged.select(
         "doc_id", quality_score(F.col("text"), words=F.col("_w")).alias("quality")
     )
@@ -1927,11 +1927,11 @@ def q_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer floor division of the corpus token total (1-row broadcast,
     allowlisted).  A doc is selected iff it STARTS before the budget
     boundary."""
-    from .functions.text import _words, quality_score
+    from .functions.text import split_words, quality_score
     from .operators.ordering import ordered_cumsum
 
     d = table(spark, sf_dir, "documents")
-    staged = d.select("doc_id", "text", _words(F.col("text")).alias("_w"))
+    staged = d.select("doc_id", "text", split_words(F.col("text")).alias("_w"))
     scored = staged.select(
         "doc_id",
         quality_score(F.col("text"), words=F.col("_w")).alias("quality"),
@@ -1967,7 +1967,7 @@ def q_pipeline_select_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     order).  Returns the selected documents.  Oracle = CTE-chained
     composition of the four already-hash-checked stage oracles."""
     from .functions.quality_model import model_quality_scores
-    from .functions.text import _words, quality_score, gopher_quality
+    from .functions.text import split_words, quality_score, gopher_quality
     from .operators.cleaning import temperature_mixture
     from .operators.ordering import ordered_cumsum
 
@@ -1981,7 +1981,7 @@ def q_pipeline_select_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     surv = d.join(gp, "doc_id").join(mq, "doc_id")
     mixed = temperature_mixture(surv, stratum_col="lang", alpha=0.5, seed="pipe")
     staged = mixed.select(
-        "doc_id", "lang", "source", "text", _words(F.col("text")).alias("_w")
+        "doc_id", "lang", "source", "text", split_words(F.col("text")).alias("_w")
     )
     scored = staged.select(
         "doc_id",
@@ -3366,23 +3366,17 @@ def q_sampled_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     group size, the cut is WindowGroupLimit-pushed, and unlike
     approx_percentile the result is engine-reproducible.  Sampling
     error vs the exact quantiles is pinned in pytest, not here."""
+    from .functions.text import md5_60
+
     li = table(spark, sf_dir, "lineitem")
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("qs:"),
-                    F.col("l_orderkey").cast("string"),
-                    F.lit(":"),
-                    F.col("l_linenumber").cast("string"),
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_60(
+        F.concat(
+            F.lit("qs:"),
+            F.col("l_orderkey").cast("string"),
+            F.lit(":"),
+            F.col("l_linenumber").cast("string"),
+        )
+    )
     w = Window.partitionBy("l_returnflag").orderBy(F.col("_h").asc())
     sampled = (
         li.select("l_returnflag", F.col("l_extendedprice").alias("v"), h.alias("_h"))
@@ -4728,11 +4722,12 @@ def q_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     division (decimal(38,0) / HUGEINT), bit-reproducible — the
     estimate itself, sampling error included, is hash-checked."""
     from .functions.sketches import theta_set_algebra, theta_sketch_states
-    from .operators.dedup import _shingles, _words
+    from .functions.text import split_words
+    from .operators.dedup import _shingles
 
     d = table(spark, sf_dir, "documents")
     sh = (
-        d.select("lang", _words("text").alias("_w"))
+        d.select("lang", split_words(F.col("text")).alias("_w"))
         .filter(F.size("_w") > 0)
         .select("lang", F.explode(_shingles(F.col("_w"), 2)).alias("s"))
     )
@@ -4748,11 +4743,12 @@ def q_theta_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     theta_set_ops — one Horvitz-Thompson row, exact wide-integer
     division, hash-checked estimation error included."""
     from .functions.sketches import theta_multiway, theta_sketch_states
-    from .operators.dedup import _shingles, _words
+    from .functions.text import split_words
+    from .operators.dedup import _shingles
 
     d = table(spark, sf_dir, "documents")
     sh = (
-        d.select("lang", _words("text").alias("_w"))
+        d.select("lang", split_words(F.col("text")).alias("_w"))
         .filter(F.size("_w") > 0)
         .select("lang", F.explode(_shingles(F.col("_w"), 2)).alias("s"))
     )

@@ -185,14 +185,13 @@ def test_grid_ivf_recall_vs_same_grid_brute_force(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from name_match_ml_spark.operators.clustering import (
-        _assign_to,
+        _grid_kmeans_fit,
         _sq_dist,
         grid_ivf_topk,
-        grid_kmeans_model,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qz, _ = grid_kmeans_model(emb)
+    qz, _ = _grid_kmeans_fit(emb)
     qs = qz.filter(F.col("vec_id") % 10 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("q").alias("qq")
     )

@@ -1,10 +1,15 @@
-"""Plan-time size decisions (plans/probe.py): the parallelism floor."""
+"""Plan-time size decisions (plans/probe.py): the parallelism floor and
+the bounded row count."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from name_match_ml_spark.plans.probe import parallelism_floor
+from name_match_ml_spark.plans.probe import (
+    bounded_rows,
+    estimated_rows,
+    parallelism_floor,
+)
 
 
 def test_floor_spreads_scans_and_leaves_exchanges_alone(spark, tmp_path):
@@ -35,5 +40,31 @@ def test_floor_spreads_scans_and_leaves_exchanges_alone(spark, tmp_path):
         assert sc.statusTracker().getJobIdsForGroup(group) == []
         scan.count()  # control: the group does record a job
         assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_bounded_rows_exact_to_cap_then_inf(spark):
+    """Exact at and below the cap, +inf one row above it, and a fixed
+    job count per call whatever the cap: one job on a one-partition
+    frame (under AQE a multi-partition frame adds the LIMIT exchange's
+    map stage as a second job).  ``estimated_rows`` on a
+    ``createDataFrame`` frame (unknown stats) reads the same count."""
+    sc = spark.sparkContext
+    df = spark.createDataFrame([(i,) for i in range(10)], "id long")
+    group = "bounded-rows-test"
+    try:
+        for frame in (df.coalesce(1), df):
+            sc.setLocalProperty("spark.jobGroup.id", group)
+            per_call = []
+            for cap, want in [(10, 10.0), (12, 10.0), (9, float("inf"))]:
+                before = len(sc.statusTracker().getJobIdsForGroup(group))
+                assert bounded_rows(frame, cap) == want, cap
+                per_call.append(len(sc.statusTracker().getJobIdsForGroup(group)) - before)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            assert len(set(per_call)) == 1 and per_call[0] <= 2, per_call
+            if frame.rdd.getNumPartitions() == 1:
+                assert per_call[0] == 1, per_call
+            assert estimated_rows(frame) == 10.0
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)

@@ -220,9 +220,9 @@ def test_shared_substring_winnow_shrinks_seed_stream(spark):
     def seed_count(**kw):
         # count rows flowing into the self-join by reproducing the seeds
         # stage (the operator's first exchange input)
-        from name_match_ml_spark.operators import dedup as D
+        from name_match_ml_spark.functions.text import split_words
 
-        w = D._words("text")
+        w = split_words(F.col("text"))
         hashed = (
             docs.select(F.col("doc_id"), w.alias("_w"))
             .filter(F.size("_w") >= 5)

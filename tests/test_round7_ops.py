@@ -1,5 +1,6 @@
 """Round-7 operator tests: blocklist gate, CCNet perplexity buckets,
-and (added later this round) PQ ANN + integer perceptron training."""
+and (added later this round) integer perceptron training.  The PQ ANN
+tests live in test_pq.py."""
 
 from __future__ import annotations
 
@@ -99,70 +100,6 @@ def test_perplexity_buckets_sizes_and_order(spark):
         tails = [r["avg_logprob"] for r in rs if r["bucket_label"] == "tail"]
         if heads and tails:
             assert min(heads) >= max(tails)
-
-
-@pytest.mark.slow
-def test_pq_topk_recall_vs_exact(spark):
-    """ADC + exact refine must recover >=0.9 of the true top-5 (by exact
-    int64 distance over the same global-scale codes); measured 0.96 at
-    the shipped m=16/k_codes=16/rerank=100 config."""
-    from pyspark.sql import Window
-
-    from name_match_ml_spark.operators.pq import pq_topk, _global_codes, _sq_dist
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    got = pq_topk(emb).collect()
-    pq_pairs = {(r["query_id"], r["neighbor_id"]) for r in got}
-
-    cf = _global_codes(emb, id_col="vec_id", vec_col="embedding")
-    q = cf.filter(F.col("vec_id") % 10 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("qq")
-    )
-    pairs = (
-        cf.crossJoin(q)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _sq_dist(F.col("q"), F.col("qq")).alias("d"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("d", "neighbor_id")
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in pairs.withColumn("rn", F.row_number().over(w))
-        .filter("rn <= 5")
-        .collect()
-    }
-    assert len(pq_pairs) == len(exact) > 0
-    assert len(pq_pairs & exact) / len(exact) >= 0.9
-
-    # refine invariant: the exact distance of rank r is <= rank r+1
-    by_q: dict[int, list] = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], []).append(r)
-    for rs in by_q.values():
-        rs.sort(key=lambda r: r["rank"])
-        dists = [r["dist_grid"] for r in rs]
-        assert dists == sorted(dists)
-        assert all(r["pq_dist"] >= 0 and r["dist_grid"] >= 0 for r in rs)
-        assert all(r["neighbor_id"] != r["query_id"] for r in rs)
-
-
-def test_pq_codebooks_shape(spark):
-    """Codebooks: m*k_codes entries, each sub-vector dim/m wide, codes
-    assigned in 1..k_codes."""
-    from name_match_ml_spark.operators.pq import pq_codebooks, _assign
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    codes_full, subq, centers = pq_codebooks(emb, m=4, k_codes=8, rounds=1)
-    crows = centers.collect()
-    assert len(crows) == 4 * 8
-    assert {r["s"] for r in crows} == {0, 1, 2, 3}
-    assert all(len(r["cv"]) == 16 for r in crows)  # 64 dims / m=4
-    assign = _assign(subq, centers)
-    cids = [r["cid"] for r in assign.select("cid").distinct().collect()]
-    assert set(cids) <= set(range(1, 9))
 
 
 def test_boilerplate_spans_removes_all_occurrences(spark):

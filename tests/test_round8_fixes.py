@@ -79,73 +79,6 @@ def test_pca_residual_query_emits_csv_not_array(spark):
         assert [int(x) for x in csv.split(",")] == lib[vid]
 
 
-def test_hd_rotate_preserves_distances_times_d(spark):
-    """Unnormalized HD rotation is orthogonal x sqrt(d): pairwise squared
-    distances scale by exactly d, so neighbor rankings are unchanged."""
-    import numpy as np
-
-    from name_match_ml_spark.operators.opq import hd_rotate
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(20)
-    orig = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in emb.collect()}
-    rot = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
-           for r in hd_rotate(emb, dim=64).collect()}
-    ids = sorted(orig)
-    for a in ids[:5]:
-        for b in ids[5:10]:
-            d0 = float(((orig[a] - orig[b]) ** 2).sum())
-            d1 = float(((rot[a] - rot[b]) ** 2).sum())
-            assert abs(d1 - 64.0 * d0) < 1e-6 * max(d1, 1.0)
-
-
-def test_hd_rotate_validates_dim(spark):
-    import pytest
-
-    from name_match_ml_spark.operators.opq import hd_rotate
-
-    emb = spark.createDataFrame([(0, [1.0, 2.0, 3.0])], "vec_id long, embedding array<double>")
-    with pytest.raises(ValueError, match="power of two"):
-        hd_rotate(emb, dim=3)
-    with pytest.raises(ValueError, match="does not match"):
-        hd_rotate(emb, dim=4)
-
-
-@pytest.mark.slow
-def test_opq_topk_recall_vs_exact(spark):
-    """OPQ recall@5 vs the exact top-5 (original space; rankings are
-    rotation-invariant) must hold the pq_topk bar."""
-    from pyspark.sql import Window
-
-    from name_match_ml_spark.operators.opq import opq_topk
-    from name_match_ml_spark.operators.pq import _global_codes, _sq_dist
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    got = opq_topk(emb).collect()
-    opq_pairs = {(r["query_id"], r["neighbor_id"]) for r in got}
-
-    cf = _global_codes(emb, id_col="vec_id", vec_col="embedding")
-    q = cf.filter(F.col("vec_id") % 10 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("qq")
-    )
-    pairs = (
-        cf.crossJoin(q)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _sq_dist(F.col("q"), F.col("qq")).alias("d"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("d", "neighbor_id")
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in pairs.withColumn("rn", F.row_number().over(w)).filter("rn <= 5").collect()
-    }
-    assert len(opq_pairs) == len(exact) > 0
-    recall = len(opq_pairs & exact) / len(exact)
-    assert recall >= 0.85, f"OPQ recall {recall:.3f}"
-
-
 def test_exact_substring_spans_semantics(spark):
     """Hand-built corpus: a cross-doc duplicated sentence is found as one
     maximal island in both docs (even though it straddles span_dedup's

@@ -22,7 +22,14 @@ import sys
 import time
 import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+# The Python workers import the flagship's Arrow UDF by module name, so
+# they need the repo root too; they inherit PYTHONPATH from the session,
+# which must therefore be set before it starts.
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (_ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from tools.audit_types import canon_duck, canon_spark  # noqa: E402
 
