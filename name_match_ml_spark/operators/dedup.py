@@ -134,7 +134,7 @@ def ngram_jaccard_pairs(
 _BITMAP_MAX_VOCAB = 16384  # vocabulary cap of the containment bitmap plan
 _BITMAP_CHUNK_ROWS = 1024  # best of {512, 1024, 2048, 4096} on local[32]
 # One shuffled+aggregated countjoin row buys ~this many indicator-GEMM
-# flops (measured, see ngram_containment_pairs auto): used to compare
+# flops (measured, see ngram_containment_pairs' pick): used to compare
 # O(N²·V) bitmap flops against O(Σdf²) countjoin rows.
 _BITMAP_FLOPS_PER_ROW = 500
 
@@ -163,43 +163,32 @@ def _chunk_pair_blocks(base: DataFrame, id_col: str, c: int) -> DataFrame:
     return side_a.unionByName(side_b)
 
 
-def _bitmap_set_pairs(base: DataFrame, threshold: float, n_docs: int | None = None) -> DataFrame:
+def _bitmap_set_pairs(base: DataFrame, threshold: float, n_docs: int) -> DataFrame:
     """Exact max-directional-containment ``|A∩B| / min(|A|,|B|)`` pairs
-    ≥ t via blocked indicator-matrix products (the ``"bitmap"`` strategy
-    of :func:`ngram_containment_pairs`; the chunk-pair blocks of
+    ≥ t via blocked indicator-matrix products (the bitmap plan of
+    :func:`ngram_containment_pairs`; the chunk-pair blocks of
     :func:`_chunk_pair_blocks`, like :func:`embedding_near_dup`).
     Containment's countjoin alternative has NO sound length prune (a tiny
     doc may be fully contained in a huge one), so it pays the full
     Σdf(s)² join fan-out; on a small dense vocabulary one GEMM per block
     is cheaper.
 
-    Eager at plan build: one bounded collect of the distinct shingles (V
-    ≤ ``_BITMAP_MAX_VOCAB`` longs — broadcast like a hash-join build
-    side), and a count for chunk sizing unless the caller passes
-    ``n_docs``.  Each block task reconstructs its rows' indicator matrices
-    with one vectorized ``searchsorted`` against the broadcast vocabulary
-    and computes |A∩B| for every pair in the block with one float32 GEMM;
-    the score is then exact integer arithmetic in float64 — bit-identical
-    to the countjoin plan's ``inter/least(n_a,n_b)``.
+    Eager at plan build: one collect of the distinct shingles (V ≤
+    ``_BITMAP_MAX_VOCAB`` longs, which the caller's pick checked —
+    broadcast like a hash-join build side); ``n_docs`` is the pick's doc
+    count and sizes the chunks.  Each block task reconstructs its rows'
+    indicator matrices with one vectorized ``searchsorted`` against the
+    broadcast vocabulary and computes |A∩B| for every pair in the block
+    with one float32 GEMM; the score is then exact integer arithmetic in
+    float64 — bit-identical to the countjoin plan's
+    ``inter/least(n_a,n_b)``.
 
     The in-kernel prefilter keeps a 1e-6 slack under ``threshold`` so the
     caller, which rounds to 6 dp before filtering, makes the boundary call
     on the rounded value, identically to its countjoin plan."""
-    distinct_h = base.select(F.explode("sh").alias("h")).distinct()
-    # Bounded: a caller forcing strategy="bitmap" on a wide-vocab corpus
-    # gets this error, not a driver OOM from an unbounded collect+broadcast.
-    found = distinct_h.limit(_BITMAP_MAX_VOCAB + 1).collect()
-    if len(found) > _BITMAP_MAX_VOCAB:
-        raise ValueError(
-            f"bitmap strategy requires a distinct-shingle vocabulary of at most "
-            f"{_BITMAP_MAX_VOCAB} (got more): the vocabulary is collected "
-            f"to the driver and broadcast. Use strategy='auto' (picks a shuffle "
-            f"plan for wide vocabularies) or raise max_shingle_df pruning."
-        )
+    found = base.select(F.explode("sh").alias("h")).distinct().collect()
     vocab = np.sort(np.array([r[0] for r in found], dtype=np.int64))
     bc_vocab = base.sparkSession.sparkContext.broadcast(vocab)
-    if n_docs is None:
-        n_docs = base.count()
     c = max(1, -(-n_docs // _BITMAP_CHUNK_ROWS))
 
     def indicator(rows: pd.Series, voc: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -737,7 +726,6 @@ def embedding_near_dup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.8,
-    n_chunks: int | None = None,
 ) -> DataFrame:
     """EXACT cosine ≥ ``threshold`` pairs (``id_a < id_b``) over an
     embedding column, computed as a blocked matrix product.
@@ -747,14 +735,14 @@ def embedding_near_dup(
     thresholds (at ``threshold`` 0.5 random-hyperplane collision odds
     are ~2/3 per bit, so LSH recall can't reach 1 without all-pairs
     candidate volume).  What CAN scale is the constant factor and the
-    distribution: vectors are hashed into ``n_chunks`` chunks, a tiny
-    chunk-pair table (ca ≤ cb) replicates each row to its ``n_chunks``
-    block tasks via a broadcast equi-join (no CartesianProduct node in
-    the plan), and each block scores with ONE numpy GEMM inside
+    distribution: vectors are hashed into ``c`` chunks, a tiny
+    chunk-pair table (ca ≤ cb) replicates each row to its ``c`` block
+    tasks via a broadcast equi-join (no CartesianProduct node in the
+    plan), and each block scores with ONE numpy GEMM inside
     ``applyInPandas`` — BLAS throughput instead of an interpreted
-    per-pair expression, balanced tasks, shuffle volume O(N·n_chunks).
+    per-pair expression, balanced tasks, shuffle volume O(N·c).
 
-    ``n_chunks=None`` sizes chunks to ~2048 rows with an eager
+    Chunks hold ~``_NEAR_DUP_CHUNK_ROWS`` rows, sized by an eager
     ``count()`` at plan construction (like a broadcast build side).
     For recall-tolerant near-dup at much larger N, use the sublinear
     :func:`~name_match_ml_spark.operators.simsearch.lsh_cosine_topk`
@@ -763,9 +751,7 @@ def embedding_near_dup(
         F.col(id_col).cast("long").alias("vid"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    if n_chunks is None:
-        n_chunks = max(1, -(-base.count() // _NEAR_DUP_CHUNK_ROWS))
-    c = int(n_chunks)
+    c = max(1, -(-base.count() // _NEAR_DUP_CHUNK_ROWS))
     margin = threshold - 1e-6  # UDF prefilter; exact rounded filter below
 
     def score_block(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -808,7 +794,6 @@ def ngram_containment_pairs(
     id_col: str = "doc_id",
     threshold: float = 0.6,
     shingle_n: int = 3,
-    strategy: str = "auto",
     max_shingle_df: int | None = None,
 ) -> DataFrame:
     """ALL pairs whose max directional shingle CONTAINMENT
@@ -821,14 +806,14 @@ def ngram_containment_pairs(
     (and is what the MinHash variant in Broder's original resemblance
     paper sketches alongside resemblance).
 
-    Strategies (both exact; ``"auto"`` picks from one stats aggregate
-    over the staged shingle table via an explicit cost model —
-    ``N²·V`` GEMM flops vs ``Σdf²`` countjoin rows at
-    ``_BITMAP_FLOPS_PER_ROW`` flops/row, measurement-calibrated at
-    sf0.1 AND 10×, because the two costs scale on different corpus
-    axes and a density bar alone mispredicts):
+    Two exact plans; the operator picks one from one stats aggregate
+    over the staged shingle table and a doc count, via an explicit cost
+    model — ``N²·V`` GEMM flops vs ``Σdf²`` countjoin rows at
+    ``_BITMAP_FLOPS_PER_ROW`` flops/row, measurement-calibrated at sf0.1
+    AND 10×, because the two costs scale on different corpus axes and a
+    density bar alone mispredicts:
 
-    * ``"countjoin"`` — explode distinct shingle hashes, narrow
+    * countjoin — explode distinct shingle hashes, narrow
       self-equi-join on the hash, ``groupBy(pair).count()`` is the
       intersection (map-side partial agg collapses before the wire), one
       integer division at the end.  Unlike Jaccard there is NO sound
@@ -837,17 +822,17 @@ def ngram_containment_pairs(
       pair — the full Σ_s df(s)² fan-out that Jaccard's ``min ≥ t·max``
       prefilter cuts away.  Right on sparse web-scale vocabularies where
       df(s) ≈ 1.
-    * ``"bitmap"`` — the chunk-pair indicator-GEMM of
-      :func:`_bitmap_set_pairs`: on dense small vocabularies with a
-      bounded doc count the missing prune makes this the winner —
-      |A∩B| for a whole block of pairs is one BLAS call instead of
-      Σdf² shuffled join rows (measured 8.7 s → ~3 s on the sf0.1
-      documents corpus, where a Jaccard bitmap plan only tied Jaccard's
-      length-pruned countjoin).  But the GEMM pays O(N²·V)
-      regardless of how sparse the overlap is, so at 10× the docs the
-      SAME vocabulary-eligible corpus flips decisively back to
-      countjoin — which is why auto compares the two costs explicitly
-      instead of thresholding density.
+    * bitmap — the chunk-pair indicator-GEMM of
+      :func:`_bitmap_set_pairs`, only when V ≤ ``_BITMAP_MAX_VOCAB``: on
+      dense small vocabularies with a bounded doc count the missing
+      prune makes this the winner — |A∩B| for a whole block of pairs is
+      one BLAS call instead of Σdf² shuffled join rows (measured 8.7 s
+      → ~3 s on the sf0.1 documents corpus, where a Jaccard bitmap plan
+      only tied Jaccard's length-pruned countjoin).  But the GEMM pays
+      O(N²·V) regardless of how sparse the overlap is, so at 10× the
+      docs the SAME vocabulary-eligible corpus flips decisively back to
+      countjoin — which is why the pick compares the two costs
+      explicitly instead of thresholding density.
 
     With default ``max_shingle_df=None`` this operator is the
     oracle-exact baseline; at 100 TB the sketch path is
@@ -859,48 +844,38 @@ def ngram_containment_pairs(
 
     Returns ``(doc_a, doc_b, containment)`` with ``doc_a < doc_b`` and
     containment rounded to 6 dp (a single integer-operand division —
-    bit-stable across engines; both strategies produce bit-identical
-    scores, so the rounded boundary filter agrees).
+    bit-stable across engines; both plans produce bit-identical scores,
+    so the rounded boundary filter agrees).
     """
     base = _staged_shingle_hashes(docs, text_col, id_col, shingle_n)
     base = stage(_cap_shingle_df(base, max_shingle_df))
     tok = base.select("doc_id", F.size("sh").alias("n"), F.explode("sh").alias("h"))
 
-    n = None  # doc count: the auto pick's, reused by the bitmap plan
-    if strategy == "auto":
-        row = (
-            tok.groupBy("h")
-            .count()
-            .select(
-                F.count(F.lit(1)).alias("v"),
-                F.sum(F.col("count") * F.col("count")).alias("sd2"),
-            )
-            .first()
+    row = (
+        tok.groupBy("h")
+        .count()
+        .select(
+            F.count(F.lit(1)).alias("v"),
+            F.sum(F.col("count") * F.col("count")).alias("sd2"),
         )
-        v, sd2 = (row["v"] or 0), (row["sd2"] or 0)
-        n = base.count()
-        # Explicit cost-model pick (a density bar alone mispredicts: the
-        # GEMM is O(N²·V) while the pruneless countjoin is O(Σdf²), and
-        # the two scale on DIFFERENT corpus axes).  A shuffled+aggregated
-        # countjoin row costs ~_BITMAP_FLOPS_PER_ROW indicator-GEMM
-        # flops on this implementation — calibrated by measurement:
-        # sf0.1 (N²V=2.3e10, Σdf²=7.3e7) bitmap wins 8.7s→3.4s; sf1.0
-        # (N²V=2.3e13, Σdf²=7.3e8) bitmap loses badly (>10× — killed at
-        # 2 min vs countjoin's 122 s).  500 picks correctly at both.
-        strategy = (
-            "bitmap"
-            if v and v <= _BITMAP_MAX_VOCAB and n * n * v < _BITMAP_FLOPS_PER_ROW * sd2
-            else "countjoin"
-        )
-
-    if strategy == "bitmap":
+        .first()
+    )
+    v, sd2 = (row["v"] or 0), (row["sd2"] or 0)
+    n = base.count()
+    # Explicit cost-model pick (a density bar alone mispredicts: the GEMM
+    # is O(N²·V) while the pruneless countjoin is O(Σdf²), and the two
+    # scale on DIFFERENT corpus axes).  A shuffled+aggregated countjoin
+    # row costs ~_BITMAP_FLOPS_PER_ROW indicator-GEMM flops on this
+    # implementation — calibrated by measurement: sf0.1 (N²V=2.3e10,
+    # Σdf²=7.3e7) bitmap wins 8.7s→3.4s; sf1.0 (N²V=2.3e13, Σdf²=7.3e8)
+    # bitmap loses badly (>10× — killed at 2 min vs countjoin's 122 s).
+    # 500 picks correctly at both.
+    if v and v <= _BITMAP_MAX_VOCAB and n * n * v < _BITMAP_FLOPS_PER_ROW * sd2:
         return (
             _bitmap_set_pairs(base, threshold, n)
             .withColumn("containment", F.round("containment", 6))
             .filter(F.col("containment") >= threshold)
         )
-    if strategy != "countjoin":
-        raise ValueError(f"unknown strategy {strategy!r}")
 
     a = tok.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"), "h")
     b = tok.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"), "h")

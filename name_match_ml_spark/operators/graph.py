@@ -4,28 +4,26 @@ resolution (SURVEY.md §2.10).
 Every near-dup operator in :mod:`.dedup` emits *pairs*; a training-data
 pipeline needs *clusters* (pick one keeper per group of mutual
 near-duplicates, drop the rest).  Pairs → clusters is connected
-components on the similarity graph.  Two algorithms, one API:
+components on the similarity graph.  One call runs two algorithms in
+turn:
 
-* ``label`` — iterative min-label propagation: every node starts labeled
-  with its own id; each round every node takes the min of its own and its
-  neighbors' labels (one equi-join + one min-aggregate, shuffling only
-  longs).  Rounds = graph diameter: ideal for near-dup graphs, which are
-  dense and shallow (duplicates of a document are near-duplicates of
-  each other) — 2-3 rounds in practice.
-* ``star`` — alternating large-star/small-star edge rewriting (Kiveris
-  et al., "Connected Components in MapReduce and Beyond", SoCC'14):
-  large-star hangs every neighbor larger than the current node off the
-  neighborhood minimum; small-star re-hangs the smaller ones.  Both are
-  one groupBy-min + one join per phase over an edge list that only
-  shrinks toward stars, and the alternation converges in O(log n) rounds
-  *regardless of diameter* — the 100 TB answer for chain-shaped
-  components (e.g. boilerplate drift A≈B≈C≈…) where label propagation
-  would need diameter rounds.
-* ``auto`` (default) — label propagation first (the fast path for the
-  shallow graphs dedup actually produces); if it hasn't converged after
-  ``label_rounds`` rounds the graph is deep, so restart on the two-phase
-  algorithm.  The wasted work is bounded: ``label_rounds`` cheap
-  long-only rounds.
+* min-label propagation first: every node starts labeled with its own
+  id; each round every node takes the min of its own and its neighbors'
+  labels (one equi-join + one min-aggregate, shuffling only longs).
+  Rounds = graph diameter: ideal for near-dup graphs, which are dense
+  and shallow (duplicates of a document are near-duplicates of each
+  other) — 2-3 rounds in practice.
+* if labels have not converged after ``_LABEL_ROUNDS`` rounds the graph
+  is deep, so restart on alternating large-star/small-star edge
+  rewriting (Kiveris et al., "Connected Components in MapReduce and
+  Beyond", SoCC'14): large-star hangs every neighbor larger than the
+  current node off the neighborhood minimum; small-star re-hangs the
+  smaller ones.  Both are one groupBy-min + one join per phase over an
+  edge list that only shrinks toward stars, and the alternation
+  converges in O(log n) rounds *regardless of diameter* — the 100 TB
+  answer for chain-shaped components (e.g. boilerplate drift
+  A≈B≈C≈…) where label propagation would need diameter rounds.  The
+  wasted work is bounded: ``_LABEL_ROUNDS`` cheap long-only rounds.
 
 Each round ends in ``localCheckpoint(eager=False)`` — iterative lineage
 MUST be cut (a) so round N+1's plan doesn't re-execute rounds 1..N, and
@@ -68,6 +66,10 @@ __all__ = [
 # Rounds used by the most recent connected_components call (label rounds
 # + star rounds); read by tests asserting the O(log n) bound.
 last_rounds: int = 0
+
+# Label-propagation rounds connected_components runs before handing a
+# deep graph to large-star/small-star.
+_LABEL_ROUNDS = 6
 
 
 def near_dup_graph(
@@ -507,25 +509,20 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 25,
-    algorithm: str = "auto",
-    label_rounds: int = 6,
 ) -> DataFrame:
     """Resolve an undirected pair stream into ``(id, cluster_id)`` rows,
     ``cluster_id`` = the smallest node id in the component.  Nodes are
     exactly the ids appearing in ``pairs`` (callers left-join the full
     corpus back if singletons need rows).
 
-    ``algorithm``: ``"label"`` (min-label propagation, rounds = diameter),
-    ``"star"`` (large-star/small-star, O(log n) rounds), or ``"auto"``
-    (label for ``label_rounds`` rounds, then restart as star — shallow
-    near-dup graphs stay on the cheap path, chain-shaped graphs can't
-    blow the round budget).  Raises only if the selected algorithm hits
-    ``max_iter`` without converging.
+    Runs min-label propagation for up to ``_LABEL_ROUNDS`` rounds, then
+    restarts as large-star/small-star (O(log n) rounds) if labels have
+    not converged — shallow near-dup graphs stay on the cheap path,
+    chain-shaped graphs can't blow the round budget.  Raises only if the
+    star phase hits ``max_iter`` without converging.
     """
     global last_rounds
     last_rounds = 0
-    if algorithm not in ("auto", "label", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
 
     # Symmetrize with ONE explode pass over the pair stream.  The old
     # union-of-two-projections shape executed the (often unstaged and
@@ -546,36 +543,32 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
 
-    if algorithm in ("auto", "label"):
-        # Fused init + first propagation round (optimization round 10,
-        # guide §2.4): label_1(v) = min(v, min N(v)) is ONE aggregate
-        # over sym — the old identity-labels distinct (an exchange + a
-        # checkpoint) and the first join round (two more exchanges + a
-        # convergence action) collapsed into it.  Later rounds and the
-        # unique fixpoint are unchanged.
-        last_rounds += 1
-        labels = (
-            sym.groupBy("a")
-            .agg(F.min("b").alias("_mb"))
-            .select(
-                F.col("a").alias("id"),
-                F.least(F.col("a"), F.col("_mb")).alias("cluster_id"),
-            )
-            .localCheckpoint(eager=False)
+    # Fused init + first propagation round (optimization round 10,
+    # guide §2.4): label_1(v) = min(v, min N(v)) is ONE aggregate over
+    # sym — the old identity-labels distinct (an exchange + a
+    # checkpoint) and the first join round (two more exchanges + a
+    # convergence action) collapsed into it.  Later rounds and the
+    # unique fixpoint are unchanged.
+    last_rounds += 1
+    labels = (
+        sym.groupBy("a")
+        .agg(F.min("b").alias("_mb"))
+        .select(
+            F.col("a").alias("id"),
+            F.least(F.col("a"), F.col("_mb")).alias("cluster_id"),
         )
-        budget = (label_rounds if algorithm == "auto" else max_iter) - 1
-        out = _label_propagation(sym, labels, budget)
-        if out is not None:
-            return out
-        if algorithm == "label":
-            raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+        .localCheckpoint(eager=False)
+    )
+    out = _label_propagation(sym, labels, _LABEL_ROUNDS - 1)
+    if out is not None:
+        return out
 
     out = _two_phase_cc(sym, max_iter)
     if out is None:
         raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
     # The star phases drop a==b edges, so a node appearing ONLY in
     # self-loop pairs has no row in the star output — left-join the full
-    # node set back so every algorithm emits the identical node set
+    # node set back so both algorithms emit the identical node set
     # (the docstring contract: nodes are exactly the ids in ``pairs``).
     nodes = sym.select(F.col("a").alias("id")).distinct()
     return nodes.join(out, "id", "left").select(

@@ -133,7 +133,6 @@ def opq_topk(
     query_mod: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    probe_row_budget: int | None = None,
 ) -> DataFrame:
     """Top-``k`` neighbors per query under HD-rotated product
     quantization: :func:`hd_rotate` then :func:`.pq.pq_topk` unchanged
@@ -163,5 +162,4 @@ def opq_topk(
         query_mod=query_mod,
         id_col="vec_id",
         vec_col=vec_col,
-        probe_row_budget=probe_row_budget,
     )

@@ -52,7 +52,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plans.probe import PROBE_BROADCAST_ROW_BUDGET, bounded_rows, probe_side
+from ..plans import probe
 from .clustering import (
     GRID_KMEANS_ROUNDS,
     _best_center_expr,
@@ -351,7 +351,6 @@ def _adc_refine(
     *,
     est_dtab: float,
     est_q: float,
-    budget: int,
     rerank: int,
     k: int,
 ) -> DataFrame:
@@ -365,7 +364,7 @@ def _adc_refine(
     caller's row estimates; self-matches excluded, ties → smallest
     neighbor_id."""
     scores = (
-        codes.join(probe_side(dtab, est_rows=est_dtab, row_budget=budget), keys)
+        codes.join(probe.probe_side(dtab, est_rows=est_dtab), keys)
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("d").cast("long").alias("pq_dist"))
@@ -380,7 +379,7 @@ def _adc_refine(
     )
     rer = (
         cand.join(
-            probe_side(qfull, est_rows=est_q, row_budget=budget),
+            probe.probe_side(qfull, est_rows=est_q),
             "query_id",
         )
         .join(
@@ -414,7 +413,6 @@ def pq_topk(
     query_mod: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    probe_row_budget: int | None = None,
 ) -> DataFrame:
     """Top-``k`` neighbors per query: PQ asymmetric distance (ADC)
     prunes the corpus to the best ``rerank`` candidates per query, an
@@ -438,15 +436,13 @@ def pq_topk(
     SET, so its join strategy is auto-selected from plan statistics
     (``plans/probe.py``): small query set → broadcast (the corpus never
     shuffles); corpus-proportional query set → shuffle-hash join
-    (VERDICT r7 #2 — the broadcast would OOM the driver).
-    ``probe_row_budget`` overrides the broadcast cutoff.  The refine
+    (VERDICT r7 #2 — the broadcast would OOM the driver).  The refine
     touches only ``|Q|·rerank`` rows.
 
     Returns ``(query_id, neighbor_id, pq_dist, dist_grid, rank)`` —
     ``pq_dist`` the int64 ADC estimate, ``dist_grid`` the exact int64
     squared distance, ``rank`` by ``(dist_grid, neighbor_id)``.
     """
-    budget = PROBE_BROADCAST_ROW_BUDGET if probe_row_budget is None else probe_row_budget
     scale = None
     if queries is not None:
         scale = _corpus_scale(corpus, vec_col=vec_col).localCheckpoint()
@@ -474,10 +470,10 @@ def pq_topk(
     # rows that actually broadcast are 4 longs), so count |Q| exactly up
     # to budget/(m·k_codes); a capped count is +inf, which sends both
     # query-scaled joins to shuffle-hash — the safe direction.
-    est_q = bounded_rows(q_full, budget // (m * k_codes))
+    est_q = probe.bounded_rows(q_full, probe.PROBE_BROADCAST_ROW_BUDGET // (m * k_codes))
     return _adc_refine(
         codes, _dist_table(q_sub, books), ["s", "cid"], q_full, codes_full,
-        est_dtab=est_q * m * k_codes, est_q=est_q, budget=budget,
+        est_dtab=est_q * m * k_codes, est_q=est_q,
         rerank=rerank, k=k,
     )
 
@@ -490,14 +486,12 @@ def ivfpq_topk(
     n_probe: int = 4,
     m: int = 8,
     k_codes: int = 16,
-    coarse_rounds: int | None = None,
     pq_rounds: int = PQ_LLOYD_ROUNDS,
     k: int = 5,
     rerank: int = 100,
     query_mod: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    probe_row_budget: int | None = None,
 ) -> DataFrame:
     """IVF + PQ composition — FAISS IVFADC (Jégou et al. 2011 §V), the
     production billion-vector ANN layout, restated on the integer grid
@@ -547,8 +541,6 @@ def ivfpq_topk(
     app) has no vector surface; this completes the SURVEY §2.10 ANN
     family's production shape.
     """
-    if coarse_rounds is None:
-        coarse_rounds = GRID_KMEANS_ROUNDS
     if n_probe < 1 or k < 1 or rerank < k:
         raise ValueError("n_probe >= 1, k >= 1, rerank >= k")
     n_probe = min(n_probe, k_cells)
@@ -564,7 +556,7 @@ def ivfpq_topk(
     # 1..k_cells in Gonzalez selection order, so a plain literal array
     # indexes centroids by cell id.
     _, cells_py = _grid_kmeans_fit(
-        codes=codes_full, k=k_cells, rounds=coarse_rounds, staged=True
+        codes=codes_full, k=k_cells, rounds=GRID_KMEANS_ROUNDS, staged=True
     )
     cells_sql = "array(" + ",".join(_vec_sql(cv) for _cid, cv in cells_py) + ")"
 
@@ -609,12 +601,13 @@ def ivfpq_topk(
     # dtab is |Q|·n_probe·m·k_codes rows: count |Q| exactly up to the
     # budget; a capped count is +inf, so BOTH query-scaled joins go
     # shuffle-hash (the pq_topk rule)
-    budget = PROBE_BROADCAST_ROW_BUDGET if probe_row_budget is None else probe_row_budget
-    est_q = bounded_rows(q_full, budget // (n_probe * m * k_codes))
+    est_q = probe.bounded_rows(
+        q_full, probe.PROBE_BROADCAST_ROW_BUDGET // (n_probe * m * k_codes)
+    )
 
     # probe the n_probe nearest cells map-side and take the query's
     # residual in each from the same literal centroid array
-    probe = q_full.select(
+    probed = q_full.select(
         "vec_id", "q", F.explode(_nearest_cells_expr("q", cells_py, n_probe)).alias("_pc")
     ).select(
         "vec_id",
@@ -624,9 +617,9 @@ def ivfpq_topk(
         ).alias("q"),
     )
     # ADC distance table, map-side from the literal residual codebooks
-    dtab = _dist_table(_subvectors(probe, m=m, extra=("cell",)), books, ("cell",))
+    dtab = _dist_table(_subvectors(probed, m=m, extra=("cell",)), books, ("cell",))
     return _adc_refine(
         codes_cell, dtab, ["cell", "s", "cid"], q_full, codes_full,
-        est_dtab=est_q * n_probe * m * k_codes, est_q=est_q, budget=budget,
+        est_dtab=est_q * n_probe * m * k_codes, est_q=est_q,
         rerank=rerank, k=k,
     )

@@ -34,7 +34,6 @@ __all__ = [
     "kcenter_select",
     "bitext_margin_mine",
     "lsh_cosine_topk",
-    "ivf_cosine_topk",
     "quantize_embeddings",
     "quantized_cosine_topk",
     "fixed_point_centroids",
@@ -166,149 +165,6 @@ def cosine_topk_exact(
         F.col(id_col).cast("long").alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("v"),
     ).mapInPandas(score, _TOPK_CAND_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        cand.withColumn("cosine", F.round("cosine", 6))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def ivf_cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    k: int = 5,
-    n_clusters: int | None = None,
-    nprobe: int = 4,
-    train_cap: int = 100_000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    batch_slack: int = 32,
-    seed: int = 7,
-    max_queries: int = 100_000,
-) -> DataFrame:
-    """Approximate cosine top-k via an IVF (inverted-file) index: KMeans
-    partitions the sphere into ``n_clusters`` cells; each query probes
-    only its ``nprobe`` nearest cells, so scoring work drops from
-    ``N × Q`` to ``N × Q × nprobe / n_clusters`` in expectation.  The
-    FAISS-style complement to :func:`lsh_cosine_topk` — data-adaptive
-    cells (KMeans follows the corpus density) vs data-oblivious
-    hyperplanes.
-
-    PYTEST-ONLY API since round 10: float-KMeans centroid reductions
-    are summation-order dependent, so this path can never hash-check
-    against an external oracle; its declared-query role passed to the
-    bit-exact ``grid_ivf_topk``/``ivfpq_topk`` (operators/clustering.py,
-    operators/pq.py).  It remains correct and gated — recall >= 0.5 vs
-    :func:`cosine_topk_exact` plus the rank/order/self-match contract,
-    asserted in tests/test_dedup_simsearch.py::test_ivf_topk_recall.
-
-    Scale shape: KMeans trains on a ≤``train_cap``-row seeded sample
-    (the model only needs cell geometry, not every point), giving a
-    centroid matrix of ``n_clusters × dim`` doubles — kilobytes — that
-    is broadcast.  The corpus then streams through ONE Arrow
-    ``mapInPandas`` pass with NO shuffle at all: each batch assigns its
-    rows to cells (one GEMM against the centroids) and scores them
-    against only the queries probing those cells (one GEMM per cell
-    present in the batch), emitting per-batch top-``(k+batch_slack)``
-    per query; the global exact window runs over ``O(batches · Q · k)``
-    rows.  Eager work at plan construction: one ``count()`` (cluster
-    sizing), the sample-fit, and the query collect — all
-    build-side-sized, like a broadcast hash build.
-
-    ``n_clusters`` defaults to ``clamp(sqrt(N), 4, 4096)`` (the usual
-    IVF rule of thumb: cells of ~sqrt(N) rows balance probe cost vs
-    scan cost); raise ``nprobe`` to trade cost for recall."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    spark = corpus.sparkSession
-    vecs = corpus.select(
-        F.col(id_col).cast("long").alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    n = vecs.count()
-    if n_clusters is None:
-        n_clusters = max(4, min(4096, int(np.sqrt(max(n, 1)))))
-    nprobe = min(nprobe, n_clusters)
-
-    frac = min(1.0, train_cap / max(n, 1))
-    train = vecs if frac >= 1.0 else vecs.sample(fraction=frac, seed=seed)
-    model = KMeans(
-        k=n_clusters, seed=seed, distanceMeasure="cosine", maxIter=20
-    ).fit(train.select(array_to_vector("v").alias("features")))
-    centers = np.stack([np.asarray(c, dtype=np.float64) for c in model.clusterCenters()])
-    Cen = centers / np.maximum(np.linalg.norm(centers, axis=1, keepdims=True), 1e-12)
-
-    # Same enforced small-by-contract query side as cosine_topk_exact:
-    # the collect is LIMIT-bounded, so an oversized query set raises an
-    # actionable error instead of OOMing the driver (VERDICT r8 #1).
-    qrows = (
-        queries.select(F.col(id_col).cast("long"), F.col(vec_col).cast("array<double>"))
-        .limit(max_queries + 1)
-        .collect()
-    )
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"ivf_cosine_topk: query set exceeds max_queries={max_queries} — "
-            "this path builds the inverted file driver-side; use "
-            "grid_ivf_topk (explicit queries=, stats-based join select) "
-            "for corpus-sized query workloads"
-        )
-    if not qrows:
-        empty = spark.createDataFrame([], _TOPK_CAND_SCHEMA)
-        return empty.withColumn("rank", F.lit(1)).limit(0)
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    # per-query probe cells → per-cell query index lists (the inverted file)
-    probe = np.argsort(-(Qn @ Cen.T), axis=1, kind="stable")[:, :nprobe]
-    cell_queries = {
-        int(c): np.flatnonzero((probe == c).any(axis=1)) for c in np.unique(probe)
-    }
-    bc = spark.sparkContext.broadcast((qids, Qn, Cen, cell_queries))
-    take = k + batch_slack
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b_qids, b_Qn, b_Cen, b_cells = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            order = np.argsort(cids, kind="stable")  # id-asc for stable ties
-            cids = cids[order]
-            C = np.stack(pdf["v"].to_numpy()[order]).astype(np.float64)
-            Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-            assign = np.argmax(Cn @ b_Cen.T, axis=1)
-            out_q, out_n, out_c = [], [], []
-            for cell in np.unique(assign):
-                q_idx = b_cells.get(int(cell))
-                if q_idx is None:
-                    continue
-                rows = np.flatnonzero(assign == cell)
-                S = Cn[rows] @ b_Qn[q_idx].T  # (cell rows, probing queries)
-                R = np.round(S, 6)
-                R[np.equal.outer(cids[rows], b_qids[q_idx])] = -np.inf
-                top = np.argsort(-R, axis=0, kind="stable")[: min(take, len(rows))]
-                n_top, m = top.shape
-                rr = top.ravel(order="F")
-                cc = np.repeat(np.arange(m), n_top)
-                keep = np.isfinite(R[rr, cc])
-                out_q.append(b_qids[q_idx][cc[keep]])
-                out_n.append(cids[rows][rr[keep]])
-                out_c.append(S[rr[keep], cc[keep]])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "cosine": np.concatenate(out_c),
-                    }
-                )
-
-    cand = vecs.mapInPandas(score, _TOPK_CAND_SCHEMA)
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return (
         cand.withColumn("cosine", F.round("cosine", 6))

@@ -88,15 +88,17 @@ def _employee_keys(e_texts: DataFrame) -> DataFrame:
     return e_texts.selectExpr("*", f"explode({_EMPLOYEE_KEYS}) AS _bkey")
 
 
-def _drop_hot(keys: DataFrame, hot_key_cap: int | None) -> DataFrame:
-    """Keep the keys whose document frequency on this side is at most the
-    cap.  Each text carries a key once and the texts are distinct, so the
-    rows per key are its document frequency."""
-    if hot_key_cap is None:
-        return keys
+# Largest per-side document frequency a blocking key may have.
+_HOT_KEY_CAP = 1000
+
+
+def _drop_hot(keys: DataFrame) -> DataFrame:
+    """Keep the keys whose document frequency on this side is at most
+    ``_HOT_KEY_CAP``.  Each text carries a key once and the texts are
+    distinct, so the rows per key are its document frequency."""
     return (
         keys.selectExpr("*", "count(1) OVER (PARTITION BY _bkey) AS _df")
-        .filter(f"_df <= {hot_key_cap}")
+        .filter(f"_df <= {_HOT_KEY_CAP}")
         .drop("_df")
     )
 
@@ -106,7 +108,6 @@ def blocked_candidates(
     e_texts: DataFrame,
     *,
     broadcast_employees: bool = False,
-    hot_key_cap: int | None = 1000,
 ) -> DataFrame:
     """Candidate text pairs from prepared distinct-text sides (see
     ``operators/matching.py``) via one blocking-key equi-join instead of a
@@ -114,9 +115,9 @@ def blocked_candidates(
     ``(e_name, e_first, e_last)`` distinct on the employee side; returns
     one row per candidate (u_norm × employee-text) pair.
 
-    ``hot_key_cap``: drop blocking keys whose document frequency exceeds
-    the cap on EITHER side (``None`` disables).  A key covering f_u
-    usernames and f_e roster names contributes f_u × f_e candidate pairs —
+    Blocking keys whose document frequency exceeds ``_HOT_KEY_CAP`` on
+    EITHER side are dropped.  A key covering f_u usernames and f_e roster
+    names contributes f_u × f_e candidate pairs —
     one surname held by 30% of each side at 100 TB is a quadratic pair
     bomb that no amount of AQE skew-splitting fixes (AQE spreads the
     pairs over tasks; it cannot make there be fewer pairs).  Capping both
@@ -127,10 +128,10 @@ def blocked_candidates(
     the pair shares is hot — for name-shaped data a pair sharing only an
     ultra-common surname token scores mostly on the uncommon parts
     anyway, and the reference-fixture recall test
-    (``tests/test_matching.py``) pins that nothing real is lost at the
-    default cap."""
-    u_keys = _drop_hot(_username_keys(u_texts), hot_key_cap)
-    e_keys = _drop_hot(_employee_keys(e_texts), hot_key_cap)
+    (``tests/test_matching.py``) pins that nothing real is lost at this
+    cap."""
+    u_keys = _drop_hot(_username_keys(u_texts))
+    e_keys = _drop_hot(_employee_keys(e_texts))
     if broadcast_employees:
         e_keys = F.broadcast(e_keys)
 

@@ -4,17 +4,25 @@ Every operator that picks a strategy before running anything asks this
 module, so each input to such a choice has one definition:
 
 * :func:`estimated_rows` — rows from Catalyst plan statistics; feeds the
-  flagship's cross vs blocked auto-select (``operators/matching.py``),
-  the pack bucket count (``operators/packing.py``) and :func:`probe_side`;
+  flagship's cross vs blocked auto-select (``operators/matching.py``)
+  and the pack bucket count (``operators/packing.py``);
 * :func:`bounded_rows` — exact row count up to a cap (+inf above it);
   the unknown-stats branch of :func:`estimated_rows` and the ANN
   family's query-set count (``operators/clustering.py``, ``operators/pq.py``);
 * :func:`broadcast_threshold` — the session's broadcast budget in bytes;
 * :func:`probe_side` — broadcast vs shuffle-hash for the ANN family's
-  per-query probe table;
+  per-query probe table, from the caller's bounded query count and
+  ``PROBE_BROADCAST_ROW_BUDGET``;
 * :func:`parallelism_floor` — round-robin re-spread of an under-parallel
   scan (``plans/staging.stage``, ``sources/parquet.table``,
   ``operators/profiling.profile_columns``).
+
+Two plan choices stay with their operator instead: containment's
+bitmap vs countjoin pick (``operators/dedup.ngram_containment_pairs``)
+weighs the bitmap kernel's calibrated cost, which only that operator
+knows, and connected components' label → star handover
+(``operators/graph.connected_components``) is decided at run time by
+convergence, not from plan size.
 
 Mis-estimation only ever pushes toward the safe path: byte-derived row
 estimates OVERestimate rows for wide rows, an estimator error reports
@@ -58,7 +66,7 @@ _UNKNOWN_STATS_BYTES = 1 << 62
 # is never a reason to count further.
 _PROBE_ROW_CAP = 65_536
 
-# Default probe-row budget for choosing broadcast.  Probe rows carry a
+# Probe-row budget for choosing broadcast.  Probe rows carry a
 # d-long code array (~0.5 KB at d=64): 500k rows ≈ 250 MB broadcast —
 # the upper edge of sane for a 100 TB-cluster driver, far above every
 # in-repo query set (|Q|·n_probe ≈ thousands).
@@ -90,9 +98,13 @@ def estimated_rows(df: DataFrame) -> float:
 def bounded_rows(df: DataFrame, cap: int) -> float:
     """Exact row count of ``df`` when it is at most ``cap``, else +inf.
 
-    One job: ``LIMIT cap + 1`` short-circuits the scan, so the count
-    touches at most ``cap + 1`` rows regardless of source size, and any
-    size decision fed +inf takes its large-input (safe) branch."""
+    ``LIMIT cap + 1`` short-circuits the scan, so the count touches at
+    most ``cap + 1`` rows regardless of source size, and any size
+    decision fed +inf takes its large-input (safe) branch.  One job on a
+    one-partition input; under AQE a multi-partition input costs two,
+    because the LIMIT's single-partition exchange runs as its own stage.
+    Coalescing to one partition first would save that job but serialise
+    the capped scan into one task."""
     n = df.limit(cap + 1).count()
     return float("inf") if n > cap else float(n)
 
@@ -103,23 +115,12 @@ def broadcast_threshold(spark: SparkSession) -> int:
     return int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
 
 
-def probe_side(
-    df: DataFrame,
-    *,
-    est_rows: float | None = None,
-    row_budget: int = PROBE_BROADCAST_ROW_BUDGET,
-) -> DataFrame:
+def probe_side(df: DataFrame, *, est_rows: float) -> DataFrame:
     """Return ``df`` hinted for its role as the probe/build side of the
-    inverted-list join: ``broadcast`` when small by plan statistics,
-    ``shuffle_hash`` when the query side is corpus-proportional.
-
-    ``est_rows`` lets the caller reuse an estimate computed on the
-    pre-expansion query table (e.g. ``|Q| · n_probe``) instead of
-    re-deriving stats from the probe plan itself.
-    """
-    if est_rows is None:
-        est_rows = estimated_rows(df)
-    if est_rows <= row_budget:
+    inverted-list join: ``broadcast`` when the caller's ``est_rows`` (e.g.
+    ``|Q| · n_probe``, counted on the pre-expansion query table) is within
+    ``PROBE_BROADCAST_ROW_BUDGET``, else ``shuffle_hash``."""
+    if est_rows <= PROBE_BROADCAST_ROW_BUDGET:
         return F.broadcast(df)
     return df.hint("shuffle_hash")
 

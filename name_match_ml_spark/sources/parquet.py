@@ -44,22 +44,33 @@ _EXPRESSION_HEAVY_TABLES = frozenset(
     {"customer", "part", "events", "documents", "embeddings"}
 )
 
-__all__ = ["TABLES", "table", "read_events_parquet", "register_views"]
+__all__ = ["TABLES", "NANOS_AS_LONG", "table", "read_events_parquet", "register_views"]
+
+# The reader setting that loads INT64 TIMESTAMP(NANOS) columns as longs.
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def read_events_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Batch read of an events parquet whose ``ts`` has shipped as either
     timestamp[us] or INT64 TIMESTAMP(NANOS).  Spark's reader rejects the
     latter at schema inference (``PARQUET_TYPE_ILLEGAL``); only then is
-    ``spark.sql.legacy.parquet.nanosAsLong`` set, for the session, and ts
-    read as long nanos.  A timestamp[us] corpus leaves the conf as it was."""
+    ts read as long nanos, with ``NANOS_AS_LONG`` set for that read alone
+    and restored to its prior value right after it.  The schema is fixed
+    once the read returns: executing the plan later, with the setting
+    restored, gives the same rows."""
     try:
         return spark.read.parquet(path)
     except AnalysisException as e:
         if e.getCondition() != "PARQUET_TYPE_ILLEGAL":
             raise
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(path)
+    prior = spark.conf.get(NANOS_AS_LONG, None)
+    spark.conf.set(NANOS_AS_LONG, "true")
+    try:
+        return spark.read.parquet(path)
+    finally:
+        spark.conf.unset(NANOS_AS_LONG)
+        if prior is not None:
+            spark.conf.set(NANOS_AS_LONG, prior)
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

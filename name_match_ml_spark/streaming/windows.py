@@ -32,7 +32,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..sources.parquet import read_events_parquet
+from ..sources.parquet import NANOS_AS_LONG, read_events_parquet
 
 __all__ = [
     "EVENTS_SCHEMA",
@@ -75,6 +75,10 @@ def stream_events(spark: SparkSession, events_dir: str) -> DataFrame:
     stream schema, and the ts normalization mirrors ``sources/parquet.py``."""
     landed = dict(read_events_parquet(spark, events_dir).dtypes).get("ts")
     if landed == "bigint":
+        # The stream reads its files at micro-batch time, after this call
+        # returns, so it sets the reader setting for the session.  Whether
+        # the micro-batch read needs it has not been probed.
+        spark.conf.set(NANOS_AS_LONG, "true")
         raw = spark.readStream.schema(EVENTS_SCHEMA).parquet(events_dir)
         # exact integer division: double division loses precision at 1e18
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))

@@ -10,6 +10,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from name_match_ml_spark.plans import probe
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -27,21 +29,22 @@ def test_grid_ivf_small_queries_broadcast(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_grid_ivf_big_queries_no_broadcast(spark):
-    """Force the corpus-proportional regime via the budget knob: the
+def test_grid_ivf_big_queries_no_broadcast(spark, monkeypatch):
+    """Force the corpus-proportional regime via a zero row budget: the
     inverted-list join must become a shuffle-hash join (plans stats say
     the probe side is too big to broadcast), never a broadcast."""
     from name_match_ml_spark.operators.clustering import grid_ivf_topk
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    out = grid_ivf_topk(emb, k_cells=10, n_probe=4, k=5, probe_row_budget=0)
+    monkeypatch.setattr(probe, "PROBE_BROADCAST_ROW_BUDGET", 0)
+    out = grid_ivf_topk(emb, k_cells=10, n_probe=4, k=5)
     plan = _plan(out)
     assert "ShuffledHashJoin" in plan, "big probe side must shuffle, not broadcast"
     assert "CartesianProduct" not in plan
 
 
 @pytest.mark.slow
-def test_grid_ivf_explicit_queries_match_convention(spark):
+def test_grid_ivf_explicit_queries_match_convention(spark, monkeypatch):
     from name_match_ml_spark.operators.clustering import grid_ivf_topk
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
@@ -50,9 +53,8 @@ def test_grid_ivf_explicit_queries_match_convention(spark):
     expl = grid_ivf_topk(emb, qdf, k_cells=10, n_probe=4, k=5).collect()
     assert sorted(map(tuple, expl)) == sorted(map(tuple, conv))
     # and the strategy is identical under the shuffle regime too
-    shuf = grid_ivf_topk(
-        emb, qdf, k_cells=10, n_probe=4, k=5, probe_row_budget=0
-    ).collect()
+    monkeypatch.setattr(probe, "PROBE_BROADCAST_ROW_BUDGET", 0)
+    shuf = grid_ivf_topk(emb, qdf, k_cells=10, n_probe=4, k=5).collect()
     assert sorted(map(tuple, shuf)) == sorted(map(tuple, conv))
 
 
@@ -67,12 +69,13 @@ def test_pq_small_queries_broadcast(spark):
 
 
 @pytest.mark.slow
-def test_pq_big_queries_no_broadcast_same_answer(spark):
+def test_pq_big_queries_no_broadcast_same_answer(spark, monkeypatch):
     from name_match_ml_spark.operators.pq import pq_topk
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     conv = pq_topk(emb, m=4, k_codes=8, rerank=20).collect()
-    out = pq_topk(emb, m=4, k_codes=8, rerank=20, probe_row_budget=0)
+    monkeypatch.setattr(probe, "PROBE_BROADCAST_ROW_BUDGET", 0)
+    out = pq_topk(emb, m=4, k_codes=8, rerank=20)
     assert "ShuffledHashJoin" in _plan(out)
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, conv))
 
@@ -98,17 +101,6 @@ def test_cosine_topk_exact_enforces_query_cap(spark):
         cosine_topk_exact(emb, emb, k=3, max_queries=10)
 
 
-def test_ivf_cosine_topk_enforces_query_cap(spark):
-    """VERDICT r8 #1: the legacy IVF path builds a driver-side inverted
-    file, so its query collect must be LIMIT-bounded and raise on an
-    oversized set instead of OOMing."""
-    from name_match_ml_spark.operators.simsearch import ivf_cosine_topk
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    with pytest.raises(ValueError, match="max_queries"):
-        ivf_cosine_topk(emb, emb, k=3, max_queries=10)
-
-
 def test_quantized_cosine_topk_enforces_query_cap(spark):
     from name_match_ml_spark.operators.simsearch import quantized_cosine_topk
 
@@ -118,7 +110,7 @@ def test_quantized_cosine_topk_enforces_query_cap(spark):
 
 
 @pytest.mark.slow
-def test_pq_saturated_query_count_shuffles_rerank_join(spark):
+def test_pq_saturated_query_count_shuffles_rerank_join(spark, monkeypatch):
     """ADVICE r8 (medium): when the LIMIT-bounded query count saturates
     (n_q == q_cap + 1), |Q| is unknown — the rerank join must treat the
     query side as corpus-sized and shuffle, not broadcast the saturated
@@ -130,8 +122,9 @@ def test_pq_saturated_query_count_shuffles_rerank_join(spark):
     from name_match_ml_spark.operators.pq import pq_topk
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    out = pq_topk(emb, m=4, k_codes=8, rerank=20, probe_row_budget=320)
+    conv = pq_topk(emb, m=4, k_codes=8, rerank=20).collect()
+    monkeypatch.setattr(probe, "PROBE_BROADCAST_ROW_BUDGET", 320)
+    out = pq_topk(emb, m=4, k_codes=8, rerank=20)
     plan = _plan(out)
     assert plan.count("ShuffledHashJoin") >= 2, plan
-    conv = pq_topk(emb, m=4, k_codes=8, rerank=20).collect()
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, conv))

@@ -348,7 +348,7 @@ def test_blocking_auto_select(spark, ref_dfs):
     assert "CartesianProduct" not in big_plan
 
 
-def test_hot_key_cap_bounds_skewed_blocking(spark):
+def test_hot_key_cap_bounds_skewed_blocking(spark, monkeypatch):
     """One surname covering 30% of both sides is a quadratic pair bomb
     (f_u x f_e candidates through one blocking key); the df cap must drop
     the hot keys so no key contributes more than cap^2 pairs, while pairs
@@ -359,6 +359,7 @@ def test_hot_key_cap_bounds_skewed_blocking(spark):
     from collections import defaultdict
 
     from name_match_ml_spark.operators.matching import _E_TEXT
+    from name_match_ml_spark.plans import blocking
     from name_match_ml_spark.plans.blocking import (
         _employee_keys,
         _username_keys,
@@ -396,10 +397,13 @@ def test_hot_key_cap_bounds_skewed_blocking(spark):
     )
     e_texts = prepare_employees(employees, codes=False).select(*_E_TEXT).dropDuplicates(_E_TEXT)
 
-    uncapped = blocked_candidates(u_texts, e_texts, hot_key_cap=None).count()
+    # a cap above every key's document frequency keeps every key
+    monkeypatch.setattr(blocking, "_HOT_KEY_CAP", len(usr_rows) + len(emp_rows))
+    uncapped = blocked_candidates(u_texts, e_texts).count()
     assert uncapped >= hot * hot  # the bomb is real: >=360k pairs via tok:patel
 
-    capped_df = blocked_candidates(u_texts, e_texts, hot_key_cap=300)
+    monkeypatch.setattr(blocking, "_HOT_KEY_CAP", 300)
+    capped_df = blocked_candidates(u_texts, e_texts)
     capped = capped_df.count()
     # the hot surname's f_u*f_e block is gone (every key that survives
     # has df <= cap on both sides, so per-key work is <= cap^2 by

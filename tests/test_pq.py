@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from name_match_ml_spark.operators.clustering import _sq_dist
 from name_match_ml_spark.operators.pq import _global_codes, ivfpq_topk
+from name_match_ml_spark.plans import probe
 
 
 def _plan(df) -> str:
@@ -195,7 +196,7 @@ def test_ivfpq_recall_vs_same_grid_brute_force(spark, sf_dir):
 
 
 @pytest.mark.slow
-def test_ivfpq_explicit_queries_match_convention(spark):
+def test_ivfpq_explicit_queries_match_convention(spark, monkeypatch):
     sf = "/root/testdata/sf0.001"
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     conv = ivfpq_topk(emb).collect()
@@ -204,7 +205,8 @@ def test_ivfpq_explicit_queries_match_convention(spark):
     assert sorted(map(tuple, expl)) == sorted(map(tuple, conv))
     # forced-shuffle regime answers identically (saturation rule: both
     # query-scaled joins flip together)
-    shuf = ivfpq_topk(emb, qdf, probe_row_budget=0).collect()
+    monkeypatch.setattr(probe, "PROBE_BROADCAST_ROW_BUDGET", 0)
+    shuf = ivfpq_topk(emb, qdf).collect()
     assert sorted(map(tuple, shuf)) == sorted(map(tuple, conv))
 
 
@@ -216,12 +218,13 @@ def test_ivfpq_small_queries_broadcast(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_ivfpq_big_queries_shuffle(spark):
+def test_ivfpq_big_queries_shuffle(spark, monkeypatch):
     """budget=0 saturates the LIMIT-bounded query count: BOTH the ADC
     distance-table join and the rerank join must go shuffle-hash (the
     pq_topk saturation rule, ADVICE r8)."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    plan = _plan(ivfpq_topk(emb, probe_row_budget=0))
+    monkeypatch.setattr(probe, "PROBE_BROADCAST_ROW_BUDGET", 0)
+    plan = _plan(ivfpq_topk(emb))
     assert plan.count("ShuffledHashJoin") >= 2, plan[:2000]
     assert "CartesianProduct" not in plan
 

@@ -318,7 +318,7 @@ def test_foreachbatch_incremental_agg_state_equals_batch(
 def test_events_loaders_set_nanos_conf_only_for_nanos_ts(spark, events_dir, tmp_path):
     """sf0.001 lands ``ts`` as timestamp[us]: loading it, batch or stream,
     leaves ``nanosAsLong`` unset.  A TIMESTAMP(NANOS) copy of the same rows
-    sets it and loads to the same rows."""
+    loads, in batch, to the same rows and leaves the setting as it was."""
     prior = spark.conf.get(NANOS_AS_LONG, None)
     try:
         spark.conf.unset(NANOS_AS_LONG)
@@ -332,9 +332,13 @@ def test_events_loaders_set_nanos_conf_only_for_nanos_ts(spark, events_dir, tmp_
             ev.set_column(i, "ts", ev["ts"].cast(pa.timestamp("ns"))),
             tmp_path / "events.parquet",
         )
-        got = table(spark, str(tmp_path), "events").orderBy("event_id").collect()
-        assert spark.conf.get(NANOS_AS_LONG, None) == "true"
-        assert got == want
+        nanos = table(spark, str(tmp_path), "events")
+        assert spark.conf.get(NANOS_AS_LONG, None) is None
+        assert nanos.orderBy("event_id").collect() == want
+        # a value set before the load is restored, not unset
+        spark.conf.set(NANOS_AS_LONG, "false")
+        table(spark, str(tmp_path), "events")
+        assert spark.conf.get(NANOS_AS_LONG, None) == "false"
     finally:
         if prior is None:
             spark.conf.unset(NANOS_AS_LONG)
